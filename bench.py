@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints TWO
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] and prints THREE
 JSON lines: first the full record {"metric": ..., "value": N, "unit":
-"sec", "queries": {...}, "sf": ...}, then a compact (<1 KB) summary as
+"sec", "queries": {...}, "sf": ...}, then the per-query seconds
+{"metric": "bench_queries", ...}, then a compact (<1 KB) summary as
 the LAST line — the driver's tail capture truncates the full record's
 head (BENCH_r5-r7 all landed "parsed": null), so the parseable line must
 be small and last (VERDICT r7 item 3).
@@ -517,6 +518,17 @@ def main() -> None:
         "unstable_queries": unstable,
     }
     print(json.dumps(out))
+
+    # Per-query seconds (ms precision) on a line of their own: the full
+    # record above is too long for a tail capture to keep whole.
+    per_query = {
+        "metric": "bench_queries",
+        "unit": "sec",
+        "sf": sf,
+        "headline": times,
+        "extended": extended,
+    }
+    print(json.dumps(per_query, separators=(",", ":")))
 
     # Compact (<1 KB) summary as the LAST line (VERDICT r7 item 3): the
     # driver's tail capture truncates the full record's head, leaving

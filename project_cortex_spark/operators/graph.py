@@ -22,7 +22,10 @@ the broadcast plan is strictly better.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from contextlib import contextmanager
+from functools import reduce
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 MAX_DEPTH = 10  # tool-level clamp (internal/mcp/graph_tool.go:30-55)
@@ -31,6 +34,53 @@ DEFAULT_DEPTH = 3
 
 def _clamp_depth(depth: int) -> int:
     return max(1, min(depth, MAX_DEPTH))
+
+
+def _union_all(frames: list) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _start_frame(e: DataFrame, rows: list, cols: list) -> DataFrame:
+    """Start-node frame for a traversal over ``e`` (node column ``_src``).
+    An empty start list has no schema to infer; it gets the edge node
+    dtype, so every traversal of no start nodes is a typed empty frame."""
+    spark = e.sparkSession
+    if rows:
+        return spark.createDataFrame(rows, cols)
+    node_dt = dict(e.dtypes)["_src"]
+    return spark.createDataFrame([], ", ".join(f"{c} {node_dt}" for c in cols))
+
+
+def _frontier_levels(
+    level0: DataFrame,
+    expand,
+    keys: list,
+    *,
+    depth: int,
+    hint=lambda df: df,
+) -> list:
+    """The level-synchronous frontier loop every seen-set BFS shares:
+    level d = ``expand(level d-1, d)`` minus every key of levels 0..d-1,
+    for d = 1..``depth``. Returns ``[level0, level1, ...]`` up to the
+    first empty level.
+
+    The anti-join probes ONE running seen frame (one union per level,
+    not a re-union of every prior level), its build side wrapped in the
+    caller's join ``hint``. Each level is checkpointed eagerly: its plan
+    then never references the prior levels' lineage, and the empty-level
+    exit is a probe of materialized data, not a recomputation."""
+    levels, seen = [level0], level0.select(*keys)
+    for d in range(1, depth + 1):
+        nxt = (
+            expand(levels[-1], d)
+            .join(hint(seen), keys, "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        if nxt.isEmpty():
+            break
+        levels.append(nxt)
+        seen = seen.unionByName(nxt.select(*keys))
+    return levels
 
 
 def bfs(
@@ -45,6 +95,7 @@ def bfs(
     """Transitive closure to ``depth`` hops: (node, depth) with minimum
     depth per node, start nodes excluded (callers/callees semantics,
     searcher_sql.go:373-485). ``reverse=True`` walks dst->src (callers).
+    An empty ``start`` list yields no rows, typed like the edge columns.
 
     Level-synchronous BFS: a node's first appearance is its minimum
     depth, so the visited anti-join both dedupes and breaks cycles.
@@ -52,7 +103,6 @@ def bfs(
     depth = _clamp_depth(depth)
     if reverse:
         src, dst = dst, src
-    spark = edges.sparkSession
     if depth <= 4:
         # small fixed depth: ONE fused lazy plan (a chain of ≤4 joins +
         # a min-depth aggregate) instead of one driver-synchronized job
@@ -66,31 +116,28 @@ def bfs(
     # each level is its own job and would otherwise recompute the lineage
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).cache()
 
-    frontier = spark.createDataFrame([(s,) for s in start], ["node"])
-    visited = frontier.withColumn("depth", F.lit(0))
-    out = None
+    def expand(frontier: DataFrame, level: int) -> DataFrame:
+        return (
+            e.join(F.broadcast(frontier), frontier["node"] == e["_src"], "inner")
+            .select(F.col("_dst").alias("node"))
+            .distinct()
+            .withColumn("depth", F.lit(level))
+        )
+
     try:
-        for level in range(1, depth + 1):
-            nxt = (
-                e.join(F.broadcast(frontier), frontier["node"] == e["_src"], "inner")
-                .select(F.col("_dst").alias("node"))
-                .distinct()
-                .join(F.broadcast(visited.select("node")), "node", "left_anti")
-                .withColumn("depth", F.lit(level))
-            )
-            # materialize the level; later levels and the result depend
-            # only on checkpointed data, never on `e`'s lineage
-            nxt = nxt.localCheckpoint(eager=True)
-            if nxt.isEmpty():
-                break
-            visited = visited.union(nxt)
-            out = nxt if out is None else out.union(nxt)
-            frontier = nxt.select("node")
+        level0 = _start_frame(e, [(s,) for s in start], ["node"])
+        levels = _frontier_levels(
+            level0.withColumn("depth", F.lit(0)),
+            expand,
+            ["node"],
+            depth=depth,
+            hint=F.broadcast,
+        )
     finally:
         e.unpersist()
-    if out is None:
-        return visited.filter(F.lit(False)).select("node", "depth")
-    return out.orderBy("depth", "node")
+    return _union_all(levels[1:] or [levels[0].filter(F.lit(False))]).orderBy(
+        "depth", "node"
+    )
 
 
 def _bfs_fused(
@@ -102,10 +149,16 @@ def _bfs_fused(
     Identical output to the loop form — a node revisited on a longer
     path or via a cycle is collapsed by the min-depth aggregate instead
     of the per-level visited set. No driver actions, so Spark schedules
-    the whole traversal as one job."""
-    spark = edges.sparkSession
+    the whole traversal as one job.
+
+    Not :func:`bfs_multi` with one root label for every start node:
+    without a root column the optimizer pushes the start-node anti-join
+    down to the edge scan and every join and distinct keys on one
+    BIGINT. Measured on the sf0.1 callees_d3 traversal on 4 cores,
+    interleaved in one JVM: 0.92 s median here vs 1.17 s through the
+    (root, node) plan, slower in 12 of 12 pairs."""
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    start_df = spark.createDataFrame([(s,) for s in start], ["node"])
+    start_df = _start_frame(e, [(s,) for s in start], ["node"])
     frontier = start_df
     levels = []
     for level in range(1, depth + 1):
@@ -115,11 +168,9 @@ def _bfs_fused(
             .distinct()
         )
         levels.append(frontier.withColumn("depth", F.lit(level)))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
     return (
-        out.groupBy("node")
+        _union_all(levels)
+        .groupBy("node")
         .agg(F.min("depth").alias("depth"))
         .join(F.broadcast(start_df), "node", "left_anti")
         .orderBy("depth", "node")
@@ -160,16 +211,8 @@ def bfs_multi(
     depth = _clamp_depth(depth)
     if reverse:
         src, dst = dst, src
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    if not starts:
-        # createDataFrame cannot infer a schema from []; an empty root
-        # batch has a well-defined answer — no rows, same shape
-        node_dt = dict(e.dtypes)["_src"]
-        return spark.createDataFrame(
-            [], f"root {node_dt}, node {node_dt}, depth int"
-        )
-    start_df = spark.createDataFrame([(s, s) for s in starts], ["root", "node"])
+    start_df = _start_frame(e, [(s, s) for s in starts], ["root", "node"])
     frontier = start_df
     levels = []
     for level in range(1, depth + 1):
@@ -179,11 +222,9 @@ def bfs_multi(
             .distinct()
         )
         levels.append(frontier.withColumn("depth", F.lit(level)))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
     return (
-        out.groupBy("root", "node")
+        _union_all(levels)
+        .groupBy("root", "node")
         .agg(F.min("depth").alias("depth"))
         .join(F.broadcast(start_df), ["root", "node"], "left_anti")
         .orderBy("root", "depth", "node")
@@ -1077,6 +1118,27 @@ def communities_lpa(
     )
 
 
+def _fingerprint(df: DataFrame) -> tuple:
+    """Order-insensitive fingerprint of a loop's state frame for
+    convergence tests: (row count, sum of a per-row xxhash64) in ONE
+    scalar aggregate job. An unchanged fingerprint misreads a changed
+    frame only if distinct 64-bit hash deltas cancel exactly — far below
+    hardware soft-error rates, and every caller's round cap still
+    bounds its loop.
+
+    Hashing, NOT a numeric cast of the values: node ids need not be
+    numeric (hierarchy_closure's namespaced 'c:123' strings), and a
+    cast-to-decimal maps those to NULL, whose sum compares NULL == NULL
+    after one round — phantom convergence. The decimal(38,0)
+    accumulator is because a BIGINT sum of xxhash64 values overflows
+    under ANSI mode on any non-trivial frame."""
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
+    ).collect()[0]
+    return tuple(row)
+
+
 def connected_components(
     pairs: DataFrame,
     *,
@@ -1088,7 +1150,9 @@ def connected_components(
     (Kiveris et al. 2014, "Connected Components in MapReduce and
     Beyond") — (doc_id, cluster_id, keep) with cluster_id = the
     component's minimum node id, the same output contract as
-    :func:`~project_cortex_spark.operators.dedup.duplicate_clusters`.
+    :func:`~project_cortex_spark.operators.dedup.duplicate_clusters`:
+    a pair with a NULL or equal endpoint carries no edge, so only nodes
+    of some real pair appear.
 
     Why a second algorithm: min-label propagation converges in
     O(component diameter) rounds — fine for shallow near-dup clusters,
@@ -1105,9 +1169,7 @@ def connected_components(
     distinct() bounds the frame at the surviving edge count. Lineage is
     cut per round with localCheckpoint exactly like duplicate_clusters.
     Convergence = the canonical (child, root) edge set is unchanged
-    (count + order-insensitive xxhash64 checksum — one scalar aggregate
-    per round; a 2^-64 collision is far below this host's soft-error
-    rate and the cap below would still bound the loop).
+    (its :func:`_fingerprint`, one scalar aggregate per round).
     """
     p = (
         pairs.select(F.col(a).alias("x"), F.col(b).alias("y"))
@@ -1128,15 +1190,6 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-
-    def _checksum(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) accumulator: a BIGINT sum of xxhash64 values
-            # overflows under ANSI mode on any non-trivial frame
-            F.sum(F.xxhash64("x", "y").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
 
     def _large_star(e: DataFrame) -> DataFrame:
         # symmetric view; for each center u: m = min(N(u) + {u}),
@@ -1170,10 +1223,10 @@ def connected_components(
             .distinct()
         )
 
-    sig = _checksum(edges)
+    sig = _fingerprint(edges)
     for _ in range(max_rounds):
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        new_sig = _checksum(edges)
+        new_sig = _fingerprint(edges)
         if new_sig == sig:
             break
         sig = new_sig
@@ -1587,31 +1640,25 @@ def hierarchy_closure(
     # each level is checkpointed: the level-k plan references the FULL
     # closure (the min-depth anti-join), so without a lineage cut the
     # analyzed plan doubles per level and stalls Catalyst around depth
-    # 6-8; the eager cut also makes the empty-level early exit free
-    # (isEmpty on a materialized frame is a metadata probe, not a job)
-    level = e.withColumn("depth", F.lit(1)).localCheckpoint(eager=True)
-    parts = [level]
+    # 6-8
     up_edges = e.select(
         F.col("node").alias("ancestor"), F.col("ancestor").alias("up")
     )
-    closure = level.select("node", "ancestor")
-    for lvl in range(2, max_depth + 1):
-        nxt = (
+
+    def expand(level: DataFrame, d: int) -> DataFrame:
+        return (
             level.join(up_edges, "ancestor")
             .select("node", F.col("up").alias("ancestor"))
             .distinct()
-            .join(closure, ["node", "ancestor"], "left_anti")
-            .withColumn("depth", F.lit(lvl))
-        ).localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        parts.append(nxt)
-        level = nxt
-        closure = closure.unionByName(nxt.select("node", "ancestor"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+            .withColumn("depth", F.lit(d + 1))
+        )
+
+    level1 = e.withColumn("depth", F.lit(1)).localCheckpoint(eager=True)
+    return _union_all(
+        _frontier_levels(
+            level1, expand, ["node", "ancestor"], depth=max_depth - 1
+        )
+    )
 
 
 def package_summary(entities: DataFrame) -> DataFrame:
@@ -1755,18 +1802,10 @@ def strongly_connected_components(
     def _fixpoint(nodes_df: DataFrame, e: DataFrame) -> DataFrame:
         """Fused fixpoint of flab(v) = min(v, min over s->v of flab(s))
         and blab(v) = min(v, min over v->d of blab(d)) — one frame, one
-        round loop. Convergence is detected by an exact scalar checksum
-        pair: labels are monotone non-increasing, so an unchanged
-        (sum(hash(flab)), sum(hash(blab))) IS the joint fixpoint — one
-        tiny aggregate instead of a per-round comparison join.
-
-        Checksum via xxhash64, NOT a numeric cast of the label: node
-        ids need not be numeric (hierarchy_closure's namespaced 'c:123'
-        strings), and cast-to-decimal maps those to NULL, whose sum
-        compares NULL == NULL after one round — phantom convergence and
-        a silently wrong answer. An unchanged sum misreads only if
-        distinct 64-bit hash deltas cancel exactly — the same accepted
-        odds as the CC edge checksum in connected_components above.
+        round loop. Labels are monotone non-increasing, so an unchanged
+        :func:`_fingerprint` of the (node, flab, blab) frame IS the
+        joint fixpoint — one tiny aggregate instead of a per-round
+        comparison join.
         """
         lab = nodes_df.select(
             "node",
@@ -1774,14 +1813,7 @@ def strongly_connected_components(
             F.col("node").alias("blab"),
         ).localCheckpoint(eager=False)
 
-        def _sums(df: DataFrame):
-            row = df.agg(
-                F.sum(F.xxhash64(F.col("flab")).cast("decimal(38,0)")).alias("f"),
-                F.sum(F.xxhash64(F.col("blab")).cast("decimal(38,0)")).alias("b"),
-            ).collect()[0]
-            return (row["f"], row["b"])
-
-        sig = _sums(lab)
+        sig = _fingerprint(lab)
         for _ in range(label_rounds):
             fprop = (
                 e.join(bcast(lab.select(F.col("node").alias("s"), "flab")), "s")
@@ -1807,7 +1839,7 @@ def strongly_connected_components(
                 )
                 .localCheckpoint(eager=False)
             )
-            new_sig = _sums(lab)
+            new_sig = _fingerprint(lab)
             if new_sig == sig:
                 return lab
             sig = new_sig
@@ -1844,10 +1876,112 @@ def strongly_connected_components(
         return nodes.select(
             "node", F.col("node").alias("scc_id")
         ).filter(F.lit(False))
-    out = out_parts[0]
-    for p in out_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union_all(out_parts)
+
+
+@contextmanager
+def _seeded_bfs(edges: DataFrame, *, seed_mod: int, max_depth: int, max_seeds: int):
+    """The seeded multi-source forward BFS that closeness and
+    betweenness share, over an undirected a<b edge list. Yields
+    ``(e, levels, bcast, key)``:
+
+    - ``e``: the symmetrised (src, dst) edge frame, cached until the
+      ``with`` block exits;
+    - ``levels[d]``: the (slot, node, sigma) frontier at distance d,
+      sigma = the number of shortest seed->node paths (exact BIGINT);
+      level 0 holds the seeds, slot = the seed's rank in the bounded
+      ``% seed_mod`` ORDER-BY-LIMIT sample;
+    - ``bcast``: the broadcast-vs-shuffle switch for node-keyed joins,
+      broadcast while |seeds|·|V| fits :data:`BROADCAST_NODE_LIMIT`;
+    - ``key``: the packed-key function ``key(node, slot)``, or None when
+      the id span has no BIGINT headroom. With a key, every level also
+      carries its packed ``k`` column and the per-level aggregate and
+      anti-join run on it.
+    """
+    e = (
+        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .unionByName(
+            edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+        )
+        .cache()
+    )
+    try:
+        # ONE distinct-nodes frame serves both the seed slice and the
+        # span stats: a plain count/min/max over the cached 1-column
+        # node frame, not a second full-|e| aggregation
+        nodes = e.select(F.col("src").alias("node")).distinct().cache()
+        seeds = (
+            nodes.filter(F.col("node") % seed_mod == 0)
+            .orderBy("node")
+            .limit(max_seeds)
+        )
+        # slot = rank of the seed in the (deterministic) sample: a dense
+        # 0..n_seeds-1 int that replaces the seed id as the per-source
+        # BFS label
+        lv0 = seeds.select(
+            (F.row_number().over(Window.orderBy("node")) - 1).alias("slot"),
+            "node",
+            F.lit(1).cast("long").alias("sigma"),
+        ).localCheckpoint(eager=True)
+        n_seeds = lv0.count()
+        stats = nodes.agg(
+            # count("node"), not count(1): a NULL edge endpoint upstream
+            # must not inflate n_nodes (it would perturb the
+            # BROADCAST_NODE_LIMIT switch; min/max already ignore NULLs)
+            F.count("node").alias("n"),
+            F.min("node").alias("mn"),
+            F.max("node").alias("mx"),
+        ).first()
+        nodes.unpersist()
+        n_nodes = stats["n"] or 0
+        small = n_seeds * n_nodes <= BROADCAST_NODE_LIMIT
+        bcast = F.broadcast if small else (lambda df: df)
+        S = max(n_seeds, 1)
+        mn = int(stats["mn"]) if stats["mn"] is not None else 0
+        mx = int(stats["mx"]) if stats["mx"] is not None else 0
+        node_dt = dict(e.dtypes)["src"]
+
+        def key(node_col, slot_col):
+            # injective (node, slot) -> BIGINT while the span check holds
+            return (
+                (node_col.cast("long") - F.lit(mn)) * S + slot_col
+            ).alias("k")
+
+        def expand_packed(prev: DataFrame, d: int) -> DataFrame:
+            # aggregate on the single packed key; slot and node are
+            # re-derived from it: true integer division (k is
+            # non-negative; a double `/` would lose precision past
+            # 2^53), node cast back to its source dtype so the schema
+            # never changes
+            return (
+                e.join(bcast(prev), prev["node"] == e["src"])
+                .select(key(F.col("dst"), F.col("slot")), "sigma")
+                .groupBy("k")
+                .agg(F.sum("sigma").alias("sigma"))
+                .select(
+                    "k",
+                    F.pmod(F.col("k"), F.lit(S)).cast("int").alias("slot"),
+                    (F.expr(f"k div {S}") + mn).cast(node_dt).alias("node"),
+                    "sigma",
+                )
+            )
+
+        def expand_composite(prev: DataFrame, d: int) -> DataFrame:
+            return (
+                e.join(bcast(prev), prev["node"] == e["src"])
+                .groupBy("slot", F.col("dst").alias("node"))
+                .agg(F.sum("sigma").alias("sigma"))
+            )
+
+        if (mx - mn + 1) <= (2**62) // S:
+            lv0 = lv0.withColumn("k", key(F.col("node"), F.col("slot")))
+            expand, keys = expand_packed, ["k"]
+        else:
+            expand, keys, key = expand_composite, ["slot", "node"], None
+        levels = _frontier_levels(lv0, expand, keys, depth=max_depth, hint=bcast)
+        yield e, levels, bcast, key
+    finally:
+        e.unpersist()
 
 
 def closeness_centrality(
@@ -1895,103 +2029,16 @@ def closeness_centrality(
     State is bounded by max_seeds·|V| by construction; the final
     aggregate is |seeds|-wide.
 
-    Keying (r9, same as :func:`betweenness_centrality`): every
-    per-(seed, node) distinct and anti-join runs on ONE packed BIGINT
-    key ``(node - min_node) * n_seeds + slot`` while the id span has
-    BIGINT headroom (composite-key fallback otherwise) — the dominant
-    frontier distinct probes an 8-byte key instead of a 16-byte
-    composite (guide §2.3 narrower types; measured 3.1x on the same
-    aggregate shape in betweenness). Output identical: the distinct /
-    anti-join semantics are key-representation-free.
+    The forward pass is :func:`betweenness_centrality`'s (one
+    :func:`_seeded_bfs`, packed-key keying included); closeness reads
+    only each level's distance and ignores its path counts.
     """
-    e = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(
-            edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    with _seeded_bfs(
+        edges, seed_mod=seed_mod, max_depth=max_depth, max_seeds=max_seeds
+    ) as (_, levels, _, _):
+        vis = _union_all(
+            [lv.select("slot", F.lit(d).alias("dist")) for d, lv in enumerate(levels)]
         )
-        .cache()
-    )
-    # shared distinct-nodes frame for seeds + span stats — same
-    # one-pass prologue as betweenness_centrality (r9 continuation)
-    nodes = e.select(F.col("src").alias("node")).distinct().cache()
-    seeds = (
-        nodes.filter(F.col("node") % seed_mod == 0)
-        .orderBy("node")
-        .limit(max_seeds)
-    )
-    lv0 = seeds.select(
-        (F.row_number().over(Window.orderBy("node")) - 1).alias("slot"),
-        F.col("node").alias("seed"),
-        "node",
-    ).localCheckpoint(eager=True)
-    n_seeds = lv0.count()
-    stats = nodes.agg(
-        # count("node"), not count(1): a NULL edge endpoint upstream
-        # must not inflate n_nodes (it would perturb the
-        # BROADCAST_NODE_LIMIT switch; min/max already ignore NULLs)
-        F.count("node").alias("n"),
-        F.min("node").alias("mn"),
-        F.max("node").alias("mx"),
-    ).first()
-    nodes.unpersist()
-    n_nodes = stats["n"] or 0
-    small = n_seeds * n_nodes <= BROADCAST_NODE_LIMIT
-    bcast = F.broadcast if small else (lambda df: df)
-    S = max(n_seeds, 1)
-    mn = int(stats["mn"]) if stats["mn"] is not None else 0
-    mx = int(stats["mx"]) if stats["mx"] is not None else 0
-    packed = (mx - mn + 1) <= (2**62) // S
-    node_dt = dict(e.dtypes)["src"]
-
-    def key(node_col, slot_col):
-        return (
-            (node_col.cast("long") - F.lit(mn)) * S + slot_col
-        ).alias("k")
-
-    def decode_node(kcol):
-        return (F.expr(f"k div {S}") + mn).cast(node_dt).alias("node")
-
-    if packed:
-        frontier = lv0.select(
-            key(F.col("node"), F.col("slot")).alias("k"), "slot", "node"
-        ).localCheckpoint(eager=True)
-    else:
-        frontier = lv0.select("slot", "node").localCheckpoint(eager=True)
-    keycols = ["k"] if packed else ["slot", "node"]
-    visited = [frontier.withColumn("dist", F.lit(0))]
-    try:
-        for d in range(1, max_depth + 1):
-            seen = visited[0].select(*keycols)
-            for v in visited[1:]:
-                seen = seen.unionByName(v.select(*keycols))
-            expanded = e.join(bcast(frontier), frontier["node"] == e["src"])
-            if packed:
-                frontier = (
-                    expanded.select(key(F.col("dst"), F.col("slot")))
-                    .distinct()
-                    .join(bcast(seen), "k", "left_anti")
-                    .select(
-                        "k",
-                        F.pmod(F.col("k"), F.lit(S)).cast("int").alias("slot"),
-                        decode_node(F.col("k")),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-            else:
-                frontier = (
-                    expanded.select("slot", F.col("dst").alias("node"))
-                    .distinct()
-                    .join(bcast(seen), ["slot", "node"], "left_anti")
-                    .localCheckpoint(eager=True)
-                )
-            if frontier.isEmpty():
-                break
-            visited.append(frontier.withColumn("dist", F.lit(d)))
-    finally:
-        e.unpersist()
-    vis = visited[0].select("slot", "dist")
-    for v in visited[1:]:
-        vis = vis.unionByName(v.select("slot", "dist"))
     slot_counts = vis.filter(F.col("dist") >= 1).groupBy("slot").agg(
         F.count(F.lit(1)).alias("n_reached"),
         F.sum("dist").alias("sum_dist"),
@@ -2001,7 +2048,7 @@ def closeness_centrality(
         ],
     )
     counts = (
-        lv0.select("slot", "seed")
+        levels[0].select("slot", F.col("node").alias("seed"))
         .join(slot_counts, "slot", "left")
         .drop("slot")
     )
@@ -2079,101 +2126,9 @@ def betweenness_centrality(
     composite key — identical output either way, since sigma/delta
     sums are order-free integers.
     """
-    e = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(
-            edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-        .cache()
-    )
-    # ONE distinct-nodes frame serves both the seed slice and the
-    # span stats (r9 continuation, guide §1.2 — don't run the same
-    # pass twice): previously seeds ran their own distinct over the
-    # filtered edge frame AND stats ran a countDistinct (a second
-    # full-|e| aggregation); now stats is a plain count/min/max over
-    # the cached 1-column node frame. Semantically identical.
-    nodes = e.select(F.col("src").alias("node")).distinct().cache()
-    seeds = (
-        nodes.filter(F.col("node") % seed_mod == 0)
-        .orderBy("node")
-        .limit(max_seeds)
-    )
-    # slot = rank of the seed in the (deterministic) sample: a dense
-    # 0..n_seeds-1 int that replaces the seed id as the per-source BFS
-    # label — the output never needs the seed id itself
-    lv0 = seeds.select(
-        (F.row_number().over(Window.orderBy("node")) - 1).alias("slot"),
-        "node",
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
-    n_seeds = lv0.count()
-    stats = nodes.agg(
-        # count("node"), not count(1): a NULL edge endpoint upstream
-        # must not inflate n_nodes (it would perturb the
-        # BROADCAST_NODE_LIMIT switch; min/max already ignore NULLs)
-        F.count("node").alias("n"),
-        F.min("node").alias("mn"),
-        F.max("node").alias("mx"),
-    ).first()
-    nodes.unpersist()
-    n_nodes = stats["n"] or 0
-    small = n_seeds * n_nodes <= BROADCAST_NODE_LIMIT
-    bcast = F.broadcast if small else (lambda df: df)
-    S = max(n_seeds, 1)
-    mn = int(stats["mn"]) if stats["mn"] is not None else 0
-    mx = int(stats["mx"]) if stats["mx"] is not None else 0
-    packed = (mx - mn + 1) <= (2**62) // S
-    node_dt = dict(e.dtypes)["src"]
-
-    def key(node_col, slot_col):
-        # injective (node, slot) -> BIGINT while the span check holds
-        return (
-            (node_col.cast("long") - F.lit(mn)) * S + slot_col
-        ).alias("k")
-
-    def decode(kcol):
-        # invert `key`: (slot, node) back from the packed BIGINT; true
-        # integer division (k is non-negative; a double `/` would lose
-        # precision past 2^53), node cast back to its source dtype so
-        # the schema never changes
-        return [
-            F.pmod(kcol, F.lit(S)).cast("int").alias("slot"),
-            (F.expr(f"k div {S}") + mn).cast(node_dt).alias("node"),
-        ]
-
-    def with_key(df):
-        return df.withColumn("k", key(F.col("node"), F.col("slot")))
-
-    keycols = ["k"] if packed else ["slot", "node"]
-    levels = [with_key(lv0) if packed else lv0]
-    try:
-        for d in range(1, max_depth + 1):
-            seen = levels[0].select(*keycols)
-            for v in levels[1:]:
-                seen = seen.unionByName(v.select(*keycols))
-            prev = levels[-1]
-            expanded = e.join(bcast(prev), prev["node"] == e["src"])
-            if packed:
-                # aggregate + anti-join on the single packed key; slot
-                # and node are re-derived from it after the cut
-                nxt = (
-                    expanded.select(key(F.col("dst"), F.col("slot")), "sigma")
-                    .groupBy("k")
-                    .agg(F.sum("sigma").alias("sigma"))
-                    .join(bcast(seen), "k", "left_anti")
-                    .select("k", *decode(F.col("k")), "sigma")
-                    .localCheckpoint(eager=True)
-                )
-            else:
-                nxt = (
-                    expanded.groupBy("slot", F.col("dst").alias("node"))
-                    .agg(F.sum("sigma").alias("sigma"))
-                    .join(bcast(seen), ["slot", "node"], "left_anti")
-                    .localCheckpoint(eager=True)
-                )
-            if nxt.isEmpty():
-                break
-            levels.append(nxt)
+    with _seeded_bfs(
+        edges, seed_mod=seed_mod, max_depth=max_depth, max_seeds=max_seeds
+    ) as (e, levels, bcast, key):
         reached = len(levels) - 1  # deepest populated level
         # backward accumulation: delta6[d] over levels reached..1, each
         # an exact BIGINT e6 partial-dependency sum; the CACHED edge
@@ -2183,97 +2138,53 @@ def betweenness_centrality(
                 "delta6", F.lit(0).cast("long")
             )
         }
-        e2 = e
+        # packed: (seed, node) keyed steps run on k, the successor's key
+        # derived on the fly; composite: the (slot, node) pair
+        keys = ["k"] if key is not None else ["slot", "node"]
+        succ = (
+            [key(F.col("dst"), F.col("slot"))]
+            if key is not None
+            else [F.col("slot"), F.col("dst").alias("node")]
+        )
+        term = (
+            F.col("sigma").cast("double")
+            / F.col("vsigma").cast("double")
+            * (F.lit(1.0) + F.col("vdelta6").cast("double") / 1000000.0)
+        )
         for d in range(reached - 1, 0, -1):
             u = levels[d]
-            term = (
-                F.col("sigma").cast("double")
-                / F.col("vsigma").cast("double")
-                * (F.lit(1.0) + F.col("vdelta6").cast("double") / 1000000.0)
+            v = deltas[d + 1].select(
+                *keys,
+                F.col("sigma").alias("vsigma"),
+                F.col("delta6").alias("vdelta6"),
             )
-            if packed:
-                # the successor join and both (seed, node) keyed steps
-                # run on the packed key: v is keyed by its own k, the
-                # probe side derives key(dst, slot) on the fly.
-                # u rides the SAME broadcast-vs-shuffle switch as the
-                # forward expansion (r9: the backward pass shuffle-joined
-                # u against the cached edge frame while the forward pass
-                # broadcast the frontier — the u exchange + sort-merge
-                # over the |frontier|·degree fan-out was the single
-                # hottest phase, 11.9 s of the 25.5 s total at sf0.1;
-                # guide §3.1, broadcast replaces both exchanges)
-                v = deltas[d + 1].select(
-                    "k",
-                    F.col("sigma").alias("vsigma"),
-                    F.col("delta6").alias("vdelta6"),
+            # u rides the SAME broadcast-vs-shuffle switch as the
+            # forward expansion (r9: the backward pass shuffle-joined u
+            # against the cached edge frame while the forward pass
+            # broadcast the frontier — the u exchange + sort-merge over
+            # the |frontier|·degree fan-out was the single hottest
+            # phase, 11.9 s of the 25.5 s total at sf0.1; guide §3.1,
+            # broadcast replaces both exchanges)
+            contrib = (
+                bcast(u).join(e, u["node"] == e["src"])
+                .select(*succ, *[u[c].alias(f"u_{c}") for c in keys], "sigma")
+                .join(bcast(v), keys)
+                .select(
+                    *[F.col(f"u_{c}").alias(c) for c in keys],
+                    F.round(term * 1000000.0).cast("long").alias("term6"),
                 )
-                contrib = (
-                    bcast(u).join(e2, u["node"] == e2["src"])
-                    .select(
-                        key(F.col("dst"), F.col("slot")),
-                        u["k"].alias("uk"),
-                        "sigma",
-                    )
-                    .join(bcast(v), "k")
-                    .select(
-                        F.col("uk").alias("k"),
-                        F.round(term * 1000000.0).cast("long").alias("term6"),
-                    )
-                    .groupBy("k")
-                    .agg(F.sum("term6").alias("delta6"))
+                .groupBy(*keys)
+                .agg(F.sum("term6").alias("delta6"))
+            )
+            deltas[d] = (
+                u.join(bcast(contrib), keys, "left")
+                .select(
+                    *u.columns,
+                    F.coalesce("delta6", F.lit(0)).cast("long").alias("delta6"),
                 )
-                deltas[d] = (
-                    u.join(bcast(contrib), "k", "left")
-                    .select(
-                        "k",
-                        "slot",
-                        "node",
-                        "sigma",
-                        F.coalesce("delta6", F.lit(0))
-                        .cast("long")
-                        .alias("delta6"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-            else:
-                v = deltas[d + 1].select(
-                    "slot",
-                    F.col("node").alias("vnode"),
-                    F.col("sigma").alias("vsigma"),
-                    F.col("delta6").alias("vdelta6"),
-                )
-                contrib = (
-                    bcast(u).join(e2, u["node"] == e2["src"])
-                    .join(
-                        bcast(v),
-                        (F.col("dst") == F.col("vnode"))
-                        & (u["slot"] == v["slot"]),
-                    )
-                    .select(
-                        u["slot"].alias("slot"),
-                        u["node"].alias("node"),
-                        F.round(term * 1000000.0).cast("long").alias("term6"),
-                    )
-                    .groupBy("slot", "node")
-                    .agg(F.sum("term6").alias("delta6"))
-                )
-                deltas[d] = (
-                    u.join(bcast(contrib), ["slot", "node"], "left")
-                    .select(
-                        "slot",
-                        "node",
-                        "sigma",
-                        F.coalesce("delta6", F.lit(0))
-                        .cast("long")
-                        .alias("delta6"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-    finally:
-        e.unpersist()
-    out = deltas[reached].select("node", "delta6")
-    for d in range(reached - 1, 0, -1):
-        out = out.unionByName(deltas[d].select("node", "delta6"))
+                .localCheckpoint(eager=True)
+            )
+    out = _union_all([dl.select("node", "delta6") for dl in deltas.values()])
     return (
         out.groupBy("node")
         .agg(

@@ -2065,13 +2065,16 @@ def file_stats_sql(glob: str) -> str:
 def duplicate_clusters_sql(pairs_sql: str) -> str:
     """Connected components over a (a, b) pair query: transitive
     reachability closure (recursive CTE, UNION dedup handles cycles),
-    then component id = min reachable node."""
+    then component id = min reachable node. A pair with a NULL or equal
+    endpoint carries no edge (graph.connected_components' contract)."""
     return f"""
     WITH RECURSIVE pairs AS ({pairs_sql}),
     sym AS (
       SELECT a AS x, b AS y FROM pairs
+      WHERE a IS NOT NULL AND b IS NOT NULL AND a <> b
       UNION
       SELECT b AS x, a AS y FROM pairs
+      WHERE a IS NOT NULL AND b IS NOT NULL AND a <> b
     ),
     reach(x, y) AS (
       SELECT x, y FROM sym

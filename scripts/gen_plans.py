@@ -102,7 +102,7 @@ PICKS = {
     "events_mad_outliers": "robust MAD outliers: two exact-median aggregate passes shuffled on the group key, both tiny per-group stat frames BROADCAST back into codegen projections — the fact side shuffles once per median pass and the flag filter is pure scalar expressions",
     "events_autocorr": "lag-k ACF: bucket-count cells (map-side partial), max_lag-way explode of the CELL frame (not raw events), one equi-join on (group, bucket), then BIGINT power sums map-side-combined to |groups|*max_lag rows — nothing event-sized past the first aggregate",
     "events_holt": "Holt level+trend: the cusum/ewma fold family — one bucket aggregate, collect_list window, struct-accumulator aggregate() fold per row; all codegen expressions, no Python",
-    "graph_closeness": "seed-sampled BFS closeness: per level ONE broadcast equi-join on node==src plus a broadcast anti-join vs visited (frontier under BROADCAST_NODE_LIMIT — the stationary edge list never shuffles), lineage cut per level; plan shows the final checkpointed level + the |seeds|-wide conditional aggregate",
+    "graph_closeness": "seed-sampled BFS closeness on betweenness's forward pass (sigma carried, ignored): per level ONE broadcast equi-join on node==src, a packed-key sum aggregate, and a broadcast anti-join vs the running seen frame (frontier under BROADCAST_NODE_LIMIT — the stationary edge list never shuffles), lineage cut per level; plan shows the final checkpointed level + the |seeds|-wide conditional aggregate",
     "events_seasonal": "classical decomposition: one bucket-count aggregate (map-side partial), a rows-window centered MA over the CELL frame, then the tiny (group, phase) mean frame BROADCAST back — two cell-sized exchanges total, nothing event-sized past the first aggregate",
     "events_ttest_drift": "Welch t drift: one bounds aggregate broadcast back, ONE (group, side) decimal power-sum aggregate (<= 2 cells/group, map-side combinable) — the smallest monoid in the drift family; everything after is scalar codegen",
     "dedup_edit_distance": "PassJoin ED join: candidate generation is an equi-join on (seg_id, substring) over DISTINCT keys (template skew collapses pre-join), exploded segment/probe frames are key-count-sized; verify = one JVM levenshtein per candidate; id expansion broadcasts the tiny key-pair frame",

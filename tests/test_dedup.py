@@ -329,6 +329,15 @@ def test_duplicate_clusters_semantics(spark):
         5: (5, True), 6: (5, False),
         7: (7, True), 8: (7, False),
     }
+    # a pair with a NULL or equal endpoint carries no edge and adds no doc
+    degenerate = spark.createDataFrame(
+        [(5, 5), (1, 2), (None, 2), (3, None), (None, None)], "a bigint, b bigint"
+    )
+    got = {
+        r["doc_id"]: (r["cluster_id"], r["keep"])
+        for r in dedup.duplicate_clusters(degenerate).collect()
+    }
+    assert got == {1: (1, True), 2: (1, False)}
 
 
 def test_duplicate_clusters_oracle(registry, duck):

@@ -573,6 +573,61 @@ def test_bfs_multi_empty_starts_returns_empty_frame(fixture_edges):
     assert out.count() == 0
 
 
+@pytest.mark.parametrize("depth", [3, 6])
+def test_bfs_empty_start_returns_empty_frame(fixture_edges, depth):
+    """No start nodes: zero (node, depth) rows typed like the edge
+    columns, in both the fused (depth <= 4) and the loop arm."""
+    for fn in (bfs, callers, callees):
+        out = fn(fixture_edges, [], depth=depth)
+        assert out.dtypes == [("node", "bigint"), ("depth", "int")]
+        assert out.count() == 0
+
+
+def _cached_rdd_ids(spark) -> set:
+    # persisted RDDs that are not checkpoints: what .cache()/.persist()
+    # leaves behind. A localCheckpoint also persists its RDD, but the
+    # returned frame reads those blocks, and the JVM drops them once the
+    # frame is garbage-collected, so their count is not a leak signal.
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        int(i) for i in rdds.keySet() if not rdds.get(i).rdd().isCheckpointed()
+    }
+
+
+@pytest.mark.parametrize("shape", ["empty", "null_endpoint"])
+def test_frontier_loop_callers_degenerate_inputs(spark, shape):
+    """Every caller of the shared frontier loop takes an empty edge frame
+    and an edge frame with NULL endpoints without raising, returns its
+    documented schema, and leaves no cached frame behind."""
+    from project_cortex_spark.operators.graph import (
+        betweenness_centrality,
+        closeness_centrality,
+        hierarchy_closure,
+    )
+
+    rows = [] if shape == "empty" else [(0, None), (None, 2), (0, 1), (1, 2)]
+
+    def frame(cols):
+        return spark.createDataFrame(rows, f"{cols[0]} bigint, {cols[1]} bigint")
+
+    calls = [
+        (lambda: bfs(frame(["src", "dst"]), [0], depth=6),
+         ["node", "depth"]),
+        (lambda: hierarchy_closure(frame(["child", "parent"]), max_depth=6),
+         ["node", "ancestor", "depth"]),
+        (lambda: closeness_centrality(frame(["a", "b"]), seed_mod=1),
+         ["node", "n_reached", "sum_dist", "harmonic", "closeness"]),
+        (lambda: betweenness_centrality(frame(["a", "b"]), seed_mod=1),
+         ["node", "betweenness", "n_seeds"]),
+    ]
+    for call, columns in calls:
+        before = _cached_rdd_ids(spark)
+        out = call()
+        out.collect()
+        assert out.columns == columns
+        assert _cached_rdd_ids(spark) - before == set()
+
+
 def test_communities_lpa_separates_two_cliques(spark):
     """Two 4-cliques joined by one bridge edge: synchronous min-tie LPA
     must converge each clique onto its own (minimum-id) label."""
