@@ -67,6 +67,7 @@ from project_cortex_spark.pipeline import chunks as chunks_mod
 from project_cortex_spark.pipeline import embed as embed_mod
 from project_cortex_spark.pipeline import parse as parse_mod
 from project_cortex_spark.pipeline import sink as sink_mod
+from project_cortex_spark.session import local_frame
 from project_cortex_spark.sources import files as files_src
 from project_cortex_spark.sources import layout as layout_mod
 from project_cortex_spark.sources import text_formats as textfmt
@@ -1479,10 +1480,11 @@ def _order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference stores function_calls as a TABLE (schema.go:266-279);
     # deriving the edge projection per traversal was fixture convenience.
     # Materializing the narrow (src, dst) parquet once per session cut
-    # graph_callees_d3 39% / graph_callers_d2 30% at sf0.1 — the fused
-    # BFS embeds the derivation once per level otherwise. Bucketing by
-    # src measured at parity with plain parquet (the broadcast-frontier
-    # BFS has no shuffle for buckets to remove) and was NOT adopted.
+    # graph_callees_d3 39% / graph_callers_d2 30% at sf0.1 — each level's
+    # job of the driver-frontier BFS re-derives the edges otherwise.
+    # Bucketing by src measured at parity with plain parquet (the
+    # broadcast-frontier BFS has no shuffle for buckets to remove) and
+    # was NOT adopted.
     def build() -> DataFrame:
         import re as _re
 
@@ -1542,9 +1544,12 @@ def _q_graph_callees_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # searcher_sql.go:430-485) expressed natively: Spark 4 supports
     # WITH RECURSIVE, so the driver-loop BFS (graph_mod.bfs) and this
     # declarative twin are both offered; both hash-match the same DuckDB
-    # recursive-CTE oracle. The BFS form stays the default: its fused
-    # ≤4-depth plan broadcasts the frontier, while UnionLoopExec re-runs
-    # the edge subquery per iteration (fine at bounded depth ≤6).
+    # recursive-CTE oracle. The BFS form stays the default: it keeps the
+    # frontier on the driver and runs one broadcast semi-join scan of
+    # the stored edges per level, while UnionLoopExec re-runs the edge
+    # subquery per iteration (fine at bounded depth ≤6). The CTE drops a
+    # NULL endpoint through `node <> start`; the BFS drops it by rule
+    # (a NULL endpoint carries no edge) — gated edges hold none.
     start = _chain_start(spark, sf_dir)
     _order_edges(spark, sf_dir).createOrReplaceTempView("_cortex_rec_edges")
     return spark.sql(f"""
@@ -1586,8 +1591,8 @@ def _q_graph_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = graph_mod.shortest_path(
         _order_edges(spark, sf_dir), start, target, max_depth=6
     )
-    return spark.createDataFrame(
-        [(i + 1, int(n)) for i, n in enumerate(path)], "pos INT, node BIGINT"
+    return local_frame(
+        spark, [(i + 1, int(n)) for i, n in enumerate(path)], "pos INT, node BIGINT"
     )
 
 
@@ -4603,9 +4608,11 @@ def _q_sql_ansi_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_graph_bfs_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched traversal gate: 20 roots answered by ONE fused plan
-    (operators/graph.py bfs_multi — broadcast (root, node) frontier,
-    stationary edges, min-depth collapse). The throughput form of the
+    """Batched traversal gate: 20 roots answered by one traversal
+    (operators/graph.py bfs_multi — the roots' frontiers advance
+    together on the driver, one broadcast semi-join scan of the
+    stationary edges per level, min depth per (root, node) kept by
+    driver-side visited sets). The throughput form of the
     reference's per-request graph query (CLAUDE.md:1100); the oracle
     replays it as a multi-root recursive CTE."""
 
@@ -5451,9 +5458,10 @@ def _q_sql_ansi_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     UnionLoopExec) and on DuckDB. This covers the reference's most
     distinctive query family (graph traversal is WITH RECURSIVE SQLite
     CTEs there, CLAUDE.md:569) on the raw-SQL surface; the DataFrame
-    BFS (graph_callees_*) remains the scale path: its fused plan
-    broadcasts the frontier, while UnionLoopExec re-runs the edge
-    subquery per iteration (acceptable at bounded depth <= 6)."""
+    BFS (graph_callees_*) remains the scale path: it keeps the frontier
+    on the driver and runs one broadcast semi-join scan of the edges per
+    level, while UnionLoopExec re-runs the edge subquery per iteration
+    (acceptable at bounded depth <= 6)."""
     reg = _registry(spark, sf_dir)
     reg.table("orders").createOrReplaceTempView("orders")
     return spark.sql(_ANSI_RECURSIVE_SQL)

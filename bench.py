@@ -101,6 +101,7 @@ EXTENDED = [
     "graph_betweenness",  # Brandes fwd sigma BFS + e6-quantized bwd fold
     "dedup_edit_distance",  # PassJoin segment equi-join + lev verify
     "events_seasonal",  # cell-frame centered MA + broadcast phase means
+    "graph_communities_lpa",  # synchronous min-tie label propagation rounds
 ]
 
 HEADLINE = [

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import SEP_PY, SEP_RE, tokens
+from ..session import local_frame
 
 K1 = 1.2
 B = 0.75
@@ -512,8 +513,8 @@ def store_fts_index(index: FtsIndex, path: str) -> None:
     # keeps df in its vocab table): scorers on a stored index read this
     # tiny table instead of re-aggregating the postings per query batch
     term_df.write.mode("overwrite").parquet(tmp + "/term_df")
-    spark.createDataFrame(
-        [(index.n_docs, index.avg_dl)], "n long, avg_dl double"
+    local_frame(
+        spark, [(index.n_docs, index.avg_dl)], "n long, avg_dl double"
     ).write.mode("overwrite").parquet(tmp + "/stats")
     recover_store(path)
     if os.path.exists(path):
@@ -617,7 +618,7 @@ def fts_search_batch(
         pairs.extend((qid, w, len(uniq)) for w in uniq)
 
     spark = index.postings.sparkSession
-    qt = spark.createDataFrame(pairs, ["query_id", "term", "n_terms"])
+    qt = local_frame(spark, pairs, ["query_id", "term", "n_terms"])
 
     # the union-of-terms filter is a literal isin, so it PUSHES DOWN to
     # the posting scan (file pruning on a term-partitioned stored index,

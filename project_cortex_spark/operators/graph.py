@@ -7,17 +7,18 @@ Reference: all eight operations dispatch from
 depth clamp (default 3, max 6 engine / 10 tool, searcher_sql.go:43-50);
 results are deterministic via ORDER BY depth, id (searcher_sql.go:425).
 
-Spark-first design: a traversal is a driver-controlled loop of
-frontier-edge equi-joins (≤10 iterations by the same clamp). The
-frontier is broadcast (it is bounded by branching factor x depth), so
-the edge DataFrame is never shuffled — each level is a map-side hash
-join over the in-place edges. The visited set is maintained with a
-left_anti join, which also terminates cycles (the reference's in-memory
-visited set, searcher_sql.go:185-209). If a use case ever produces a
-frontier too large to broadcast (transitive closure over a dense
-graph), switch to hash-partitioning both sides on the join key once and
-iterating shuffle-free; for the reference's bounded code-graph queries
-the broadcast plan is strictly better.
+Spark-first design: a traversal (callers, callees, impact, bfs_multi,
+shortest_path) keeps its frontier and visited set on the driver, like
+the reference's in-memory visited set (searcher_sql.go:185-209). Each
+level is one broadcast scan: the frontier's distinct nodes, as a small
+local relation, are broadcast-joined to the stationary edge table, and
+the scan's matching (src, dst) pairs are collected. Min depth, the visited set
+and path choice are then set operations on the driver, and the result
+comes back as a local relation already in contract order — the edge
+table is never shuffled and no distinct, union or sort runs in Spark.
+This costs no new scale limit: broadcasting the frontier already
+shipped every level's nodes through the driver, so the driver holds the
+same bytes it did before, now without a per-level plan over them.
 """
 
 from __future__ import annotations
@@ -27,6 +28,9 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..session import local_frame
 
 MAX_DEPTH = 10  # tool-level clamp (internal/mcp/graph_tool.go:30-55)
 DEFAULT_DEPTH = 3
@@ -38,17 +42,6 @@ def _clamp_depth(depth: int) -> int:
 
 def _union_all(frames: list) -> DataFrame:
     return reduce(DataFrame.unionByName, frames)
-
-
-def _start_frame(e: DataFrame, rows: list, cols: list) -> DataFrame:
-    """Start-node frame for a traversal over ``e`` (node column ``_src``).
-    An empty start list has no schema to infer; it gets the edge node
-    dtype, so every traversal of no start nodes is a typed empty frame."""
-    spark = e.sparkSession
-    if rows:
-        return spark.createDataFrame(rows, cols)
-    node_dt = dict(e.dtypes)["_src"]
-    return spark.createDataFrame([], ", ".join(f"{c} {node_dt}" for c in cols))
 
 
 def _frontier_levels(
@@ -83,6 +76,68 @@ def _frontier_levels(
     return levels
 
 
+def _walk(
+    edges: DataFrame, roots: dict, *, depth: int, src: str, dst: str, until=None
+) -> tuple:
+    """The one traversal kernel: a BFS per root label, all roots
+    advanced together, one broadcast scan of the edges per level (two
+    Spark jobs: the frontier's broadcast and the scan).
+
+    ``roots`` maps a label to its start nodes. Returns ``(types,
+    levels)``: ``types`` maps ``_src``/``_dst`` to the edge projection's
+    column types, and ``levels[label]`` is ``[level 0, level 1, ...]``, level d
+    a dict {node first reached at depth d: its parent at depth d-1}
+    (level 0 maps the start nodes to None). A level lists its nodes in
+    lexicographic order of their least path from the root: the parent
+    is the predecessor whose own path is least, ties by node. The walk
+    stops after ``depth`` levels, when every frontier is empty, or once
+    a level reaches ``until``. A NULL endpoint carries no edge.
+
+    Per level, the frontier's distinct nodes become a local relation
+    (:func:`local_frame`) that is broadcast-joined (left semi) to the
+    stationary edge projection, and the scan's (src, dst) pairs are
+    collected; the visited sets and the min depth are driver-side set
+    operations, so no level plans a distinct, union or sort.
+
+    One form, no fast path. One frontier scan of a 2M-edge parquet
+    table on 4 cores: a ``Column.isin(<python list>)`` filter is faster
+    on a tiny frontier (0.09 s vs 0.18 s at one node), but PySpark
+    builds one py4j literal per value, so it took 2.7 s at 10k frontier
+    nodes and 26.8 s at 100k. The broadcast local relation took 0.32 s
+    and 1.7 s on the same inputs, and a hand-written
+    ``expr("_src IN (...)")`` 0.51 s and 4.6 s."""
+    spark = edges.sparkSession
+    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).dropna()
+    key = StructType([e.schema["_src"]])
+    levels = {r: [dict.fromkeys(s)] for r, s in roots.items()}
+    seen = {r: set(s) for r, s in roots.items()}
+    for _ in range(depth):
+        frontier = {u for lv in levels.values() for u in lv[-1]}
+        if not frontier:
+            break
+        hits = e.join(
+            F.broadcast(local_frame(spark, [(u,) for u in frontier], key)),
+            "_src",
+            "left_semi",
+        ).collect()
+        adj: dict = {}
+        for u, v in hits:
+            adj.setdefault(u, []).append(v)
+        for vs in adj.values():
+            vs.sort()
+        for r, lv in levels.items():
+            nxt: dict = {}
+            for u in lv[-1]:
+                for v in adj.get(u, ()):
+                    if v not in seen[r] and v not in nxt:
+                        nxt[v] = u
+            seen[r].update(nxt)
+            lv.append(nxt)
+        if any(until in lv[-1] for lv in levels.values()):
+            break
+    return dict(e.dtypes), levels
+
+
 def bfs(
     edges: DataFrame,
     start: list,
@@ -94,87 +149,26 @@ def bfs(
 ) -> DataFrame:
     """Transitive closure to ``depth`` hops: (node, depth) with minimum
     depth per node, start nodes excluded (callers/callees semantics,
-    searcher_sql.go:373-485). ``reverse=True`` walks dst->src (callers).
-    An empty ``start`` list yields no rows, typed like the edge columns.
+    searcher_sql.go:373-485), ordered by (depth, node). ``reverse=True``
+    walks dst->src (callers). An edge with a NULL endpoint carries no
+    edge. An empty ``start`` list yields no rows, typed like the edge
+    columns.
 
-    Level-synchronous BFS: a node's first appearance is its minimum
-    depth, so the visited anti-join both dedupes and breaks cycles.
+    Every start node is level 0 of one :func:`_walk`, so a node's first
+    level is its minimum depth and the visited set both dedupes and
+    breaks cycles. Against the former fused plan (a union of per-level
+    distinct joins, min-depth aggregate, start anti-join, sort) on
+    perfbench's seed-1 query tables, 4 cores, one JVM, 12 interleaved
+    pairs: callees at depth 3 678 -> 250 ms median, 11 -> 6 Spark jobs,
+    faster in 12/12.
     """
-    depth = _clamp_depth(depth)
     if reverse:
         src, dst = dst, src
-    if depth <= 4:
-        # small fixed depth: ONE fused lazy plan (a chain of ≤4 joins +
-        # a min-depth aggregate) instead of one driver-synchronized job
-        # per level — the per-level isEmpty/checkpoint round-trips cost
-        # more than the wasted work of skipping early exit at this depth
-        return _bfs_fused(edges, start, depth=depth, src=src, dst=dst)
-    # the frontier is tiny (bounded by branching factor); broadcasting it
-    # means the edge frame is NEVER shuffled — each level is a map-side
-    # hash join over the in-place edges
-    # cache the (possibly expensively derived) edge frame for the loop:
-    # each level is its own job and would otherwise recompute the lineage
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).cache()
-
-    def expand(frontier: DataFrame, level: int) -> DataFrame:
-        return (
-            e.join(F.broadcast(frontier), frontier["node"] == e["_src"], "inner")
-            .select(F.col("_dst").alias("node"))
-            .distinct()
-            .withColumn("depth", F.lit(level))
-        )
-
-    try:
-        level0 = _start_frame(e, [(s,) for s in start], ["node"])
-        levels = _frontier_levels(
-            level0.withColumn("depth", F.lit(0)),
-            expand,
-            ["node"],
-            depth=depth,
-            hint=F.broadcast,
-        )
-    finally:
-        e.unpersist()
-    return _union_all(levels[1:] or [levels[0].filter(F.lit(False))]).orderBy(
-        "depth", "node"
+    types, levels = _walk(
+        edges, {0: start}, depth=_clamp_depth(depth), src=src, dst=dst
     )
-
-
-def _bfs_fused(
-    edges: DataFrame, start: list, *, depth: int, src: str, dst: str
-) -> DataFrame:
-    """Depth-unrolled BFS as one declarative plan: level k = distinct
-    successors of level k-1 (broadcast frontier, edges stationary), all
-    levels unioned, min(depth) per node, start nodes anti-joined out.
-    Identical output to the loop form — a node revisited on a longer
-    path or via a cycle is collapsed by the min-depth aggregate instead
-    of the per-level visited set. No driver actions, so Spark schedules
-    the whole traversal as one job.
-
-    Not :func:`bfs_multi` with one root label for every start node:
-    without a root column the optimizer pushes the start-node anti-join
-    down to the edge scan and every join and distinct keys on one
-    BIGINT. Measured on the sf0.1 callees_d3 traversal on 4 cores,
-    interleaved in one JVM: 0.92 s median here vs 1.17 s through the
-    (root, node) plan, slower in 12 of 12 pairs."""
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    start_df = _start_frame(e, [(s,) for s in start], ["node"])
-    frontier = start_df
-    levels = []
-    for level in range(1, depth + 1):
-        frontier = (
-            e.join(F.broadcast(frontier), frontier["node"] == e["_src"])
-            .select(F.col("_dst").alias("node"))
-            .distinct()
-        )
-        levels.append(frontier.withColumn("depth", F.lit(level)))
-    return (
-        _union_all(levels)
-        .groupBy("node")
-        .agg(F.min("depth").alias("depth"))
-        .join(F.broadcast(start_df), "node", "left_anti")
-        .orderBy("depth", "node")
-    )
+    rows = [(v, d) for d, lv in enumerate(levels[0]) if d for v in sorted(lv)]
+    return local_frame(edges.sparkSession, rows, f"node {types['_dst']}, depth int")
 
 
 def callees(edges: DataFrame, start: list, *, depth: int = DEFAULT_DEPTH, **kw) -> DataFrame:
@@ -196,39 +190,36 @@ def bfs_multi(
     dst: str = "dst",
     reverse: bool = False,
 ) -> DataFrame:
-    """Batched traversal: ONE fused plan answering a BFS per start node
-    — (root, node, depth) with minimum depth per (root, node), the root
-    itself excluded from its own result (same callers/callees contract
-    as :func:`bfs`, searcher_sql.go:373-485).
+    """Batched traversal: a BFS per start node — (root, node, depth)
+    with minimum depth per (root, node), the root itself excluded from
+    its own result (same callers/callees contract as :func:`bfs`,
+    searcher_sql.go:373-485), ordered by (root, depth, node). An edge
+    with a NULL endpoint carries no edge; ``root`` is typed like the
+    edge's source column.
 
     This is the throughput form of the reference's per-request graph
-    query (~1-20 ms each, CLAUDE.md:1100): N roots amortize scheduling
-    and the edge scan across one job. The frontier carries (root, node)
-    pairs — bounded by N x branching — and is BROADCAST each level, so
-    the edge table is never shuffled; the min-depth aggregate collapses
-    revisits and cycles exactly like the single-root fused plan.
+    query (~1-20 ms each, CLAUDE.md:1100): every root is a label of one
+    :func:`_walk`, so N roots share one broadcast scan per level — the
+    union of their frontiers is broadcast once, the edge table never
+    shuffled.
+    20 roots at depth 3 against the former fused (root, node) plan, on
+    perfbench's seed-1 query tables (4 cores, one JVM, 12 interleaved
+    pairs): 547 -> 155 ms median, 12 -> 6 Spark jobs, faster in 12/12.
     """
-    depth = _clamp_depth(depth)
     if reverse:
         src, dst = dst, src
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    start_df = _start_frame(e, [(s, s) for s in starts], ["root", "node"])
-    frontier = start_df
-    levels = []
-    for level in range(1, depth + 1):
-        frontier = (
-            e.join(F.broadcast(frontier), frontier["node"] == e["_src"])
-            .select("root", F.col("_dst").alias("node"))
-            .distinct()
-        )
-        levels.append(frontier.withColumn("depth", F.lit(level)))
-    return (
-        _union_all(levels)
-        .groupBy("root", "node")
-        .agg(F.min("depth").alias("depth"))
-        .join(F.broadcast(start_df), ["root", "node"], "left_anti")
-        .orderBy("root", "depth", "node")
+    types, levels = _walk(
+        edges, {s: [s] for s in starts}, depth=_clamp_depth(depth), src=src, dst=dst
     )
+    rows = [
+        (r, v, d)
+        for r in sorted(levels)
+        for d, lv in enumerate(levels[r])
+        if d
+        for v in sorted(lv)
+    ]
+    out = f"root {types['_src']}, node {types['_dst']}, depth int"
+    return local_frame(edges.sparkSession, rows, out)
 
 
 def shortest_path(
@@ -240,42 +231,39 @@ def shortest_path(
     src: str = "src",
     dst: str = "dst",
 ) -> list:
-    """G7: one shortest path source->target as a node list ([] if none).
+    """G7: one shortest path source->target as a node list: ``[]`` if
+    ``target`` is not reachable within ``max_depth`` hops, ``[source]``
+    if ``source == target``. An edge with a NULL endpoint carries no
+    edge.
 
-    BFS with path accumulation in an array column; cycle-safe via
-    array_contains. Ties broken by lexicographic path order so the result
-    is deterministic (the reference returns its in-memory BFS's first hit,
-    searcher_sql.go:185-209; we pin a total order instead).
+    Ties are broken by lexicographic path order so the result is
+    deterministic (the reference returns its in-memory BFS's first hit,
+    searcher_sql.go:185-209; we pin a total order instead): a
+    :func:`_walk` from ``source`` that stops at the level reaching
+    ``target``, then the target's parent chain back to the source.
+    Against the former loop (per level: orderBy().take, path-array
+    join, min-path aggregate, localCheckpoint, isEmpty) on perfbench's
+    seed-1 query tables (4 cores, one JVM, 12 interleaved pairs): a
+    4-hop path 749 -> 192 ms median, 22 -> 8 Spark jobs, faster in
+    12/12.
     """
-    max_depth = _clamp_depth(max_depth)
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")).cache()
-    frontier = spark.createDataFrame([(source, [source])], ["node", "path"])
-    try:
-        for _ in range(max_depth):
-            hit = (
-                frontier.filter(F.col("node") == F.lit(target)).orderBy("path").take(1)
-            )
-            if hit:
-                return list(hit[0]["path"])
-            frontier = (
-                e.join(F.broadcast(frontier), frontier["node"] == e["_src"], "inner")
-                .filter(~F.array_contains(F.col("path"), F.col("_dst")))
-                .select(
-                    F.col("_dst").alias("node"),
-                    F.concat(F.col("path"), F.array(F.col("_dst"))).alias("path"),
-                )
-            )
-            # keep one (lexicographically least) path per node: same-length
-            # paths are interchangeable for shortestness
-            frontier = frontier.groupBy("node").agg(F.min("path").alias("path"))
-            frontier = frontier.localCheckpoint(eager=True)
-            if frontier.isEmpty():
-                return []
-        hit = frontier.filter(F.col("node") == F.lit(target)).orderBy("path").take(1)
-        return list(hit[0]["path"]) if hit else []
-    finally:
-        e.unpersist()
+    if source == target:
+        return [source]
+    _, levels = _walk(
+        edges,
+        {0: [source]},
+        depth=_clamp_depth(max_depth),
+        src=src,
+        dst=dst,
+        until=target,
+    )
+    lv = levels[0]
+    if target not in lv[-1]:
+        return []
+    path = [target]
+    for level in reversed(lv[1:]):
+        path.append(level[path[-1]])
+    return path[::-1]
 
 
 def neighbors(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..functions.vector import dot_product, similarity_score
+from ..session import local_frame
 
 
 def knn_topk(
@@ -110,7 +111,7 @@ def knn_join(
     cid_dt = dict(corpus.dtypes)[corpus_id]
     schema = f"{query_id} {qid_dt}, {corpus_id} {cid_dt}, score double"
     if not qrows:
-        return corpus.sparkSession.createDataFrame([], schema + ", rank int")
+        return local_frame(corpus.sparkSession, [], schema + ", rank int")
     bad_q = [r[0] for r in qrows if r[1] is None]
     if bad_q:
         # corpus-side NULL vectors score NULL; a NULL QUERY vector is a

@@ -29,6 +29,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _h32(prefix: str, col: F.Column) -> F.Column:
     """First 32 bits of md5(prefix || key) as a non-negative BIGINT —
@@ -302,7 +304,7 @@ def quantiles_on_cells(
         F.sum("cnt").alias("cnt")
     )
     spark = cells.sparkSession
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
+    qdf = local_frame(spark, [(float(q),) for q in qs], "q double")
     counts = merged.groupBy(group_col).agg(F.sum("cnt").alias("n"))
     # the targets side re-reads the same cells lineage as `stepped`;
     # rename its group key so the self-join resolves unambiguously

@@ -4,12 +4,13 @@ the graph traversals?
 
 Variants per traversal (graph_callees_d3, graph_callers_d2):
   A in-place   edges = window(lead) over orders, derived inside the plan
-               (the shipping configuration; the fused ≤4-depth BFS embeds
-               the derivation once per level)
+               (the shipping configuration at the time; the driver-frontier
+               BFS re-derives it in every level's job)
   B parquet    edges materialized once to plain parquet, traversal scans
                the 2-column file per level
   C bucketed   edges materialized to a bucketed+sorted-by-src table.
-               NOTE: the BFS broadcasts the frontier, so there is no
+               NOTE: each BFS level broadcasts the driver's frontier
+               into a semi-join with the edges, so there is no
                shuffle for bucketing to remove — any C-vs-B delta
                isolates bucket metadata/sort effects, and the honest
                expectation is parity.

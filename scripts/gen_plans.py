@@ -18,7 +18,7 @@ PICKS = {
     "dsl_revenue_by_nation": "3-table join + agg: broadcast dims, partial aggs, pushed filters",
     "knn_topk": "exact KNN: narrow scan + codegen scoring + TakeOrderedAndProject (no global sort)",
     "dedup_simhash_banded": "exact pigeonhole banding: equi-join on band values, no nested loop",
-    "graph_callees_d3": "fused depth-3 BFS: one declarative plan, edges never shuffled",
+    "graph_callees_d3": "depth-3 BFS, frontier on the driver: the result is a local relation; each level was one broadcast semi-join scan of the edges, no shuffle",
     "join_asof": "as-of join: ONE shuffle (union + window), no range probe",
     "events_sessionize": "gap sessions: single shuffle on user_id, window assembly",
     "pipeline_chunk_markdown": "structure-aware chunking: zero Exchange (narrow Arrow map)",
@@ -27,7 +27,7 @@ PICKS = {
     "text_lm_score": "bigram LM: two count aggregates with map-side partials, natural-key joins, 1-row broadcast vocab",
     "text_c4_clean": "C4 cleaning: zero Exchange — line rules are collection expressions at scan bandwidth",
     "embed_quantize": "int8 re-encode: zero Exchange, pure codegen projection",
-    "graph_callees_cte": "native WITH RECURSIVE (UnionLoop): the declarative twin of the fused BFS",
+    "graph_callees_cte": "native WITH RECURSIVE (UnionLoop): the declarative twin of the driver-frontier BFS",
     "dsl_tpch_q5": "six-way join chain from the JSON DSL: every dim broadcast at this SF (AQE re-plans at scale), no sort-merge",
     "join_salted": "skew-mitigated join: salt column on the probe side, replicated build side, salt dropped before the aggregate",
     "corpus_contamination": "near-dup decontamination: fan-out shingle projection, benchmark side broadcast — corpus never shuffles through the join",
@@ -72,7 +72,7 @@ PICKS = {
     "graph_communities_lpa": "label propagation: per round the |V|-row label frame BROADCASTS onto stationary edges; the argmax window reuses the (node,label) count aggregate's partitioning (A/B-measured vs an aggregate-only rewrite: 45 s vs 75 s at sf1)",
     "text_source_divergence": "source KL: two map-side-partial postings aggregates + a natural-key term join; contributions are scaled BIGINTs so the final sum is an integer fold",
     "dedup_keep_best": "precedence dedup: ONE window over the content hash (high-cardinality partition key); the audit join reuses the same hash partitioning",
-    "graph_bfs_multi": "batched 20-root traversal: ONE fused plan, (root, node) frontier broadcast each level, edges never shuffled, min-depth collapse",
+    "graph_bfs_multi": "batched 20-root traversal: the roots' frontiers advance together on the driver, one broadcast semi-join scan of the edges per level, no shuffle; the result is a local relation",
     "fts_batch_topk": "batched keyword search: ONE broadcast (query terms, carrying n_terms), df AND dl ride in the stored posting row so there are NO other broadcast-build jobs; BM25 contribution computed MAP-SIDE so the single data-sized exchange (~25k rows/partition small-scale, 5M cap large-scale) moves only (query_id, doc_id, contrib, n_terms); AND-match + aggregate + window top-k all reuse that one partitioning",
     "agg_tpch_q21_shape": "correlated EXISTS + NOT EXISTS (inequality on the correlation alias): LEFT SEMI then LEFT ANTI on the SAME orderkey shuffle, anti build side pre-filtered to returned lines, supplier dim broadcast",
     "media_bmp_roundtrip": "real BMP decode: two narrow Arrow-batched maps (synthesize, decode), zero Exchange",

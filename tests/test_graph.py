@@ -148,10 +148,52 @@ def test_bfs_cycle_termination(fixture_edges):
 def test_shortest_path_known(fixture_edges):
     assert shortest_path(fixture_edges, 1, 4) == [1, 2, 3, 4]
     assert shortest_path(fixture_edges, 5, 2) == [5, 6, 1, 2]
+    assert shortest_path(fixture_edges, 3, 3) == [3]
 
 
 def test_shortest_path_none(fixture_edges):
     assert shortest_path(fixture_edges, 1, 8) == []
+    assert shortest_path(fixture_edges, 1, 4, max_depth=2) == []
+
+
+def test_traversals_drop_null_endpoints(spark):
+    """A NULL endpoint carries no edge: (1, NULL) and (NULL, 4) are
+    never walked, in either direction and at any depth, and produce no
+    NULL row."""
+    edges = spark.createDataFrame(
+        [(1, None), (1, 2), (2, 3), (None, 4), (3, 1)], "src bigint, dst bigint"
+    )
+    for depth in (3, 6):
+        assert callees(edges, [1], depth=depth).collect() == [(2, 1), (3, 2)]
+        assert callers(edges, [1], depth=depth).collect() == [(3, 1), (2, 2)]
+    assert graph.bfs_multi(edges, [1, 2], depth=3).collect() == [
+        (1, 2, 1), (1, 3, 2), (2, 3, 1), (2, 1, 2),
+    ]
+    assert graph.bfs_multi(edges, [4], depth=3, reverse=True).collect() == []
+    assert shortest_path(edges, 1, 4) == []
+    assert shortest_path(edges, 2, 1) == [2, 3, 1]
+
+
+def test_traversal_runs_two_jobs_per_level(fixture_edges):
+    """callees at depth 3 runs at most 2 Spark jobs per level (the
+    broadcast of the frontier and the semi-join scan); the result and
+    every frontier are local relations, which run no job of their own."""
+    spark = fixture_edges.sparkSession
+    sc = spark.sparkContext
+    group = "test_traversal_runs_two_jobs_per_level"
+    sc.setJobGroup(group, group)
+    try:
+        rows = callees(fixture_edges, [1], depth=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == [(2, 1), (5, 1), (3, 2), (6, 2), (4, 3)]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2 * 3
+
+    from project_cortex_spark.session import local_frame
+
+    frame = local_frame(spark, [(1,), (2,)], "node bigint")
+    plan = frame._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
 
 
 def test_neighbors(fixture_edges):

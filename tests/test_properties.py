@@ -1020,13 +1020,15 @@ def test_node_similarity_matches_python_model(spark, raw_edges):
         min_size=1,
         max_size=30,
     ),
-    st.integers(1, 4),
+    st.integers(1, 10),
+    st.booleans(),
 )
-def test_bfs_multi_matches_python_model(spark, raw_edges, depth):
-    """Model-based fuzz: the batched multi-root traversal vs a direct
-    per-root BFS over random digraphs (cycles, self-loops filtered,
-    disconnected parts) — min depth per (root, node), root excluded."""
-    from project_cortex_spark.operators.graph import bfs_multi
+def test_bfs_multi_matches_python_model(spark, raw_edges, depth, reverse):
+    """Model-based fuzz: the batched multi-root traversal, and a
+    single-root bfs per root, vs a direct per-root BFS over random
+    digraphs (cycles, self-loops filtered, disconnected parts) — min
+    depth per (root, node), root excluded, rows in contract order."""
+    from project_cortex_spark.operators.graph import bfs, bfs_multi
 
     edges = sorted({(a, b) for a, b in raw_edges if a != b})
     if not edges:
@@ -1034,15 +1036,16 @@ def test_bfs_multi_matches_python_model(spark, raw_edges, depth):
     nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
     roots = nodes[::2] or [nodes[0]]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        (r["root"], r["node"]): r["depth"]
-        for r in bfs_multi(df, roots, depth=depth).collect()
-    }
+    got = [
+        tuple(r) for r in bfs_multi(df, roots, depth=depth, reverse=reverse).collect()
+    ]
 
     adj: dict[int, set[int]] = {}
     for a, b in edges:
+        if reverse:
+            a, b = b, a
         adj.setdefault(a, set()).add(b)
-    want = {}
+    want = []
     for root in roots:
         dist = {root: 0}
         frontier = {root}
@@ -1053,10 +1056,48 @@ def test_bfs_multi_matches_python_model(spark, raw_edges, depth):
             }
             for m in frontier:
                 dist[m] = d
-        for n, d in dist.items():
-            if n != root and d > 0:
-                want[(root, n)] = d
+        closure = sorted((d, n) for n, d in dist.items() if n != root)
+        want.extend((root, n, d) for d, n in closure)
+        single = bfs(df, [root], depth=depth, reverse=reverse).collect()
+        assert [tuple(r) for r in single] == [(n, d) for d, n in closure]
     assert got == want
+
+
+@COMMON
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 7), st.integers(0, 7)),
+        min_size=1,
+        max_size=24,
+    ),
+    st.integers(0, 7),
+    st.integers(0, 7),
+    st.integers(1, 6),
+)
+def test_shortest_path_matches_python_model(spark, raw_edges, s, t, max_depth):
+    """Model-based fuzz over random digraphs with ties and cycles: the
+    lexicographically least among the shortest paths s->t, found by
+    enumerating every simple path of at most ``max_depth`` hops; ``[]``
+    when t is not reachable within ``max_depth``, ``[s]`` when s == t."""
+    from project_cortex_spark.operators.graph import shortest_path
+
+    edges = sorted(set(raw_edges))
+    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    adj: dict[int, list[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, []).append(b)
+
+    paths = []
+    stack = [[s]]
+    while stack:
+        p = stack.pop()
+        if p[-1] == t:
+            paths.append(p)
+            continue
+        if len(p) <= max_depth:
+            stack.extend(p + [m] for m in adj.get(p[-1], ()) if m not in p)
+    want = min(paths, key=lambda p: (len(p), p)) if paths else []
+    assert shortest_path(df, s, t, max_depth=max_depth) == want
 
 
 @COMMON
