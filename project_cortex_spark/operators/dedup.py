@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
 from ..functions.vector import similarity_score
+from .graph import _iterate
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -123,6 +124,11 @@ def shingle_frame(
     return sh.distinct() if distinct else sh
 
 
+def _shingles(docs: DataFrame, shingles_df: DataFrame | None, **kw) -> DataFrame:
+    """The caller's precomputed ``shingles_df``, else ``shingle_frame(docs, **kw)``."""
+    return shingles_df if shingles_df is not None else shingle_frame(docs, **kw)
+
+
 def minhash_signatures(
     docs: DataFrame,
     *,
@@ -140,13 +146,9 @@ def minhash_signatures(
     over the set, so a distinct ``shingles_df`` can be shared with the
     Jaccard stage.
     """
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else shingle_frame(
-            docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n,
-            distinct=False,
-        )
+    sh = _shingles(
+        docs, shingles_df, id_col=id_col, text_col=text_col, shingle_n=shingle_n,
+        distinct=False,
     )
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("sh")))).alias(f"h{i}")
@@ -237,12 +239,8 @@ def jaccard_for_pairs(
     Set sizes and intersections via two joins keyed on doc id + one on
     the shingle value — no per-pair recompute of shingle sets.
     """
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else shingle_frame(
-            docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-        )
+    sh = _shingles(
+        docs, shingles_df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a_sh = sh.select(F.col("doc_id").alias("a"), F.col("sh"))
@@ -330,12 +328,8 @@ def _capped_shingles(
         if n_docs is None:
             n_docs = docs.count()
         max_df = max(max_df or 0, int(max_df_frac * n_docs))
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else shingle_frame(
-            docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-        )
+    sh = _shingles(
+        docs, shingles_df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
     )
     if max_df is not None:
         keep = (
@@ -867,15 +861,7 @@ def embedding_near_duplicates_lsh(
     # an interpreted HOF cosine per pair (at sf0.1 the candidate set is
     # ~10^5-10^6 pairs; HOF verify measured ~7 s vs <1 s vectorized).
     # Same double-precision math as functions.vector.similarity_score.
-    @pandas_udf("double")
-    def pair_scores(va: pd.Series, vb: pd.Series) -> pd.Series:
-        ma = np.array(list(va), dtype=np.float64)
-        mb = np.array(list(vb), dtype=np.float64)
-        dots = np.einsum("ij,ij->i", ma, mb)
-        na = np.linalg.norm(ma, axis=1)
-        nb = np.linalg.norm(mb, axis=1)
-        cos = dots / np.clip(na * nb, 1e-300, None)
-        return pd.Series(1.0 - (1.0 - cos) / 2.0)
+    pair_scores = pair_scores_udf()
 
     va = base.select(F.col("doc_id").alias("a"), F.col("v").alias("va"))
     vb = base.select(F.col("doc_id").alias("b"), F.col("v").alias("vb"))
@@ -912,8 +898,6 @@ def embedding_near_duplicates_ivf(
     candidate volume; grow ``n_centroids`` linearly with corpus size to
     hold cluster populations constant.
     """
-    from pyspark.sql.functions import pandas_udf
-
     from .knn import assign_clusters, train_centroids
 
     cent = (
@@ -926,16 +910,7 @@ def embedding_near_duplicates_ivf(
     assigned = assign_clusters(emb, cent, vec_col=vec_col).select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"), "cluster_id"
     ).cache()  # referenced on both sides of the self-join
-
-    @pandas_udf("double")
-    def pair_scores(va: pd.Series, vb: pd.Series) -> pd.Series:
-        ma = np.array(list(va), dtype=np.float64)
-        mb = np.array(list(vb), dtype=np.float64)
-        dots = np.einsum("ij,ij->i", ma, mb)
-        na = np.linalg.norm(ma, axis=1)
-        nb = np.linalg.norm(mb, axis=1)
-        cos = dots / np.clip(na * nb, 1e-300, None)
-        return pd.Series(1.0 - (1.0 - cos) / 2.0)
+    pair_scores = pair_scores_udf()
 
     x, y = assigned.alias("x"), assigned.alias("y")
     return (
@@ -1132,10 +1107,14 @@ def duplicate_clusters(pairs: DataFrame, *, a: str = "a", b: str = "b") -> DataF
     Iterative min-label propagation (each step: every node adopts the
     smallest label among itself and its neighbors) — converges in
     O(component diameter) rounds; near-dup clusters are shallow, and the
-    loop exits as soon as a round changes nothing. Each round is one
-    shuffle keyed on the node; the edge frame is cached once. This is the
-    step that turns pairwise dedup output into delete lists at corpus
-    scale (pick one survivor per cluster, drop the rest).
+    loop exits as soon as a round changes nothing. The rounds run on
+    :func:`~project_cortex_spark.operators.graph._iterate`: "nothing
+    changed" is the label frame's fingerprint repeating, observed by the
+    round's own checkpoint job, so no comparison join runs per round.
+    Each round is one shuffle keyed on the node; the edge frame is
+    cached once. This is the step that turns pairwise dedup output into
+    delete lists at corpus scale (pick one survivor per cluster, drop
+    the rest).
 
     On shallow near-dup clusters this beats the star alternation of
     :func:`~project_cortex_spark.operators.graph.connected_components`
@@ -1152,42 +1131,33 @@ def duplicate_clusters(pairs: DataFrame, *, a: str = "a", b: str = "b") -> DataF
         .localCheckpoint(eager=True)
         .filter(F.col("a") != F.col("b"))
     )
+    # cached, not checkpointed: the cache's size statistics let each
+    # round's joins pick their strategy (a checkpoint carries none)
     sym = (
         p.select(F.col("a").alias("x"), F.col("b").alias("y"))
         .unionByName(p.select(F.col("b").alias("x"), F.col("a").alias("y")))
         .distinct()
         .cache()
     )
-    labels = (
-        sym.select(F.col("x").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    ).localCheckpoint(eager=True)
+
+    def relax(labels: DataFrame, _) -> DataFrame:
+        neighbor_min = (
+            sym.join(labels, sym["y"] == labels["node"])
+            .groupBy("x")
+            .agg(F.min("label").alias("nmin"))
+        )
+        return labels.join(
+            neighbor_min, labels["node"] == neighbor_min["x"], "left"
+        ).select(
+            "node",
+            F.least(
+                F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
+            ).alias("label"),
+        )
+
+    nodes = sym.select(F.col("x").alias("node")).distinct()
     try:
-        while True:
-            neighbor_min = (
-                sym.join(labels, sym["y"] == labels["node"])
-                .groupBy("x")
-                .agg(F.min("label").alias("nmin"))
-            )
-            new_labels = (
-                labels.join(neighbor_min, labels["node"] == neighbor_min["x"], "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                    ).alias("label"),
-                )
-            ).localCheckpoint(eager=True)
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .isEmpty()
-            )
-            labels = new_labels
-            if changed:  # isEmpty() True = fixpoint reached
-                break
+        labels, _ = _iterate(nodes.withColumn("label", F.col("node")), relax)
     finally:
         sym.unpersist()
     return labels.select(
@@ -1676,12 +1646,8 @@ def ppjoin_pairs(
     the candidate set cannot shrink below the answer and ppjoin's
     df-join + prefix window + verify re-join are pure overhead.
     """
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else shingle_frame(
-            docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-        )
+    sh = _shingles(
+        docs, shingles_df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
     ).cache()
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
     wpos = Window.partitionBy("doc_id").orderBy("_df", "sh")
@@ -1781,12 +1747,8 @@ def similar_pairs_choice(
     if n_docs is None:
         n_docs = docs.count()
     cap = max(max_df or 0, int((max_df_frac or 0.0) * n_docs))
-    sh = (
-        shingles_df
-        if shingles_df is not None
-        else shingle_frame(
-            docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-        )
+    sh = _shingles(
+        docs, shingles_df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
     )
     row = (
         sh.groupBy("sh")

@@ -23,10 +23,9 @@ same bytes it did before, now without a per-level plan over them.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -44,35 +43,178 @@ def _union_all(frames: list) -> DataFrame:
     return reduce(DataFrame.unionByName, frames)
 
 
+def _checkpoint(df: DataFrame, **observe) -> tuple:
+    """Eager local checkpoint of ``df`` plus what the checkpoint's own
+    job observed: ``n`` (row count), ``fp`` (an order-insensitive
+    fingerprint) and every named aggregate in ``observe``. The numbers
+    come from an :class:`Observation` on the checkpointed plan, so no
+    second Spark job (count, isEmpty, first, a fingerprint aggregate)
+    re-reads the frame to produce them.
+
+    ``fp`` is the sum of a per-row xxhash64. An unchanged (n, fp) pair
+    misreads a changed frame only if distinct 64-bit hash deltas cancel
+    exactly — far below hardware soft-error rates, and every capped loop
+    still bounds its rounds. Hashing, NOT a numeric cast of the values:
+    node ids need not be numeric (hierarchy_closure's namespaced 'c:123'
+    strings), and a cast-to-decimal maps those to NULL, whose sum
+    compares NULL == NULL after one round — phantom convergence. The
+    decimal(38,0) accumulator is because a BIGINT sum of xxhash64
+    values overflows under ANSI mode on any non-trivial frame."""
+    obs = Observation()
+    out = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("fp"),
+        *[agg.alias(name) for name, agg in observe.items()],
+    ).localCheckpoint(eager=True)
+    return out, obs.get
+
+
+def _repeated(prev, obs) -> bool:
+    return prev == obs
+
+
+def _emptied(prev, obs) -> bool:
+    return obs["n"] == 0
+
+
+def _iterate(
+    state: DataFrame,
+    step,
+    *,
+    max_rounds: int | None = None,
+    until=_repeated,
+    strict: bool = True,
+    lazy: bool = False,
+    **observe,
+) -> tuple:
+    """The one iterate-and-checkpoint loop every fixpoint operator runs:
+    ``state := step(state, obs)`` until ``until(prev_obs, obs)`` holds.
+    Returns ``(state, obs)`` of the last round.
+
+    Every round's state, the initial one included, is one
+    :func:`_checkpoint`: the lineage is cut, and the observation the
+    stop test reads (``n``, ``fp`` and the named ``observe``
+    aggregates) comes from that checkpoint's own job — no round runs a
+    separate probe job. ``until`` defaults to "the observation
+    repeated", a fixpoint; it also sees the initial observation, with
+    ``prev`` None. ``step`` receives the observation of the state it
+    advances, so a node count for :func:`_bcast` costs nothing. The
+    previous round's state is released as the round ends: the loop
+    drops its only reference, and Spark's context cleaner frees the
+    checkpoint blocks once the frame is garbage-collected.
+
+    ``max_rounds`` (None = uncapped) raises ``RuntimeError`` if the
+    loop has not stopped by then, or with ``strict=False`` ends it
+    quietly (a fixed round budget). ``lazy=True`` is the fixed-round
+    power loop of pagerank, personalized pagerank and LPA: exactly
+    ``max_rounds`` steps with ``localCheckpoint(eager=False)``, no
+    observation and no stop test, so every round folds into the
+    consuming job. Those loops never stop early, so an eager observed
+    round would only add a blocking job per round."""
+    if lazy:
+        for _ in range(max_rounds):
+            state = step(state, None).localCheckpoint(eager=False)
+        return state, None
+    state, obs = _checkpoint(state, **observe)
+    prev, rounds = None, 0
+    while not until(prev, obs):
+        if rounds == max_rounds:
+            if strict:
+                raise RuntimeError(f"no convergence in {max_rounds} rounds")
+            break
+        prev, rounds = obs, rounds + 1
+        state, obs = _checkpoint(step(state, prev), **observe)
+    return state, obs
+
+
+# Above this node count the per-iteration node frame (ranks / labels /
+# keep set) stops being broadcastable and the iterative ops switch to
+# the shuffle-join fallback: the stationary edge list is hash-partitioned
+# on the join key ONCE (localCheckpoint preserves the partitioning), so
+# each round's join exchanges only the |V|-row frame. The A/B at sf1
+# (scripts/ab_graph_broadcast.py, recorded in SCALE.md) measures both
+# paths; the default favors broadcast far past any local scale and is
+# sized for ~16-byte (id, double) rows against executor memory.
+BROADCAST_NODE_LIMIT = 50_000_000
+
+
+def _shuffled(df: DataFrame) -> DataFrame:
+    return df
+
+
+def _bcast(n: int, override: bool | None = None):
+    """The one broadcast-vs-shuffle switch: the join hint for a
+    node-sized frame of ``n`` rows — ``F.broadcast`` up to
+    :data:`BROADCAST_NODE_LIMIT`, else :func:`_shuffled` (the identity:
+    a plain shuffle join). ``override``, an operator's ``broadcast_*``
+    option, forces either side."""
+    if override is None:
+        override = n <= BROADCAST_NODE_LIMIT
+    return F.broadcast if override else _shuffled
+
+
+def _undirected(edges: DataFrame, a: str, b: str, **observe) -> tuple:
+    """The prologue of the operators over an undirected edge list.
+    Returns ``(e, nodes, obs)``:
+
+    - ``e``: (src, dst), both directions of every (a, b) row. A row with
+      a NULL endpoint carries no edge and is dropped. ``e`` is a lazy
+      local checkpoint: the first job that reads it stores it, so an
+      expensive upstream edge pipeline runs once;
+    - ``nodes``: (node, deg), every endpoint with its degree in ``e``,
+      eagerly checkpointed;
+    - ``obs``: that checkpoint's observation — ``n`` nodes, the least
+      and greatest id ``mn`` / ``mx``, and the named ``observe``
+      aggregates over ``nodes``.
+    """
+    one = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).dropna()
+    e = one.unionByName(
+        one.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint(eager=False)
+    nodes, obs = _checkpoint(
+        e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg")),
+        mn=F.min("node"),
+        mx=F.max("node"),
+        **observe,
+    )
+    return e, nodes, obs
+
+
 def _frontier_levels(
     level0: DataFrame,
     expand,
     keys: list,
     *,
     depth: int,
-    hint=lambda df: df,
+    hint=_shuffled,
 ) -> list:
     """The level-synchronous frontier loop every seen-set BFS shares:
     level d = ``expand(level d-1, d)`` minus every key of levels 0..d-1,
     for d = 1..``depth``. Returns ``[level0, level1, ...]`` up to the
     first empty level.
 
-    The anti-join probes ONE running seen frame (one union per level,
-    not a re-union of every prior level), its build side wrapped in the
-    caller's join ``hint``. Each level is checkpointed eagerly: its plan
-    then never references the prior levels' lineage, and the empty-level
-    exit is a probe of materialized data, not a recomputation."""
-    levels, seen = [level0], level0.select(*keys)
-    for d in range(1, depth + 1):
-        nxt = (
-            expand(levels[-1], d)
-            .join(hint(seen), keys, "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        seen = seen.unionByName(nxt.select(*keys))
+    An :func:`_iterate` run whose state is the newest level and whose
+    stop test is "the level's observed row count is 0", so the
+    empty-level exit costs no job of its own. The anti-join probes ONE
+    running seen frame (one union per level, not a re-union of every
+    prior level), its build side wrapped in the caller's join
+    ``hint``."""
+    levels, seen = [], None
+
+    def advance(level: DataFrame, _) -> DataFrame:
+        nonlocal seen
+        levels.append(level)
+        keyed = level.select(*keys)
+        seen = keyed if seen is None else seen.unionByName(keyed)
+        return expand(level, len(levels)).join(hint(seen), keys, "left_anti")
+
+    last, obs = _iterate(
+        level0, advance, max_rounds=depth, until=_emptied, strict=False
+    )
+    # the last level joins unless it came back empty; level 0 always does
+    if obs["n"] or not levels:
+        levels.append(last)
     return levels
 
 
@@ -277,12 +419,10 @@ def neighbors(
     """G3/G4: depth-1 dependencies ('out') / dependents ('in') — a single
     filter + distinct (the reference's imports joins,
     searcher_sql.go:487-513)."""
-    if direction == "out":
-        return edges.filter(F.col(src) == F.lit(node)).select(
-            F.col(dst).alias("node")
-        ).distinct()
-    return edges.filter(F.col(dst) == F.lit(node)).select(
-        F.col(src).alias("node")
+    if direction != "out":
+        src, dst = dst, src
+    return edges.filter(F.col(src) == F.lit(node)).select(
+        F.col(dst).alias("node")
     ).distinct()
 
 
@@ -691,17 +831,6 @@ def triangles_per_node(edges: DataFrame) -> DataFrame:
     )
 
 
-# Above this node count the per-iteration node frame (ranks / labels /
-# keep set) stops being broadcastable and the iterative ops switch to
-# the shuffle-join fallback: the stationary edge list is hash-partitioned
-# on the join key ONCE (localCheckpoint preserves the partitioning), so
-# each round's join exchanges only the |V|-row frame. The A/B at sf1
-# (scripts/ab_graph_broadcast.py, recorded in SCALE.md) measures both
-# paths; the default favors broadcast far past any local scale and is
-# sized for ~16-byte (id, double) rows against executor memory.
-BROADCAST_NODE_LIMIT = 50_000_000
-
-
 def pagerank(
     edges: DataFrame,
     *,
@@ -721,18 +850,21 @@ def pagerank(
 
     Undirected contract: every node has out-degree >= 1, so there is no
     dangling-mass term — pr_{t+1}(v) = (1-d)/N + d * Σ_{u~v} pr_t(u)/deg(u).
+    A row with a NULL endpoint carries no edge; an empty edge list
+    yields no rows.
 
-    Scale notes: each step is one equi-join of the rank frame onto the
-    stationary edge list + one hash aggregate on the destination;
-    lineage is cut with localCheckpoint per step exactly like
-    duplicate_clusters' label propagation. The rank side (|V| rows of
-    (id, double)) gets an explicit broadcast hint — the classic
+    Scale notes: the :func:`_undirected` prologue is one eager job that
+    checkpoints the (node, degree) frame and observes N from that same
+    job. Each step is one equi-join of the rank frame onto the
+    stationary edge list + one hash aggregate on the destination, run
+    by :func:`_iterate`'s fixed-round lazy loop (lineage cut per step,
+    no per-round job of its own). The rank side (|V| rows of (id,
+    double)) gets the :func:`_bcast` hint — the classic
     small-ranks/big-edges shape, so the edge list NEVER shuffles and
     each step costs one broadcast + one partial-aggregated exchange of
-    |V| rows. When |V| outgrows broadcast range (``broadcast_ranks``,
-    auto-switched at BROADCAST_NODE_LIMIT using the node count the
-    algorithm already takes), the fallback hash-partitions the
-    stationary edge list on src ONCE (the partitioning survives the
+    |V| rows. When |V| outgrows broadcast range (``broadcast_ranks``
+    forces either side), the fallback hash-partitions the stationary
+    edge list on src ONCE (the partitioning survives the
     localCheckpoint) so each step's shuffle join exchanges only the
     |V|-row rank frame — A/B-measured at sf1 in
     scripts/ab_graph_broadcast.py / SCALE.md. Skew = hub in-degree,
@@ -740,39 +872,53 @@ def pagerank(
     bounds; on a raw power-law graph the aggregate's map-side partials
     absorb the hot key.
     """
-    dir_edges = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .cache()
-    )
-    deg = dir_edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = deg.select(F.col("src").alias("node")).cache()
-    n = nodes.count()  # driver scalar: node count (one small aggregate)
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= BROADCAST_NODE_LIMIT
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("pr"))
-    out_edges = dir_edges.join(deg, "src").select("src", "dst", "deg")
-    if not broadcast_ranks:
-        out_edges = out_edges.repartition("src")
-    out_edges = out_edges.localCheckpoint(eager=False)
+    e, nodes, obs = _undirected(edges, a, b)
+    n = obs["n"]
+    if n == 0:
+        return nodes.select("node", F.lit(0.0).alias("pr"))
+    bcast = _bcast(n, broadcast_ranks)
+    out_edges = _out_edges(e, nodes, n, bcast)
     base = (1.0 - damping) / n
-    for _ in range(iters):
-        rside = ranks.withColumnRenamed("node", "src")
-        contrib = (
-            out_edges.join(
-                F.broadcast(rside) if broadcast_ranks else rside, "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("deg")).alias("_in"))
-        )
+
+    def power_step(ranks: DataFrame, _) -> DataFrame:
         # undirected contract: every node has deg >= 1, so every node
         # receives at least one contribution — contrib's key set IS the
         # node set and no backfill join against `nodes` is needed
-        ranks = contrib.select(
+        return _contrib(out_edges, ranks, bcast).select(
             "node",
             (F.lit(base) + F.lit(damping) * F.col("_in")).alias("pr"),
-        ).localCheckpoint(eager=False)
+        )
+
+    ranks, _ = _iterate(
+        nodes.select("node", F.lit(1.0 / n).alias("pr")),
+        power_step,
+        max_rounds=iters,
+        lazy=True,
+    )
     return ranks.select("node", F.round("pr", 9).alias("pr"))
+
+
+def _out_edges(e: DataFrame, nodes: DataFrame, n: int, bcast) -> DataFrame:
+    """The stationary (src, dst, deg) edge list of the power loops; for
+    the shuffle fallback of the rank join (``bcast``) hash-partitioned
+    on src once. The degree join itself follows the automatic switch:
+    a checkpoint carries no size statistics, so without the hint a
+    broadcastable degree frame would be sort-merge joined."""
+    out = e.join(
+        _bcast(n)(nodes.withColumnRenamed("node", "src")), "src"
+    ).select("src", "dst", "deg")
+    if bcast is _shuffled:
+        out = out.repartition("src")
+    return out.localCheckpoint(eager=False)
+
+
+def _contrib(out_edges: DataFrame, ranks: DataFrame, bcast) -> DataFrame:
+    """One power step's inflow: (node, _in = Σ_{u~node} pr(u)/deg(u))."""
+    return (
+        out_edges.join(bcast(ranks.withColumnRenamed("node", "src")), "src")
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.sum(F.col("pr") / F.col("deg")).alias("_in"))
+    )
 
 
 def pagerank_personalized(
@@ -792,71 +938,65 @@ def pagerank_personalized(
     tele = 1/|S| on the seed set and 0 elsewhere. The relevance-to-a-
     query-set ranking (similar-items, "related code to this module")
     that global PageRank cannot express; seeds are intersected with the
-    graph's node set first, so ns counts only seeds that exist.
+    graph's node set first, so ns counts only seeds that exist. An empty
+    edge list yields no rows; seeds none of which is a graph node raise.
 
     Same physical shape as :func:`pagerank` (stationary edge list,
     |V|-row rank frame broadcast per step or the shuffle fallback past
-    BROADCAST_NODE_LIMIT, lineage cut per step); the static teleport
+    BROADCAST_NODE_LIMIT, lineage cut per step); the static seed-flag
     frame replaces the scalar base term via one |V|-row left join per
     step — at 100 TB that join rides the aggregate's own partitioning.
-    The oracle unrolls the identical CTE chain with a CASE teleport.
+    ns is observed by the eager checkpoint of that frame, not counted
+    by a job of its own. The oracle unrolls the identical CTE chain
+    with a CASE teleport.
     """
-    dir_edges = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .cache()
-    )
-    deg = dir_edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = deg.select(F.col("src").alias("node")).cache()
-    n = nodes.count()
-    seed_nodes = nodes.join(
+    e, nodes, obs = _undirected(edges, a, b)
+    n = obs["n"]
+    if n == 0:
+        return nodes.select("node", F.lit(0.0).alias("pr"))
+    bcast = _bcast(n, broadcast_ranks)
+    seed_nodes = nodes.select("node").join(
         seeds.select(F.col(seed_col).alias("node")).distinct(),
         "node",
         "left_semi",
-    ).cache()
-    ns = seed_nodes.count()
+    )
+    flags, fobs = _checkpoint(
+        nodes.join(bcast(seed_nodes.withColumn("_s", F.lit(1))), "node", "left")
+        .select("node", F.col("_s").isNotNull().alias("seed")),
+        ns=F.count_if("seed"),
+    )
+    ns = fobs["ns"]
     if ns == 0:
         raise ValueError("pagerank_personalized: no seed is a graph node")
-    if broadcast_ranks is None:
-        broadcast_ranks = n <= BROADCAST_NODE_LIMIT
-    tele = (
-        nodes.join(
-            seed_nodes.withColumn("_s", F.lit(1)), "node", "left"
-        )
-        .select(
+    tele = F.when(F.col("seed"), F.lit(1.0 / ns)).otherwise(F.lit(0.0))
+    out_edges = _out_edges(e, nodes, n, bcast)
+
+    def power_step(ranks: DataFrame, _) -> DataFrame:
+        return flags.join(_contrib(out_edges, ranks, bcast), "node", "left").select(
             "node",
-            F.when(F.col("_s").isNotNull(), F.lit(1.0 / ns))
-            .otherwise(F.lit(0.0))
-            .alias("tele"),
+            (
+                F.lit(1.0 - damping) * tele
+                + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
+            ).alias("pr"),
         )
-        .localCheckpoint(eager=True)
+
+    ranks, _ = _iterate(
+        flags.select("node", tele.alias("pr")),
+        power_step,
+        max_rounds=iters,
+        lazy=True,
     )
-    ranks = tele.select("node", F.col("tele").alias("pr"))
-    out_edges = dir_edges.join(deg, "src").select("src", "dst", "deg")
-    if not broadcast_ranks:
-        out_edges = out_edges.repartition("src")
-    out_edges = out_edges.localCheckpoint(eager=False)
-    for _ in range(iters):
-        rside = ranks.withColumnRenamed("node", "src")
-        contrib = (
-            out_edges.join(
-                F.broadcast(rside) if broadcast_ranks else rside, "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("deg")).alias("_in"))
-        )
-        ranks = (
-            tele.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("tele")
-                    + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=False)
-        )
     return ranks.select("node", F.round("pr", 9).alias("pr"))
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(node, deg) over an undirected a<b edge list."""
+    return (
+        edges.select(F.col("a").alias("node"))
+        .union(edges.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
 
 
 def kcore(
@@ -881,67 +1021,51 @@ def kcore(
     shrinking: surviving-node sets only ever shrink, so an unchanged
     keep COUNT proves an unchanged keep set, which proves the fixpoint —
     the engine skips the remaining no-op rounds while the oracle's extra
-    unrolled CTE rounds change nothing (measured: the sf0.1 gated query
-    reaches its fixpoint at round 2 of 4; the probe is one count on the
-    node-sized checkpointed keep frame vs two 2|E| semi joins saved per
-    skipped round).
+    unrolled CTE rounds change nothing (the sf0.1 gated query reaches
+    its fixpoint at round 2 of 4).
+
+    The loop is :func:`_iterate` over the (node, deg) frame of the
+    surviving subgraph: each round's eager checkpoint observes its node
+    count and its keep count (deg >= k), so the fixpoint test and the
+    broadcast switch ride the round's own job — no count job per round.
 
     Scale notes: each round is one map-side-partial degree aggregate +
     two semi joins against the (shrinking) keep set — the keep frame is
-    node-sized and broadcastable; `localCheckpoint(eager=False)`
-    truncates the 3-ops-per-round lineage like the PageRank loop.
-    Past BROADCAST_NODE_LIMIT nodes (``broadcast_keep``, auto-switched
-    with one upfront distinct-count) the semi joins run as shuffle
-    joins — the edge list cannot be pre-partitioned for BOTH endpoint
-    keys, so the fallback honestly pays two exchanges per round
-    (A/B at sf1: scripts/ab_graph_broadcast.py, SCALE.md).
+    node-sized and broadcastable; the surviving edge list is cut by a
+    lazy `localCheckpoint` per round. Past BROADCAST_NODE_LIMIT nodes
+    (``broadcast_keep`` forces either side of :func:`_bcast`) the semi
+    joins run as shuffle joins — the edge list cannot be pre-partitioned
+    for BOTH endpoint keys, so the fallback honestly pays two exchanges
+    per round (A/B at sf1: scripts/ab_graph_broadcast.py, SCALE.md).
     """
-    # round 1 reads the input THREE times (two degree arms + the join
-    # base); without a cache each read recomputes the upstream edge
-    # pipeline (for cooccurrence_edges: several shuffles) from scratch
-    surv = edges.select("a", "b").cache()
-    prev_keep = None
-    for _ in range(rounds):
-        deg = (
-            surv.select(F.col("a").alias("node"))
-            .union(surv.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        if broadcast_keep is None:
-            # the broadcast-vs-shuffle switch needs |V| of the ORIGINAL
-            # graph — which is exactly round 1's degree frame's row
-            # count. Checkpoint it and count THAT instead of running a
-            # separate full-2|E| distinct (r10, guide §1.2 — one fewer
-            # whole pass; interleaved A/B min 3.36 -> 2.46 s through
-            # the gated query).
-            deg = deg.localCheckpoint(eager=True)
-            broadcast_keep = deg.count() <= BROADCAST_NODE_LIMIT
-        # eager node-sized checkpoint: the probe count below and the two
-        # semi-join arms all reuse the materialized keep frame instead
-        # of recomputing the degree aggregate
-        keep = (
-            deg.filter(F.col("deg") >= k).select("node")
-            .localCheckpoint(eager=True)
-        )
-        n_keep = keep.count()
-        if n_keep == prev_keep:
-            break  # keep sets only shrink: equal count == fixpoint
-        prev_keep = n_keep
-        ka = keep.withColumnRenamed("node", "a")
-        kb = keep.withColumnRenamed("node", "b")
+    # the input is read by both degree arms and the join base; the lazy
+    # checkpoint keeps the upstream edge pipeline (for
+    # cooccurrence_edges: several shuffles) from re-running per read
+    surv = edges.select("a", "b").localCheckpoint(eager=False)
+
+    def peel(deg: DataFrame, obs: dict) -> DataFrame:
+        nonlocal surv
+        bcast = _bcast(obs["n"], broadcast_keep)
+        keep = deg.filter(F.col("deg") >= k).select("node")
         surv = (
-            surv.join(F.broadcast(ka) if broadcast_keep else ka, "a", "left_semi")
-            .join(F.broadcast(kb) if broadcast_keep else kb, "b", "left_semi")
+            surv.join(bcast(keep.withColumnRenamed("node", "a")), "a", "left_semi")
+            .join(bcast(keep.withColumnRenamed("node", "b")), "b", "left_semi")
             .select("a", "b")
             .localCheckpoint(eager=False)
         )
-    return (
-        surv.select(F.col("a").alias("node"))
-        .union(surv.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core_deg"))
+        return _degrees(surv)
+
+    # keep sets only shrink: an equal keep count is the fixpoint, and
+    # the round that shows it left the surviving edges unchanged
+    deg, _ = _iterate(
+        _degrees(surv),
+        peel,
+        max_rounds=rounds,
+        until=lambda prev, obs: prev is not None and prev["keep"] == obs["keep"],
+        strict=False,
+        keep=F.count_if(F.col("deg") >= k),
     )
+    return deg.withColumnRenamed("deg", "core_deg")
 
 
 def degree_distribution(edges: DataFrame) -> DataFrame:
@@ -951,12 +1075,7 @@ def degree_distribution(edges: DataFrame) -> DataFrame:
     hash aggregates: level 1 shuffles 2|E| endpoint rows with map-side
     partials; level 2's input is |V| rows keyed on the tiny set of
     distinct degrees."""
-    deg = (
-        edges.select(F.col("a").alias("node"))
-        .union(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    deg = _degrees(edges).withColumnRenamed("deg", "degree")
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
@@ -1042,39 +1161,27 @@ def communities_lpa(
     Output: one row per surviving community — label, n_nodes,
     min member id — communities below ``min_size`` dropped.
 
+    A row with a NULL endpoint carries no edge; an empty edge list
+    yields no rows.
+
     Scale notes: per round, one equi-join of the (|V|-row, broadcast)
     label frame onto the stationary directed edge list and one
     (node, label) count + argmax window partitioned on the node — the
     same small-frame-vs-stationary-edges shape as :func:`pagerank`,
-    lineage cut per round with localCheckpoint. The argmax window
-    partitions on high-cardinality node ids, so no skew; hub fan-in is
-    bounded upstream by cooccurrence_edges' max_df cap. Past
-    BROADCAST_NODE_LIMIT nodes (``broadcast_labels``, auto-switched
-    with one upfront distinct-count) the fallback
-    hash-partitions the stationary edges on src once, same as
+    and the same :func:`_undirected` prologue (|V| observed by the node
+    frame's checkpoint) and :func:`_iterate` fixed-round lazy loop. The
+    argmax window partitions on high-cardinality node ids, so no skew;
+    hub fan-in is bounded upstream by cooccurrence_edges' max_df cap.
+    Past BROADCAST_NODE_LIMIT nodes (``broadcast_labels`` forces either
+    side of :func:`_bcast`) the label frame is shuffle-joined and the
+    stationary edges are hash-partitioned on src once, same as
     :func:`pagerank` (A/B at sf1: scripts/ab_graph_broadcast.py,
     SCALE.md).
     """
-    dir_edges = (
-        edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .union(edges.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-    )
-    # ONE distinct-nodes pass serves both the broadcast switch and the
-    # label init (r10, guide §1.2): previously the switch ran its own
-    # distinct+count over the full upstream edge derivation and the
-    # init frame re-ran the identical distinct — two whole passes of an
-    # uncached pipeline for one |V|-row frame.
-    nodes = (
-        dir_edges.select(F.col("src").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if broadcast_labels is None:
-        broadcast_labels = nodes.count() <= BROADCAST_NODE_LIMIT
-    if not broadcast_labels:
-        dir_edges = dir_edges.repartition("src")
-    dir_edges = dir_edges.localCheckpoint(eager=False)
-    labels = nodes.select("node", F.col("node").alias("label"))
+    e, nodes, obs = _undirected(edges, a, b)
+    bcast = _bcast(obs["n"], broadcast_labels)
+    if bcast is _shuffled:
+        e = e.repartition("src").localCheckpoint(eager=False)
     # argmax form MEASURED at sf1: the row_number window over the
     # (node, label) count frame reuses that aggregate's hash
     # partitioning (no exchange, one sort: 45 s/round-chain); the
@@ -1083,18 +1190,23 @@ def communities_lpa(
     win = Window.partitionBy("node").orderBy(
         F.col("c").desc(), F.col("label").asc()
     )
-    for _ in range(rounds):
-        labels = (
-            dir_edges.join(
-                F.broadcast(labels.withColumnRenamed("node", "src")), "src"
-            )
+
+    def propagate(labels: DataFrame, _) -> DataFrame:
+        return (
+            e.join(bcast(labels.withColumnRenamed("node", "src")), "src")
             .groupBy(F.col("dst").alias("node"), "label")
             .agg(F.count(F.lit(1)).alias("c"))
             .withColumn("rk", F.row_number().over(win))
             .filter(F.col("rk") == 1)
             .select("node", "label")
-            .localCheckpoint(eager=False)
         )
+
+    labels, _ = _iterate(
+        nodes.select("node", F.col("node").alias("label")),
+        propagate,
+        max_rounds=rounds,
+        lazy=True,
+    )
     return (
         labels.groupBy("label")
         .agg(
@@ -1104,27 +1216,6 @@ def communities_lpa(
         .filter(F.col("n_nodes") >= min_size)
         .orderBy(F.col("n_nodes").desc(), F.col("label").asc())
     )
-
-
-def _fingerprint(df: DataFrame) -> tuple:
-    """Order-insensitive fingerprint of a loop's state frame for
-    convergence tests: (row count, sum of a per-row xxhash64) in ONE
-    scalar aggregate job. An unchanged fingerprint misreads a changed
-    frame only if distinct 64-bit hash deltas cancel exactly — far below
-    hardware soft-error rates, and every caller's round cap still
-    bounds its loop.
-
-    Hashing, NOT a numeric cast of the values: node ids need not be
-    numeric (hierarchy_closure's namespaced 'c:123' strings), and a
-    cast-to-decimal maps those to NULL, whose sum compares NULL == NULL
-    after one round — phantom convergence. The decimal(38,0)
-    accumulator is because a BIGINT sum of xxhash64 values overflows
-    under ANSI mode on any non-trivial frame."""
-    row = df.agg(
-        F.count(F.lit(1)),
-        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
-    ).collect()[0]
-    return tuple(row)
 
 
 def connected_components(
@@ -1154,10 +1245,10 @@ def connected_components(
     (no aggregate+join): partition by the center node, m = min(neighbor,
     center); large-star re-points every larger neighbor at m, small-star
     re-points every smaller-or-equal neighbor (and the center) at m.
-    distinct() bounds the frame at the surviving edge count. Lineage is
-    cut per round with localCheckpoint exactly like duplicate_clusters.
-    Convergence = the canonical (child, root) edge set is unchanged
-    (its :func:`_fingerprint`, one scalar aggregate per round).
+    distinct() bounds the frame at the surviving edge count. The rounds
+    run on :func:`_iterate`, like duplicate_clusters' label propagation:
+    convergence = the canonical (child, root) edge set is unchanged,
+    read from the fingerprint each round's checkpoint job observes.
     """
     p = (
         pairs.select(F.col(a).alias("x"), F.col(b).alias("y"))
@@ -1171,13 +1262,9 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     # canonical undirected form (max side = star center)
-    edges = (
-        p.select(
-            F.greatest("x", "y").alias("x"), F.least("x", "y").alias("y")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = p.select(
+        F.greatest("x", "y").alias("x"), F.least("x", "y").alias("y")
+    ).distinct()
 
     def _large_star(e: DataFrame) -> DataFrame:
         # symmetric view; for each center u: m = min(N(u) + {u}),
@@ -1211,17 +1298,9 @@ def connected_components(
             .distinct()
         )
 
-    sig = _fingerprint(edges)
-    for _ in range(max_rounds):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        new_sig = _fingerprint(edges)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"connected_components: no convergence in {max_rounds} rounds"
-        )
+    edges, _ = _iterate(
+        edges, lambda e, _: _small_star(_large_star(e)), max_rounds=max_rounds
+    )
 
     # converged frame is a star forest: every non-root points at its
     # component min; roots are absent as children
@@ -1260,6 +1339,102 @@ def _max_out_degree(e: DataFrame) -> int:
         .collect()
     )
     return int(row[0]["m"] or 0)
+
+
+def _closed_walks(
+    edges: DataFrame,
+    *,
+    max_len: int,
+    src: str,
+    dst: str,
+    functional: bool | None,
+    walk: list,
+    extend: list,
+    collapse,
+) -> DataFrame:
+    """The multi-origin level-synchronous walk :func:`cycle_members` and
+    :func:`cycle_paths` share: the union, over levels 1..``max_len``, of
+    the (origin, cycle_len, ...) rows of the origins whose frontier
+    returns to them at that level. ``walk`` lists the level-1 frontier
+    columns over the (``_s``, ``_d``) edge frame, ``extend`` the next
+    level's columns over frontier ⋈ edges, and ``collapse`` reduces a
+    level to one row per (origin, node); columns after (origin, node)
+    ride into the closed rows. Closed origins and, off the functional
+    path, already-visited pairs are anti-joined out of the frontier."""
+    max_len = _clamp_depth(max_len)
+    # Checkpoint the (possibly expensively derived) edge frame ONCE —
+    # every level joins it, and without the cut a window-derived edge
+    # set re-runs its lineage per level. r9 (guide §2.4): the frame is
+    # pre-partitioned on the join key `_s`, which localCheckpoint
+    # preserves, so none of the max_len per-level joins re-exchanges
+    # the edge list — at 100 TB that removes max_len-1 full edge-list
+    # shuffles. All per-level checkpoints are LAZY (eager=False): the
+    # lineage cut and single materialization are identical, but the
+    # work folds into the consuming job instead of one blocking driver
+    # job per frame — measured 8.2 -> 6.4 s at sf0.1 on the ring
+    # fixture (~3 blocking jobs per level eliminated); results
+    # bit-identical.
+    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e = (
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+        .repartition(P, "_s")
+        .localCheckpoint(eager=False)
+    )
+    if functional is None:
+        functional = _max_out_degree(e) <= 1
+
+    def level(frontier: DataFrame) -> DataFrame:
+        # with out-degree 1 the rows are already unique per (origin,
+        # node), so the collapsing exchange is skipped
+        return (frontier if functional else collapse(frontier)).localCheckpoint(
+            eager=False
+        )
+
+    def closed(frontier: DataFrame, lvl: int) -> DataFrame:
+        return frontier.filter(F.col("node") == F.col("origin")).select(
+            "origin", F.lit(lvl).alias("cycle_len"), *frontier.columns[2:]
+        )
+
+    # level 1: every edge is a 1-walk; a self-loop closes immediately
+    # (checkpointed like every later level: `found` feeds the final
+    # union and must not replay the collapse at consumption)
+    frontier = level(e.select(*walk))
+    found = closed(frontier, 1)
+    # same close-out discipline as every later level: a self-loop
+    # origin's min is recorded — its other out-edges must not keep it
+    # expanding for max_len more rounds
+    frontier = frontier.filter(F.col("node") != F.col("origin")).join(
+        found.select("origin"), "origin", "left_anti"
+    )
+    visited = frontier.select("origin", "node")
+    out = [found]
+    for lvl in range(2, max_len + 1):
+        # checkpoint the collapsed frontier BEFORE splitting it into
+        # closed/continue: `closed` feeds the final union, and without
+        # the cut its lineage re-runs this level's join + collapse a
+        # second time when the result is consumed (the r9 plan showed
+        # one join+aggregate pair per level under the final Union —
+        # guide §2.4, duplicated subtrees are hidden re-shuffles)
+        frontier = level(frontier.join(e, frontier["node"] == e["_s"]).select(*extend))
+        out.append(closed(frontier, lvl))
+        if lvl == max_len:
+            break
+        # drop origins that just closed (their min is recorded) and
+        # pairs already expanded at an earlier (shorter) level; on the
+        # functional path there is exactly one walk per origin, so the
+        # visited anti-join cannot shrink the frontier bound and is
+        # skipped along with the visited accumulation
+        frontier = frontier.filter(F.col("node") != F.col("origin")).join(
+            out[-1].select("origin"), "origin", "left_anti"
+        )
+        if not functional:
+            frontier = frontier.join(visited, ["origin", "node"], "left_anti")
+        frontier = frontier.localCheckpoint(eager=False)
+        if not functional:
+            visited = visited.unionByName(
+                frontier.select("origin", "node")
+            ).localCheckpoint(eager=False)
+    return _union_all(out)
 
 
 def cycle_members(
@@ -1307,82 +1482,16 @@ def cycle_members(
     the pruning-losslessness argument above, which covers removing the
     pruning as well as applying it).
     """
-    max_len = _clamp_depth(max_len)
-    # Checkpoint the (possibly expensively derived) edge frame ONCE —
-    # every level joins it, and without the cut a window-derived edge
-    # set re-runs its lineage per level. r9 (guide §2.4): the frame is
-    # pre-partitioned on the join key `_s`, which localCheckpoint
-    # preserves, so none of the max_len per-level joins re-exchanges
-    # the edge list — at 100 TB that removes max_len-1 full edge-list
-    # shuffles. All per-level checkpoints are LAZY (eager=False): the
-    # lineage cut and single materialization are identical, but the
-    # work folds into the consuming job instead of one blocking driver
-    # job per frame — measured 8.2 -> 6.4 s at sf0.1 on the ring
-    # fixture (~3 blocking jobs per level eliminated); results
-    # bit-identical.
-    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .repartition(P, "_s")
-        .localCheckpoint(eager=False)
+    res = _closed_walks(
+        edges,
+        max_len=max_len,
+        src=src,
+        dst=dst,
+        functional=functional,
+        walk=[F.col("_s").alias("origin"), F.col("_d").alias("node")],
+        extend=["origin", F.col("_d").alias("node")],
+        collapse=lambda f: f.distinct(),
     )
-    if functional is None:
-        functional = _max_out_degree(e) <= 1
-    # level 1: every edge is a 1-walk; a self-loop closes immediately
-    # (checkpointed like every later level: `found` feeds the final
-    # union and must not replay the distinct at consumption). With
-    # out-degree 1 the edge rows are already unique per origin, so the
-    # distinct exchange is skipped.
-    frontier = e.select(F.col("_s").alias("origin"), F.col("_d").alias("node"))
-    if not functional:
-        frontier = frontier.distinct()
-    frontier = frontier.localCheckpoint(eager=False)
-    found = frontier.filter(F.col("node") == F.col("origin")).select(
-        "origin", F.lit(1).alias("cycle_len")
-    )
-    # same close-out discipline as every later level: a self-loop
-    # origin's min is recorded — its other out-edges must not keep it
-    # expanding for max_len more rounds
-    frontier = frontier.filter(F.col("node") != F.col("origin")).join(
-        found.select("origin"), "origin", "left_anti"
-    )
-    visited = frontier
-    out = [found]
-    for lvl in range(2, max_len + 1):
-        # checkpoint the expanded frontier BEFORE splitting it into
-        # closed/continue: `closed` feeds the final union, and without
-        # the cut its lineage re-runs this level's join+distinct a
-        # second time when the result is consumed (the r9 plan showed
-        # one join+aggregate pair per level under the final Union —
-        # guide §2.4, duplicated subtrees are hidden re-shuffles)
-        frontier = frontier.join(e, frontier["node"] == e["_s"]).select(
-            "origin", F.col("_d").alias("node")
-        )
-        if not functional:
-            frontier = frontier.distinct()
-        frontier = frontier.localCheckpoint(eager=False)
-        closed = frontier.filter(F.col("node") == F.col("origin")).select(
-            "origin", F.lit(lvl).alias("cycle_len")
-        )
-        out.append(closed)
-        if lvl == max_len:
-            break
-        # drop origins that just closed (their min is recorded) and
-        # pairs already expanded at an earlier (shorter) level; on the
-        # functional path there is exactly one walk per origin, so the
-        # visited anti-join cannot shrink the frontier bound and is
-        # skipped along with the visited accumulation
-        frontier = frontier.filter(F.col("node") != F.col("origin")).join(
-            closed.select("origin"), "origin", "left_anti"
-        )
-        if not functional:
-            frontier = frontier.join(visited, ["origin", "node"], "left_anti")
-        frontier = frontier.localCheckpoint(eager=False)
-        if not functional:
-            visited = visited.unionByName(frontier).localCheckpoint(eager=False)
-    res = out[0]
-    for part in out[1:]:
-        res = res.unionByName(part)
     # an origin can appear once per level only via distinct frontiers,
     # and never after it closes — but the last level skips the
     # anti-join, so collapse defensively to the min
@@ -1433,85 +1542,30 @@ def cycle_paths(
     so both are skipped — one exchange + one anti-join + one
     union-checkpoint saved per level, rows identical.
     """
-    max_len = _clamp_depth(max_len)
-    # same r9 layout as cycle_members: edge frame pre-partitioned on the
-    # join key and checkpointed once (no per-level edge re-exchange),
-    # all per-level checkpoints lazy (same single materialization, no
-    # per-frame blocking job — guide §2.4)
-    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .repartition(P, "_s")
-        .localCheckpoint(eager=False)
-    )
-    if functional is None:
-        functional = _max_out_degree(e) <= 1
-    frontier = e.select(
-        F.col("_s").alias("origin"),
-        F.col("_d").alias("node"),
-        F.concat_ws(
-            ">", F.col("_s").cast("string"), F.col("_d").cast("string")
-        ).alias("path"),
-    )
-    if not functional:
-        frontier = frontier.groupBy("origin", "node").agg(
-            F.min("path").alias("path")
-        )
-    # checkpointed like every later level: `found` feeds the final
-    # union and must not replay the aggregate at consumption
-    frontier = frontier.localCheckpoint(eager=False)
-    found = frontier.filter(F.col("node") == F.col("origin")).select(
-        "origin", F.lit(1).alias("cycle_len"), "path"
-    )
-    # close level-1 origins out of the frontier like every later level
-    # does — a self-loop node with other out-edges must not keep
-    # expanding (its min is already recorded)
-    frontier = frontier.filter(F.col("node") != F.col("origin")).join(
-        found.select("origin"), "origin", "left_anti"
-    )
-    visited = frontier.select("origin", "node")
-    out = [found]
-    for lvl in range(2, max_len + 1):
-        # checkpoint the aggregated frontier BEFORE the closed/continue
-        # split (same fix as cycle_members): `closed` feeds the final
-        # union, and un-cut its lineage replays this level's join +
-        # min(path) SortAggregate a second time at consumption — the r9
-        # baseline plan showed one join+SortAggregate pair per level
-        # under the final Union (guide §2.4)
-        frontier = frontier.join(e, frontier["node"] == e["_s"]).select(
+    res = _closed_walks(
+        edges,
+        max_len=max_len,
+        src=src,
+        dst=dst,
+        functional=functional,
+        walk=[
+            F.col("_s").alias("origin"),
+            F.col("_d").alias("node"),
+            F.concat_ws(
+                ">", F.col("_s").cast("string"), F.col("_d").cast("string")
+            ).alias("path"),
+        ],
+        extend=[
             "origin",
             F.col("_d").alias("node"),
-            F.concat(
-                F.col("path"), F.lit(">"), F.col("_d").cast("string")
-            ).alias("path"),
-        )
-        if not functional:
-            frontier = frontier.groupBy("origin", "node").agg(
-                F.min("path").alias("path")
-            )
-        frontier = frontier.localCheckpoint(eager=False)
-        closed = frontier.filter(F.col("node") == F.col("origin")).select(
-            "origin", F.lit(lvl).alias("cycle_len"), "path"
-        )
-        out.append(closed)
-        if lvl == max_len:
-            break
-        # same close-out as cycle_members; on the functional path the
-        # visited anti-join and accumulation are skipped (one walk per
-        # origin — nothing to prune)
-        frontier = frontier.filter(F.col("node") != F.col("origin")).join(
-            closed.select("origin"), "origin", "left_anti"
-        )
-        if not functional:
-            frontier = frontier.join(visited, ["origin", "node"], "left_anti")
-        frontier = frontier.localCheckpoint(eager=False)
-        if not functional:
-            visited = visited.unionByName(
-                frontier.select("origin", "node")
-            ).localCheckpoint(eager=False)
-    res = out[0]
-    for part in out[1:]:
-        res = res.unionByName(part)
+            F.concat(F.col("path"), F.lit(">"), F.col("_d").cast("string")).alias(
+                "path"
+            ),
+        ],
+        collapse=lambda f: f.groupBy("origin", "node").agg(
+            F.min("path").alias("path")
+        ),
+    )
     # defensive collapse mirroring cycle_members: min (cycle_len, path)
     # struct per origin — levels after a close are anti-joined out, but
     # the last level skips that filter
@@ -1641,10 +1695,12 @@ def hierarchy_closure(
             .withColumn("depth", F.lit(d + 1))
         )
 
-    level1 = e.withColumn("depth", F.lit(1)).localCheckpoint(eager=True)
     return _union_all(
         _frontier_levels(
-            level1, expand, ["node", "ancestor"], depth=max_depth - 1
+            e.withColumn("depth", F.lit(1)),
+            expand,
+            ["node", "ancestor"],
+            depth=max_depth - 1,
         )
     )
 
@@ -1713,11 +1769,16 @@ def strongly_connected_components(
     Each propagation step is one join + one aggregate over the live
     edge frame with lineage cut per step — the same physical shape as
     :func:`pagerank`. Nodes are the edge endpoints (an isolated node
-    has no edges to define it; callers union extras if needed).
+    has no edges to define it; callers union extras if needed); an edge
+    with a NULL endpoint carries no edge and defines no node. Both
+    loops, the label fixpoint and the peel, run on :func:`_iterate`:
+    the fixpoint's fingerprint, the peel's live-node count, |V| and the
+    squaring's growth count are all observed by checkpoint jobs that
+    run anyway, so no round runs a probe job of its own.
 
     r9 optimization (guide §2.4/§3.1): the F and B fixpoints run FUSED —
     one label frame carrying (flab, blab), both directions relaxed per
-    round, ONE lazy checkpoint and ONE convergence checksum per round
+    round, ONE checkpoint and ONE convergence fingerprint per round
     instead of two separate fixpoint loops (round count becomes
     max(fwd, bwd) instead of fwd + bwd, and the per-round blocking jobs
     halve); the label/prop frames ride the pagerank-style
@@ -1737,7 +1798,7 @@ def strongly_connected_components(
     count drops from O(diameter) to O(diameter / 2^k) while the
     fixpoint itself is UNCHANGED (e ⊆ e_k ⊆ reach(e) preserves the
     reachability min-label). A deterministic growth cap (|e_k| must
-    stay <= edge_growth_cap * |e|, checked by count) rejects a
+    stay <= edge_growth_cap * |e|, an observed count) rejects a
     squaring on dense graphs, so the frame never explodes — the
     shortcut is free exactly on the sparse long-cycle shapes where
     round count hurts, and a no-op where density would bite. Unlike
@@ -1746,63 +1807,48 @@ def strongly_connected_components(
     before. Measured (sf0.1 ring, warm): label rounds 41 -> 7, wall
     19.4 -> 10.7 s; output row-identical at sf0.01 and sf0.1.
     """
-    e0 = (
+    # the node set is every endpoint of an edge without a NULL endpoint
+    # (self-loops included), with |V| observed for the broadcast switch
+    _, nodes, obs = _undirected(edges, src, dst)
+    bcast = _bcast(obs["n"])
+    live_edges = _checkpoint(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .filter(F.col("s") != F.col("d"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    small = nodes.count() <= BROADCAST_NODE_LIMIT
-    bcast = F.broadcast if small else (lambda df: df)
 
-    def _densify(e: DataFrame) -> DataFrame:
-        """Square the edge relation up to ``edge_doublings`` times:
-        e := distinct(e U e.e), lineage cut per squaring. Reachability
-        (hence the min-label fixpoint) is unchanged; labels then move
-        up to 2^k hops per round. The growth cap makes the shortcut
-        self-disabling on dense graphs: a squaring whose distinct
-        result exceeds cap * |e_0| is discarded (count-based, so the
-        decision is deterministic and replayable)."""
-        base = e.count()
+    def _densify(e: DataFrame, base: int) -> DataFrame:
+        """Square the ``base``-edge relation ``e`` up to
+        ``edge_doublings`` times: e := distinct(e U e.e), lineage cut
+        per squaring. Reachability (hence the min-label fixpoint) is
+        unchanged; labels then move up to 2^k hops per round. The
+        growth cap makes the shortcut self-disabling on dense graphs: a
+        squaring whose distinct result exceeds cap * |e_0| is discarded
+        (count-based, so the decision is deterministic and replayable;
+        the count is the squaring checkpoint's own observation)."""
         for _ in range(edge_doublings):
             two_hop = (
                 e.alias("l")
                 .join(e.alias("r"), F.col("l.d") == F.col("r.s"))
                 .select(F.col("l.s").alias("s"), F.col("r.d").alias("d"))
             )
-            e2 = (
-                e.unionByName(two_hop)
-                .filter(F.col("s") != F.col("d"))
-                .distinct()
-                .localCheckpoint(eager=True)
+            e2, obs2 = _checkpoint(
+                e.unionByName(two_hop).filter(F.col("s") != F.col("d")).distinct()
             )
-            if e2.count() > edge_growth_cap * base:
+            if obs2["n"] > edge_growth_cap * base:
                 return e
             e = e2
         return e
 
-    def _fixpoint(nodes_df: DataFrame, e: DataFrame) -> DataFrame:
+    def _fixpoint(live: DataFrame, e: DataFrame) -> DataFrame:
         """Fused fixpoint of flab(v) = min(v, min over s->v of flab(s))
         and blab(v) = min(v, min over v->d of blab(d)) — one frame, one
-        round loop. Labels are monotone non-increasing, so an unchanged
-        :func:`_fingerprint` of the (node, flab, blab) frame IS the
-        joint fixpoint — one tiny aggregate instead of a per-round
-        comparison join.
+        :func:`_iterate` loop. Labels are monotone non-increasing, so a
+        repeated observed fingerprint of the (node, flab, blab) frame
+        IS the joint fixpoint.
         """
-        lab = nodes_df.select(
-            "node",
-            F.col("node").alias("flab"),
-            F.col("node").alias("blab"),
-        ).localCheckpoint(eager=False)
 
-        sig = _fingerprint(lab)
-        for _ in range(label_rounds):
+        def relax(lab: DataFrame, _) -> DataFrame:
             fprop = (
                 e.join(bcast(lab.select(F.col("node").alias("s"), "flab")), "s")
                 .groupBy(F.col("d").alias("node"))
@@ -1813,7 +1859,7 @@ def strongly_connected_components(
                 .groupBy(F.col("s").alias("node"))
                 .agg(F.min("blab").alias("b2"))
             )
-            lab = (
+            return (
                 lab.join(bcast(fprop), "node", "left")
                 .join(bcast(bprop), "node", "left")
                 .select(
@@ -1825,151 +1871,133 @@ def strongly_connected_components(
                         F.col("blab"), F.coalesce(F.col("b2"), F.col("blab"))
                     ).alias("blab"),
                 )
-                .localCheckpoint(eager=False)
             )
-            new_sig = _fingerprint(lab)
-            if new_sig == sig:
-                return lab
-            sig = new_sig
-        raise RuntimeError("scc: label fixpoint not reached")
+
+        lab, _ = _iterate(
+            live.select(
+                "node", F.col("node").alias("flab"), F.col("node").alias("blab")
+            ),
+            relax,
+            max_rounds=label_rounds,
+        )
+        return lab
 
     out_parts = []
-    live_nodes, live_edges = nodes, e0
-    for _ in range(max_rounds):
-        if live_nodes.isEmpty():
-            break
-        both = _fixpoint(live_nodes, _densify(live_edges))
-        settled = both.filter(F.col("flab") == F.col("blab")).select(
-            "node", F.col("flab").alias("scc_id")
-        ).localCheckpoint(eager=True)
+
+    def peel(live: DataFrame, _) -> DataFrame:
         # F(v) == B(v) == m: m reaches v along the reversed label path
         # and v reaches m — v is in m's SCC. The minimum remaining node
         # always settles (F = B = itself), so progress is guaranteed.
-        out_parts.append(settled)
-        live_nodes = both.filter(F.col("flab") != F.col("blab")).select(
-            "node"
-        ).localCheckpoint(eager=True)
-        if live_nodes.isEmpty():
-            break
-        live_edges = (
-            live_edges.join(
-                live_nodes.withColumnRenamed("node", "s"), "s", "left_semi"
+        nonlocal live_edges
+        if out_parts:  # a later round: drop the settled nodes' edges
+            live_edges = _checkpoint(
+                live_edges[0]
+                .join(live.withColumnRenamed("node", "s"), "s", "left_semi")
+                .join(live.withColumnRenamed("node", "d"), "d", "left_semi")
             )
-            .join(live_nodes.withColumnRenamed("node", "d"), "d", "left_semi")
-            .localCheckpoint(eager=True)
+        e, eobs = live_edges
+        both = _fixpoint(live, _densify(e, eobs["n"]))
+        out_parts.append(
+            both.filter(F.col("flab") == F.col("blab")).select(
+                "node", F.col("flab").alias("scc_id")
+            )
         )
-    else:
-        raise RuntimeError("scc: peel did not terminate")
-    if not out_parts:
-        return nodes.select(
-            "node", F.col("node").alias("scc_id")
-        ).filter(F.lit(False))
+        return both.filter(F.col("flab") != F.col("blab")).select("node")
+
+    _iterate(nodes.select("node"), peel, max_rounds=max_rounds, until=_emptied)
+    if not out_parts:  # no node at all
+        return nodes.select("node", F.col("node").alias("scc_id"))
     return _union_all(out_parts)
 
 
-@contextmanager
-def _seeded_bfs(edges: DataFrame, *, seed_mod: int, max_depth: int, max_seeds: int):
+def _seeded_bfs(
+    edges: DataFrame, *, seed_mod: int, max_depth: int, max_seeds: int
+) -> tuple:
     """The seeded multi-source forward BFS that closeness and
-    betweenness share, over an undirected a<b edge list. Yields
+    betweenness share, over an undirected a<b edge list. Returns
     ``(e, levels, bcast, key)``:
 
-    - ``e``: the symmetrised (src, dst) edge frame, cached until the
-      ``with`` block exits;
+    - ``e``: the :func:`_undirected` (src, dst) edge frame;
     - ``levels[d]``: the (slot, node, sigma) frontier at distance d,
       sigma = the number of shortest seed->node paths (exact BIGINT);
       level 0 holds the seeds, slot = the seed's rank in the bounded
       ``% seed_mod`` ORDER-BY-LIMIT sample;
-    - ``bcast``: the broadcast-vs-shuffle switch for node-keyed joins,
+    - ``bcast``: the :func:`_bcast` hint for node-keyed joins,
       broadcast while |seeds|·|V| fits :data:`BROADCAST_NODE_LIMIT`;
     - ``key``: the packed-key function ``key(node, slot)``, or None when
       the id span has no BIGINT headroom. With a key, every level also
       carries its packed ``k`` column and the per-level aggregate and
       anti-join run on it.
+
+    The node frame's checkpoint observes |V|, the id span and the size
+    of the ``% seed_mod`` slice, so the seed count, the switch and the
+    key need no job of their own.
     """
-    e = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(
-            edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-        .cache()
+    e, nodes, obs = _undirected(
+        edges, "a", "b", in_slice=F.count_if(F.col("node") % seed_mod == 0)
     )
-    try:
-        # ONE distinct-nodes frame serves both the seed slice and the
-        # span stats: a plain count/min/max over the cached 1-column
-        # node frame, not a second full-|e| aggregation
-        nodes = e.select(F.col("src").alias("node")).distinct().cache()
-        seeds = (
-            nodes.filter(F.col("node") % seed_mod == 0)
-            .orderBy("node")
-            .limit(max_seeds)
-        )
-        # slot = rank of the seed in the (deterministic) sample: a dense
-        # 0..n_seeds-1 int that replaces the seed id as the per-source
-        # BFS label
-        lv0 = seeds.select(
+    # every level's |frontier|·degree fan-out is produced in the tasks
+    # that scan e, and a checkpointed small edge frame can sit in one or
+    # two AQE-coalesced partitions: spread it over every core once
+    e = e.repartition(
+        edges.sparkSession.sparkContext.defaultParallelism, "src"
+    ).localCheckpoint(eager=False)
+    n_seeds = min(obs["in_slice"], max_seeds)
+    bcast = _bcast(n_seeds * obs["n"])
+    S = max(n_seeds, 1)
+    mn = int(obs["mn"]) if obs["mn"] is not None else 0
+    mx = int(obs["mx"]) if obs["mx"] is not None else 0
+    node_dt = dict(e.dtypes)["src"]
+    # slot = rank of the seed in the (deterministic) sample: a dense
+    # 0..n_seeds-1 int that replaces the seed id as the per-source BFS
+    # label
+    lv0 = (
+        nodes.filter(F.col("node") % seed_mod == 0)
+        .orderBy("node")
+        .limit(max_seeds)
+        .select(
             (F.row_number().over(Window.orderBy("node")) - 1).alias("slot"),
             "node",
             F.lit(1).cast("long").alias("sigma"),
-        ).localCheckpoint(eager=True)
-        n_seeds = lv0.count()
-        stats = nodes.agg(
-            # count("node"), not count(1): a NULL edge endpoint upstream
-            # must not inflate n_nodes (it would perturb the
-            # BROADCAST_NODE_LIMIT switch; min/max already ignore NULLs)
-            F.count("node").alias("n"),
-            F.min("node").alias("mn"),
-            F.max("node").alias("mx"),
-        ).first()
-        nodes.unpersist()
-        n_nodes = stats["n"] or 0
-        small = n_seeds * n_nodes <= BROADCAST_NODE_LIMIT
-        bcast = F.broadcast if small else (lambda df: df)
-        S = max(n_seeds, 1)
-        mn = int(stats["mn"]) if stats["mn"] is not None else 0
-        mx = int(stats["mx"]) if stats["mx"] is not None else 0
-        node_dt = dict(e.dtypes)["src"]
+        )
+    )
 
-        def key(node_col, slot_col):
-            # injective (node, slot) -> BIGINT while the span check holds
-            return (
-                (node_col.cast("long") - F.lit(mn)) * S + slot_col
-            ).alias("k")
+    def key(node_col, slot_col):
+        # injective (node, slot) -> BIGINT while the span check holds
+        return ((node_col.cast("long") - F.lit(mn)) * S + slot_col).alias("k")
 
-        def expand_packed(prev: DataFrame, d: int) -> DataFrame:
-            # aggregate on the single packed key; slot and node are
-            # re-derived from it: true integer division (k is
-            # non-negative; a double `/` would lose precision past
-            # 2^53), node cast back to its source dtype so the schema
-            # never changes
-            return (
-                e.join(bcast(prev), prev["node"] == e["src"])
-                .select(key(F.col("dst"), F.col("slot")), "sigma")
-                .groupBy("k")
-                .agg(F.sum("sigma").alias("sigma"))
-                .select(
-                    "k",
-                    F.pmod(F.col("k"), F.lit(S)).cast("int").alias("slot"),
-                    (F.expr(f"k div {S}") + mn).cast(node_dt).alias("node"),
-                    "sigma",
-                )
+    def expand_packed(prev: DataFrame, d: int) -> DataFrame:
+        # aggregate on the single packed key; slot and node are
+        # re-derived from it: true integer division (k is non-negative;
+        # a double `/` would lose precision past 2^53), node cast back
+        # to its source dtype so the schema never changes
+        return (
+            e.join(bcast(prev), prev["node"] == e["src"])
+            .select(key(F.col("dst"), F.col("slot")), "sigma")
+            .groupBy("k")
+            .agg(F.sum("sigma").alias("sigma"))
+            .select(
+                "k",
+                F.pmod(F.col("k"), F.lit(S)).cast("int").alias("slot"),
+                (F.expr(f"k div {S}") + mn).cast(node_dt).alias("node"),
+                "sigma",
             )
+        )
 
-        def expand_composite(prev: DataFrame, d: int) -> DataFrame:
-            return (
-                e.join(bcast(prev), prev["node"] == e["src"])
-                .groupBy("slot", F.col("dst").alias("node"))
-                .agg(F.sum("sigma").alias("sigma"))
-            )
+    def expand_composite(prev: DataFrame, d: int) -> DataFrame:
+        return (
+            e.join(bcast(prev), prev["node"] == e["src"])
+            .groupBy("slot", F.col("dst").alias("node"))
+            .agg(F.sum("sigma").alias("sigma"))
+        )
 
-        if (mx - mn + 1) <= (2**62) // S:
-            lv0 = lv0.withColumn("k", key(F.col("node"), F.col("slot")))
-            expand, keys = expand_packed, ["k"]
-        else:
-            expand, keys, key = expand_composite, ["slot", "node"], None
-        levels = _frontier_levels(lv0, expand, keys, depth=max_depth, hint=bcast)
-        yield e, levels, bcast, key
-    finally:
-        e.unpersist()
+    if (mx - mn + 1) <= (2**62) // S:
+        lv0 = lv0.withColumn("k", key(F.col("node"), F.col("slot")))
+        expand, keys = expand_packed, ["k"]
+    else:
+        expand, keys, key = expand_composite, ["slot", "node"], None
+    levels = _frontier_levels(lv0, expand, keys, depth=max_depth, hint=bcast)
+    return e, levels, bcast, key
 
 
 def closeness_centrality(
@@ -2008,8 +2036,10 @@ def closeness_centrality(
 
     Scale notes: level-synchronous multi-source BFS — the frontier is
     (seed, node) pairs, each level one equi-join on node==src plus an
-    anti-join against the visited set; per-level ``localCheckpoint``
-    cuts the plan's growth (the shortest_path/cycle discipline). While
+    anti-join against the visited set; each level is one
+    :func:`_iterate` round, whose checkpoint cuts the plan's growth and
+    observes the level's size, so the empty-level exit needs no job of
+    its own. An edge with a NULL endpoint carries no edge. While
     |seeds|·|V| stays under :data:`BROADCAST_NODE_LIMIT` the frontier
     and visited frames ride broadcast joins (the stationary edge list
     never shuffles at all); past it both joins fall back to shuffles
@@ -2021,12 +2051,12 @@ def closeness_centrality(
     :func:`_seeded_bfs`, packed-key keying included); closeness reads
     only each level's distance and ignores its path counts.
     """
-    with _seeded_bfs(
+    _, levels, _, _ = _seeded_bfs(
         edges, seed_mod=seed_mod, max_depth=max_depth, max_seeds=max_seeds
-    ) as (_, levels, _, _):
-        vis = _union_all(
-            [lv.select("slot", F.lit(d).alias("dist")) for d, lv in enumerate(levels)]
-        )
+    )
+    vis = _union_all(
+        [lv.select("slot", F.lit(d).alias("dist")) for d, lv in enumerate(levels)]
+    )
     slot_counts = vis.filter(F.col("dist") >= 1).groupBy("slot").agg(
         F.count(F.lit(1)).alias("n_reached"),
         F.sum("dist").alias("sum_dist"),
@@ -2114,64 +2144,64 @@ def betweenness_centrality(
     composite key — identical output either way, since sigma/delta
     sums are order-free integers.
     """
-    with _seeded_bfs(
+    e, levels, bcast, key = _seeded_bfs(
         edges, seed_mod=seed_mod, max_depth=max_depth, max_seeds=max_seeds
-    ) as (e, levels, bcast, key):
-        reached = len(levels) - 1  # deepest populated level
-        # backward accumulation: delta6[d] over levels reached..1, each
-        # an exact BIGINT e6 partial-dependency sum; the CACHED edge
-        # frame is reused (the backward pass reads it once per level)
-        deltas: dict[int, DataFrame] = {
-            reached: levels[reached].withColumn(
-                "delta6", F.lit(0).cast("long")
-            )
-        }
-        # packed: (seed, node) keyed steps run on k, the successor's key
-        # derived on the fly; composite: the (slot, node) pair
-        keys = ["k"] if key is not None else ["slot", "node"]
-        succ = (
-            [key(F.col("dst"), F.col("slot"))]
-            if key is not None
-            else [F.col("slot"), F.col("dst").alias("node")]
+    )
+    reached = len(levels) - 1  # deepest populated level
+    # backward accumulation: delta6[d] over levels reached..1, each
+    # an exact BIGINT e6 partial-dependency sum; the checkpointed edge
+    # frame is reused (the backward pass reads it once per level)
+    deltas: dict[int, DataFrame] = {
+        reached: levels[reached].withColumn(
+            "delta6", F.lit(0).cast("long")
         )
-        term = (
-            F.col("sigma").cast("double")
-            / F.col("vsigma").cast("double")
-            * (F.lit(1.0) + F.col("vdelta6").cast("double") / 1000000.0)
+    }
+    # packed: (seed, node) keyed steps run on k, the successor's key
+    # derived on the fly; composite: the (slot, node) pair
+    keys = ["k"] if key is not None else ["slot", "node"]
+    succ = (
+        [key(F.col("dst"), F.col("slot"))]
+        if key is not None
+        else [F.col("slot"), F.col("dst").alias("node")]
+    )
+    term = (
+        F.col("sigma").cast("double")
+        / F.col("vsigma").cast("double")
+        * (F.lit(1.0) + F.col("vdelta6").cast("double") / 1000000.0)
+    )
+    for d in range(reached - 1, 0, -1):
+        u = levels[d]
+        v = deltas[d + 1].select(
+            *keys,
+            F.col("sigma").alias("vsigma"),
+            F.col("delta6").alias("vdelta6"),
         )
-        for d in range(reached - 1, 0, -1):
-            u = levels[d]
-            v = deltas[d + 1].select(
-                *keys,
-                F.col("sigma").alias("vsigma"),
-                F.col("delta6").alias("vdelta6"),
+        # u rides the SAME broadcast-vs-shuffle switch as the
+        # forward expansion (r9: the backward pass shuffle-joined u
+        # against the edge frame while the forward pass
+        # broadcast the frontier — the u exchange + sort-merge over
+        # the |frontier|·degree fan-out was the single hottest
+        # phase, 11.9 s of the 25.5 s total at sf0.1; guide §3.1,
+        # broadcast replaces both exchanges)
+        contrib = (
+            bcast(u).join(e, u["node"] == e["src"])
+            .select(*succ, *[u[c].alias(f"u_{c}") for c in keys], "sigma")
+            .join(bcast(v), keys)
+            .select(
+                *[F.col(f"u_{c}").alias(c) for c in keys],
+                F.round(term * 1000000.0).cast("long").alias("term6"),
             )
-            # u rides the SAME broadcast-vs-shuffle switch as the
-            # forward expansion (r9: the backward pass shuffle-joined u
-            # against the cached edge frame while the forward pass
-            # broadcast the frontier — the u exchange + sort-merge over
-            # the |frontier|·degree fan-out was the single hottest
-            # phase, 11.9 s of the 25.5 s total at sf0.1; guide §3.1,
-            # broadcast replaces both exchanges)
-            contrib = (
-                bcast(u).join(e, u["node"] == e["src"])
-                .select(*succ, *[u[c].alias(f"u_{c}") for c in keys], "sigma")
-                .join(bcast(v), keys)
-                .select(
-                    *[F.col(f"u_{c}").alias(c) for c in keys],
-                    F.round(term * 1000000.0).cast("long").alias("term6"),
-                )
-                .groupBy(*keys)
-                .agg(F.sum("term6").alias("delta6"))
+            .groupBy(*keys)
+            .agg(F.sum("term6").alias("delta6"))
+        )
+        deltas[d] = (
+            u.join(bcast(contrib), keys, "left")
+            .select(
+                *u.columns,
+                F.coalesce("delta6", F.lit(0)).cast("long").alias("delta6"),
             )
-            deltas[d] = (
-                u.join(bcast(contrib), keys, "left")
-                .select(
-                    *u.columns,
-                    F.coalesce("delta6", F.lit(0)).cast("long").alias("delta6"),
-                )
-                .localCheckpoint(eager=True)
-            )
+            .localCheckpoint(eager=True)
+        )
     out = _union_all([dl.select("node", "delta6") for dl in deltas.values()])
     return (
         out.groupBy("node")

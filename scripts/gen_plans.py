@@ -36,12 +36,12 @@ PICKS = {
     "events_funnel": "3-step funnel: ONE shuffle (groupBy user) + JVM higher-order fold over sorted per-user arrays — no self-joins",
     "search_lexical_recall": "retrieval contract: broadcast query side vs corpus scan, map-side partial window top-1",
     "graph_triangles": "wedge closure: cached edge list feeding three join inputs; the wedge frame (quadratic in degree, not linear in edges) is repartitioned to ~5M rows/partition from the EXACT wedge count when that exceeds the session default, and the closure join is SHUFFLE-HASH (edge list builds, wedges STREAM — a sort-merge plan would sort the wedge frame, the dominant cost at sf1)",
-    "graph_pagerank": "power iteration: plan shows only the final checkpointed RDD (localCheckpoint truncates lineage per step BY DESIGN — an un-truncated 5-step plan would be a 5-deep join tower); per step: |V|-row rank frame joins the stationary edges + one hash aggregate",
+    "graph_pagerank": "power iteration: plan shows only the final checkpointed RDD (the kernel's lazy localCheckpoint truncates lineage per step BY DESIGN — an un-truncated 5-step plan would be a 5-deep join tower); per step: |V|-row rank frame broadcast onto the stationary edges + one hash aggregate; N is observed by the node frame's eager checkpoint, no count job",
     "dedup_ngram_spans": "duplicated-span fraction: shingle-df join lands back on the SAME shuffle key, 1:1 fan-out (no hot-key blowup)",
     "graph_hotspots": "degree hotspots: ONE scan (edge pair exploded map-side, not a twice-derived Union), ONE aggregate exchange, TakeOrderedAndProject top-N",
     "events_moments": "single-pass higher moments: exact decimal power sums in one hash aggregate with map-side partials — a scan plus one tiny exchange",
     "dedup_ppjoin": "prefix-filter all-pairs: df agg joins back on its OWN key, per-doc prefix window, candidates join only each doc's rarest shingles — hot keys carry zero join weight without any cap",
-    "graph_scc": "FW-BW peel: plan shows the final checkpointed RDD (per-round lineage cuts BY DESIGN, the pagerank posture); per label round ONE edge join + min aggregate, convergence via a scalar monotone-sum checksum — no comparison join",
+    "graph_scc": "FW-BW peel: plan shows the union of the settled filters over each peel's final checkpointed label frame (per-round lineage cuts BY DESIGN); per label round ONE edge join + min aggregate, convergence = the (count, xxhash-sum) fingerprint observed by the round's own checkpoint job — no comparison join, no probe job",
     "events_anomaly": "rolling z-score: events collapse to |buckets| rows in one hash aggregate BEFORE the bounded rows-window",
     "dsl_tpch_q4": "EXISTS as a native left_semi hash join from the JSON DSL — no subquery, no distinct",
     "source_jsonl_roundtrip": "JSONL ingest: line-splittable scan with explicit schema, per-source hash aggregate",
@@ -53,7 +53,7 @@ PICKS = {
     "dsl_tpch_q19": "disjunctive OR-of-ANDs over a join: per-branch dim conjuncts pushed to the part scan, cross-table OR as post-join filter",
     "events_histogram": "fixed-width histogram: ONE map-side-partial hash aggregate, bin is a per-row function (no pre-pass, no sort)",
     "knn_mmr": "MMR rerank: distributed exact top-k candidate cut feeding ONE constant-sized applyInPandas group — corpus never collected",
-    "graph_kcore": "k-core peeling: plan shows the final checkpointed round (lineage cut per round); per round one degree aggregate + two BROADCAST semi joins — edges never shuffle during peeling",
+    "graph_kcore": "k-core peeling: plan shows the final checkpointed degree frame (lineage cut per round); per round one degree aggregate + two BROADCAST semi joins — edges never shuffle during peeling; the keep count that stops the loop is observed by the round's own checkpoint job",
     "knn_topk_int8": "quantized search: dequantize-on-the-fly is a codegen projection over the scan, then TakeOrderedAndProject — zero extra shuffle vs exact KNN",
     "dedup_paragraphs": "paragraph dedup: two hash exchanges total (paragraph-md5 window, doc-id reassembly), nothing event- or pair-quadratic",
     "events_gapfill": "grid resample: events collapse to buckets FIRST, the sequence() fan-out explodes from two-row bounds frames, fill reuses the join's partitioning",
@@ -86,7 +86,7 @@ PICKS = {
     "search_hybrid_rrf": "hybrid RRF: two independent distributed top-N subplans (BM25 posting join / KNN scoring scan); rank windows and the full-outer fusion join run on two <=50-row frames — nothing corpus-sized crosses the fusion",
     "dedup_unicode_nfc": "canonical dedup: one Arrow-batched NFC map then the standard hash-groupBy — one shuffle on the normalized hash, same plan family as exact dedup",
     "dedup_substring_rewrite": "exact-substring rewrite: per-char explode at scan parallelism, dup-gram detection join lands on the gram aggregate's own hash key (min!=max, no countDistinct expand), cummax interval merge + aggregate() fold are window/codegen — full texts never shuffle as join payloads",
-    "graph_connected_components": "large-star/small-star CC: each half-round is ONE window over the edge frame's own shuffle key (no agg+join), frame CONTRACTS per round, lineage cut per round; converges in O(log^2 n) rounds on any topology (chain A/B in SCALE.md)",
+    "graph_connected_components": "large-star/small-star CC: each half-round is ONE window over the edge frame's own shuffle key (no agg+join), frame CONTRACTS per round, lineage cut per round; converges in O(log^2 n) rounds on any topology (chain A/B in SCALE.md); the convergence fingerprint is observed by each round's checkpoint job, not a separate aggregate",
     "corpus_cluster_balance": "topic balancing: bounded-sample trainer, Arrow-batched argmax assignment (tiny centroid matrix in the UDF closure), ONE window shuffle on cluster_id for the quota",
     "graph_cycle_paths": "cycle paths: same level-synchronous BFS shape as cycle_members with distinct() replaced by a min(path) aggregate on the frontier's own (origin, node) key — per level one join + one aggregate, rows widened only by a <= max_len-id string; plan shows the final checkpointed level (lineage cut per level by design)",
     "dedup_pairs_auto": "cost-based pair-join dispatch: the df-histogram decision (one scan-shaped aggregate) runs at plan-build time; the physical plan IS the chosen arm's — on this corpus the fractional-cap co-occurrence join (kept-shingle semi-join, co-occurrence agg on the shingle key, size join) over ONE cached shingle explode shared with the decision",

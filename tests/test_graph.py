@@ -626,48 +626,164 @@ def test_bfs_empty_start_returns_empty_frame(fixture_edges, depth):
 
 
 def _cached_rdd_ids(spark) -> set:
-    # persisted RDDs that are not checkpoints: what .cache()/.persist()
-    # leaves behind. A localCheckpoint also persists its RDD, but the
-    # returned frame reads those blocks, and the JVM drops them once the
-    # frame is garbage-collected, so their count is not a leak signal.
+    # persisted RDDs that are not local checkpoints: what
+    # .cache()/.persist() leaves behind. A localCheckpoint also persists
+    # its RDD, but only the frames that read it hold it, and the JVM
+    # drops its blocks once they are garbage-collected, so its count is
+    # not a leak signal. isLocallyCheckpointed, not isCheckpointed: a
+    # lazy local checkpoint that only a shuffle-map stage computed is
+    # stored but never marked checkpointed.
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
     return {
-        int(i) for i in rdds.keySet() if not rdds.get(i).rdd().isCheckpointed()
+        int(i)
+        for i in rdds.keySet()
+        if not rdds.get(i).rdd().isLocallyCheckpointed()
     }
 
 
 @pytest.mark.parametrize("shape", ["empty", "null_endpoint"])
 def test_frontier_loop_callers_degenerate_inputs(spark, shape):
-    """Every caller of the shared frontier loop takes an empty edge frame
-    and an edge frame with NULL endpoints without raising, returns its
-    documented schema, and leaves no cached frame behind."""
+    """Every caller of the shared frontier loop and of the fixpoint
+    kernel takes an empty edge frame and an edge frame with NULL
+    endpoints without raising, returns its documented schema, and leaves
+    no cached frame behind. A NULL endpoint carries no edge: where that
+    contract holds, the call equals the same call on the NULL-free rows
+    (3 and 4 are reached only through a NULL endpoint, so they are no
+    nodes)."""
+    from collections import Counter
+
+    from project_cortex_spark.operators.dedup import duplicate_clusters
     from project_cortex_spark.operators.graph import (
         betweenness_centrality,
         closeness_centrality,
+        communities_lpa,
+        connected_components,
         hierarchy_closure,
+        kcore,
+        pagerank,
+        pagerank_personalized,
+        strongly_connected_components,
     )
 
-    rows = [] if shape == "empty" else [(0, None), (None, 2), (0, 1), (1, 2)]
+    clean = [] if shape == "empty" else [(0, 1), (1, 2)]
+    rows = clean if shape == "empty" else (
+        [(0, None), (None, 2), (3, None), (None, 4)] + clean
+    )
+    seeds = spark.createDataFrame([(0,)], "node bigint")
 
-    def frame(cols):
+    def frame(rows, cols):
         return spark.createDataFrame(rows, f"{cols[0]} bigint, {cols[1]} bigint")
 
+    undirected = ["a", "b"]
+    # (call, documented columns, does the NULL-endpoint contract hold)
     calls = [
-        (lambda: bfs(frame(["src", "dst"]), [0], depth=6),
-         ["node", "depth"]),
-        (lambda: hierarchy_closure(frame(["child", "parent"]), max_depth=6),
-         ["node", "ancestor", "depth"]),
-        (lambda: closeness_centrality(frame(["a", "b"]), seed_mod=1),
-         ["node", "n_reached", "sum_dist", "harmonic", "closeness"]),
-        (lambda: betweenness_centrality(frame(["a", "b"]), seed_mod=1),
-         ["node", "betweenness", "n_seeds"]),
+        (lambda r: bfs(frame(r, ["src", "dst"]), [0], depth=6),
+         ["node", "depth"], True),
+        (lambda r: hierarchy_closure(frame(r, ["child", "parent"]), max_depth=6),
+         ["node", "ancestor", "depth"], False),
+        (lambda r: closeness_centrality(frame(r, undirected), seed_mod=1),
+         ["node", "n_reached", "sum_dist", "harmonic", "closeness"], True),
+        (lambda r: betweenness_centrality(frame(r, undirected), seed_mod=1),
+         ["node", "betweenness", "n_seeds"], True),
+        (lambda r: pagerank(frame(r, undirected), iters=3),
+         ["node", "pr"], True),
+        (lambda r: pagerank_personalized(frame(r, undirected), seeds, iters=3),
+         ["node", "pr"], True),
+        (lambda r: communities_lpa(frame(r, undirected), rounds=3, min_size=1),
+         ["label", "n_nodes", "min_node"], True),
+        (lambda r: strongly_connected_components(frame(r, ["src", "dst"])),
+         ["node", "scc_id"], True),
+        (lambda r: kcore(frame(r, undirected), k=1, rounds=3),
+         ["node", "core_deg"], False),
+        (lambda r: connected_components(frame(r, undirected)),
+         ["doc_id", "cluster_id", "keep"], True),
+        (lambda r: duplicate_clusters(frame(r, undirected)),
+         ["doc_id", "cluster_id", "keep"], True),
     ]
-    for call, columns in calls:
+    for call, columns, null_free in calls:
         before = _cached_rdd_ids(spark)
-        out = call()
-        out.collect()
+        out = call(rows)
+        got = Counter(map(tuple, out.collect()))
         assert out.columns == columns
-        assert _cached_rdd_ids(spark) - before == set()
+        assert _cached_rdd_ids(spark) - before == set(), columns
+        if shape == "null_endpoint" and null_free:
+            assert got == Counter(map(tuple, call(clean).collect())), columns
+
+
+def _run_in_job_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = sorted(map(tuple, fn().collect()))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fixpoint_rounds_run_no_convergence_job(spark):
+    """The convergence test rides each round's checkpoint job: per
+    round, connected_components drops its fingerprint aggregate and
+    kcore its keep-set count. Fixed inputs, counted by job group:
+    before, the 17-node path took 5 star rounds and 46 jobs, and the
+    peel of a 3-node tail off a K4 took 4 rounds and 24 jobs; both must
+    now run at least one job fewer per round."""
+    from project_cortex_spark.operators.graph import connected_components, kcore
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(16)], "a bigint, b bigint")
+    rows, jobs = _run_in_job_group(
+        spark, "test_fixpoint_cc", lambda: connected_components(path)
+    )
+    assert rows == [(i, 0, i == 0) for i in range(17)]
+    assert jobs <= 46 - 5
+
+    tail = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6), (6, 7)],
+        "a bigint, b bigint",
+    )
+    rows, jobs = _run_in_job_group(
+        spark, "test_fixpoint_kcore", lambda: kcore(tail, k=2, rounds=8)
+    )
+    assert rows == [(1, 3), (2, 3), (3, 3), (4, 3)]
+    assert jobs <= 24 - 4
+
+
+def test_communities_lpa_honours_broadcast_labels(spark, monkeypatch):
+    """``broadcast_labels=False`` plans every round's label join without
+    a broadcast hint; the automatic switch hints it. Each round is a
+    lazy checkpoint, so the test records the extended plan of every
+    frame lazily checkpointed during the call."""
+    import contextlib
+    import io
+
+    from project_cortex_spark.operators.graph import communities_lpa
+
+    c1 = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
+    c2 = [(a, b) for a in range(11, 15) for b in range(11, 15) if a < b]
+    edges = spark.createDataFrame(c1 + c2 + [(4, 11)], "a bigint, b bigint")
+    frame_cls = type(edges)
+    checkpoint = frame_cls.localCheckpoint
+    plans = []
+
+    def recording(self, eager=True, *args, **kwargs):
+        if not eager:
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                self.explain(extended=True)
+            plans.append(buf.getvalue())
+        return checkpoint(self, eager, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+
+    def run(**kw):
+        plans.clear()
+        rows = sorted(map(tuple, communities_lpa(edges, rounds=3, **kw).collect()))
+        return rows, sum("strategy=broadcast" in p for p in plans)
+
+    auto_rows, auto_hinted = run()
+    off_rows, off_hinted = run(broadcast_labels=False)
+    assert auto_rows == off_rows
+    assert auto_hinted == 3
+    assert off_hinted == 0
 
 
 def test_communities_lpa_separates_two_cliques(spark):
