@@ -10,6 +10,14 @@ expressions inside whole-stage codegen, no Python in the hot path, so a
 
 All arithmetic is done in double precision (matching DuckDB's list
 functions) so oracle comparisons agree to float64 rounding.
+
+The scoring functions take SQL fragments — a quoted column name
+(:func:`~project_cortex_spark.functions.sql.ident`) or a rendered
+literal (:func:`~project_cortex_spark.functions.sql.literal`) — and
+return ONE ``F.expr``: the whole cosine tree crosses Py4J as a single
+string instead of one round trip per Column node (a 64-d query vector
+as ``F.lit(list)`` cost ~500 round trips on its own). The parsed tree
+is the one the Column API built.
 """
 
 from __future__ import annotations
@@ -17,40 +25,79 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sql import literal
 
-def dot_product(a: Column, b: Column) -> Column:
-    """sum_i a_i*b_i in double precision."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+# lambda variables of the generated expressions: a name no caller's
+# column is expected to carry, since a lambda variable shadows a column
+# of the same name inside the lambda body
+_X, _Y, _ACC = "__vx", "__vy", "__vacc"
+
+
+def _dot(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, ({_X}, {_Y}) -> "
+        f"CAST({_X} AS DOUBLE) * CAST({_Y} AS DOUBLE)), "
+        f"0.0D, ({_ACC}, {_X}) -> {_ACC} + {_X})"
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot_product(a, a))
+def _norm(a: str) -> str:
+    return f"sqrt({_dot(a, a)})"
 
 
-def l2_normalize(a: Column) -> Column:
+def _cosine(a: str, b: str) -> str:
+    return f"({_dot(a, b)} / ({_norm(a)} * {_norm(b)}))"
+
+
+def _cosine_distance(a: str, b: str) -> str:
+    return f"(1.0D - {_cosine(a, b)})"
+
+
+def dot_product(a: str, b: str) -> Column:
+    """sum_i a_i*b_i in double precision."""
+    return F.expr(_dot(a, b))
+
+
+def l2_norm(a: str) -> Column:
+    return F.expr(_norm(a))
+
+
+def l2_normalize(a: str) -> Column:
     """Divide each component by the L2 norm (reference normalizes all
     embeddings at encode time: internal/embeddings-ffi/src/lib.rs:87)."""
-    norm = l2_norm(a)
-    return F.transform(a, lambda x: x.cast("double") / norm)
+    return F.expr(f"transform({a}, __vn -> CAST(__vn AS DOUBLE) / {_norm(a)})")
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+def cosine_similarity(a: str, b: str) -> Column:
+    return F.expr(_cosine(a, b))
 
 
-def cosine_distance(a: Column, b: Column) -> Column:
+def cosine_distance(a: str, b: str) -> Column:
     """sqlite-vec cosine distance: 1 - cos(a,b), range [0, 2]."""
-    return F.lit(1.0) - cosine_similarity(a, b)
+    return F.expr(_cosine_distance(a, b))
 
 
-def similarity_score(a: Column, b: Column) -> Column:
+def similarity_score(a: str, b: str) -> Column:
     """The reference's user-facing score: 1 - distance/2 ∈ [0, 1]
     (search_sqlite.go:191-194)."""
-    return F.lit(1.0) - cosine_distance(a, b) / F.lit(2.0)
+    return F.expr(f"(1.0D - {_cosine_distance(a, b)} / 2.0D)")
+
+
+def double_array(values) -> str:
+    """A driver-side vector as an ``array<double>`` SQL fragment — the
+    text form of ``F.lit(values).cast("array<double>")``."""
+    return f"CAST({literal([float(v) for v in values])} AS ARRAY<DOUBLE>)"
+
+
+def hyperplane_signature(a: str, planes: list[list[float]]) -> Column:
+    """Random-hyperplane (sign) LSH signature: one character per plane,
+    ``'1'`` where ``a · plane >= 0``, else ``'0'``, concatenated in plane
+    order."""
+    bits = ", ".join(
+        f"CASE WHEN {_dot(a, literal(p))} >= 0 THEN '1' ELSE '0' END"
+        for p in planes
+    )
+    return F.expr(f"concat({bits})")
 
 
 def int8_max_abs(a: Column) -> Column:

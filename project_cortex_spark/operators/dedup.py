@@ -742,7 +742,7 @@ def embedding_near_duplicates(
     b = emb.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
     return (
         a.join(b, F.col("a") < F.col("b"))
-        .select("a", "b", similarity_score(F.col("va"), F.col("vb")).alias("score"))
+        .select("a", "b", similarity_score("va", "vb").alias("score"))
         .filter(F.col("score") >= threshold)
     )
 

@@ -17,9 +17,14 @@ Spark-first design:
     idf = ln(1 + (N - df + .5)/(df + .5))) because FTS5's exact rank
     constant differs; ordering — not absolute scores — is the parity
     contract (SURVEY §7 "genuinely hard" (b)).
-  * Boolean structure compiles to set algebra over per-term posting
-    sets: AND = inner join, OR = union, NOT = left_anti — all equi-joins
-    on doc_id, no cross products.
+  * Boolean structure compiles to ONE postings aggregate: every leaf
+    (term, prefix, phrase word) gets a bit, one filtered scan
+    ``groupBy(doc_id)`` sums the BM25 contributions of the positive
+    leaves and ORs the leaf bits into per-doc masks, and AND / OR / NOT
+    become a predicate over the masks (phrases add their adjacency
+    regex, evaluated in the payload join). The request is built as SQL
+    text (functions/sql.py), so its Py4J cost does not grow with the
+    query.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sql import ident, literal
 from ..functions.text import SEP_PY, SEP_RE, tokens
 from ..session import local_frame
 
@@ -272,7 +278,7 @@ def query_terms(node: Node, *, positive_only: bool = True) -> list[Term | Phrase
 
 
 # ---------------------------------------------------------------------------
-# matching: boolean node -> DataFrame of matching doc_ids
+# the compiler: boolean tree -> one postings aggregate + a mask predicate
 # ---------------------------------------------------------------------------
 
 
@@ -282,145 +288,105 @@ def _phrase_regex(words: list[str]) -> str:
     return rf"(^|{SEP_RE}){body}($|{SEP_RE})"
 
 
-def _flat_terms(node: Node, cls: type) -> list[str] | None:
-    """The plain-term word list of a pure ``cls``-chain (And/Or) of
-    non-prefix Terms, or None when the subtree contains anything else."""
-    if isinstance(node, Term) and not node.prefix:
-        return [node.text]
-    if isinstance(node, cls):
-        left = _flat_terms(node.left, cls)
-        right = _flat_terms(node.right, cls)
-        if left is not None and right is not None:
-            return left + right
-    return None
+def _bm25_sql(n_docs: int, avg_dl: float) -> str:
+    """BM25 contribution of one posting row (columns ``tf``, ``dl``,
+    ``df``) as SQL text. Both scorers use it; the tree is the one the
+    Column form built, so scores are bit-identical to it."""
+    idf = f"ln(1.0D + ({literal(float(n_docs))} - df + 0.5D) / (df + 0.5D))"
+    return (
+        f"{idf} * (tf * {literal(K1 + 1)}) / (tf + (dl * {literal(B)}"
+        f" / {literal(float(avg_dl))} + {literal(1 - B)}) * {literal(K1)})"
+    )
 
 
-def _match_node(index: FtsIndex, node: Node) -> DataFrame:
-    """Set algebra over posting lists: every operation is an equi-join or
-    union on doc_id — no cross joins, shuffle keyed on doc_id.
-
-    Chain flattening (r10, guide §1.2 — don't run the same pass twice):
-    a pure AND/OR chain of plain terms evaluates in ONE postings pass
-    (``term.isin``) instead of one posting subtree per term — on a live
-    index each subtree re-tokenizes the corpus, so "a OR b OR c OR d"
-    paid 4 tokenize+aggregate passes. OR is the doc set of the union
-    filter (identical to union-distinct of the per-term sets); AND keeps
-    docs matching all n distinct terms (postings are unique on
-    (term, doc_id), so a plain count per doc equals the distinct-term
-    count — identical to the join chain). Mixed trees recurse exactly
-    as before, flattening any pure sub-chains they contain.
-    """
-    p = index.postings
-    for cls in (And, Or):
-        if isinstance(node, cls):
-            words = _flat_terms(node, cls)
-            if words is not None:
-                uniq = sorted(set(words))
-                hits = p.filter(F.col("term").isin(uniq))
-                if cls is Or or len(uniq) == 1:
-                    return hits.select("doc_id").distinct()
-                return (
-                    hits.groupBy("doc_id")
-                    .agg(F.count(F.lit(1)).alias("_m"))
-                    .filter(F.col("_m") == len(uniq))
-                    .select("doc_id")
-                )
-    if isinstance(node, Term):
-        if node.prefix:
-            hits = p.filter(F.col("term").startswith(node.text))
-        else:
-            hits = p.filter(F.col("term") == node.text)
-        return hits.select("doc_id").distinct()
-    if isinstance(node, Phrase):
-        # phrase needs positional adjacency; evaluate on raw text with a
-        # separator-aware regex (same expression the oracle runs)
-        rx = _phrase_regex(node.terms)
-        return (
-            index.docs.filter(F.lower(F.col(index.text_col)).rlike(rx))
-            .select(F.col(index.id_col).alias("doc_id"))
-            .distinct()
-        )
-    if isinstance(node, And):
-        return _match_node(index, node.left).join(
-            _match_node(index, node.right), "doc_id", "inner"
-        )
-    if isinstance(node, Or):
-        return (
-            _match_node(index, node.left)
-            .union(_match_node(index, node.right))
-            .distinct()
-        )
-    if isinstance(node, Not):
-        return _match_node(index, node.left).join(
-            _match_node(index, node.right), "doc_id", "left_anti"
-        )
-    raise FtsQueryError(f"bad node: {node!r}")
-
-
-# ---------------------------------------------------------------------------
-# BM25 scoring
-# ---------------------------------------------------------------------------
-
-
-def _score_terms(index: FtsIndex, literals: list[Term | Phrase]) -> DataFrame:
-    """(doc_id, score): sum of BM25 contributions of each scoreable term.
-
-    Phrases score their member words individually (documented deviation
-    from FTS5, which scores a phrase as one unit; ordering parity is the
-    contract). Prefix terms score every matching vocabulary term.
-    """
-    words: list[str] = []
-    prefixes: list[str] = []
-    for lit in literals:
-        if isinstance(lit, Phrase):
-            words.extend(lit.terms)
-        elif lit.prefix:
-            prefixes.append(lit.text)
-        else:
-            words.append(lit.text)
-
-    p = index.postings
-    conds = []
-    if words:
-        conds.append(F.col("term").isin(words))
-    for pre in prefixes:
-        conds.append(F.col("term").startswith(pre))
-    if not conds:
-        raise FtsQueryError("no scoreable terms")
-    cond = conds[0]
-    for c in conds[1:]:
-        cond = cond | c
-    hits = p.filter(cond)
-
-    # document frequency per matched term (small: |terms| rows); a
-    # stored index carries df IN the posting row (no join at all) or in
-    # the term_df table (one tiny filtered scan); a live index
-    # aggregates it from the hits
-    if "df" in hits.columns:
+def _with_stats(index: FtsIndex, hits: DataFrame, terms: str) -> DataFrame:
+    """``hits`` (posting rows) with their ``dl`` and ``df`` columns. A
+    stored index carries both IN the posting row (no join at all); a
+    stored index of the older generation reads df from its term_df table
+    (one tiny filtered scan); a live index aggregates df from the
+    postings matching ``terms`` and joins dl from doc_stats."""
+    if "df" in index.postings.columns:
         dfreq = None
     elif index.term_df is not None:
-        dfreq = index.term_df.filter(cond)
+        dfreq = index.term_df.filter(terms)
     else:
-        dfreq = hits.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    n, avg_dl = index.n_docs, index.avg_dl
-    idf = F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-
-    # a stored index denormalizes dl into the postings (store_fts_index)
-    # — no doc_stats join on the query path then
+        dfreq = (
+            index.postings.filter(terms)
+            .groupBy("term")
+            .agg(F.countDistinct("doc_id").alias("df"))
+        )
     if "dl" not in hits.columns:
         hits = hits.join(index.doc_stats, "doc_id")
     if dfreq is not None:
         hits = hits.join(F.broadcast(dfreq), "term")
-    scored = (
-        hits
-        .withColumn(
-            "contrib",
-            idf
-            * (F.col("tf") * (K1 + 1))
-            / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.lit(avg_dl))),
-        )
-    )
-    return scored.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
+    return hits
+
+
+def _any_leaf(leaves: list[tuple[bool, str]]) -> str:
+    """The posting-row filter matching any of ``leaves`` ((prefix,
+    text) pairs): the plain terms as one ``IN`` list, so it pushes into
+    the scan as a literal set."""
+    words = [literal(t) for prefix, t in leaves if not prefix]
+    conds = [f"term IN ({', '.join(words)})"] if words else []
+    conds += [f"startswith(term, {literal(t)})" for prefix, t in leaves if prefix]
+    return " OR ".join(conds)
+
+
+def _operands(node: Node, cls: type) -> list:
+    """The left-to-right operands of a ``cls`` chain (And / Or)."""
+    out, stack = [], [node]
+    while stack:
+        n = stack.pop()
+        if isinstance(n, cls):
+            stack += [n.right, n.left]
+        else:
+            out.append(n)
+    return out
+
+
+def _compile(node: Node, text_col: str) -> tuple[list, set, str]:
+    """Compile a parsed query to ``(leaves, positive, predicate)``.
+
+    Every distinct leaf condition on a posting row gets one bit: a plain
+    term, a prefix, or a word of a phrase (a phrase word and the same
+    plain term share it). ``leaves[i]`` is bit i's ``(prefix, text)``;
+    ``positive`` holds the bits of the leaves outside every NOT's right
+    side, which are the ones BM25 scores. ``predicate`` is the boolean
+    tree as SQL over the per-doc masks ``_m0, _m1, …`` (63 bits each, so
+    no query size is too large) and the doc text:
+
+    - a term or prefix is its bit;
+    - a phrase is all its word bits AND its separator-aware regex on
+      ``lower(text)`` (adjacency needs positions, which postings lack);
+    - AND / OR / NOT are the SQL operators, a NOT b = a AND NOT b.
+
+    NOT is sound over the aggregate: the parser rejects a pure-NOT query,
+    so every matching document hits a positive leaf and is in the scan.
+    """
+    slots: dict[tuple[bool, str], int] = {}
+    positive: set[int] = set()
+
+    def bit(leaf: tuple[bool, str], pos: bool) -> str:
+        i = slots.setdefault(leaf, len(slots))
+        if pos:
+            positive.add(i)
+        return f"(_m{i // 63} & {1 << (i % 63)}L) != 0"
+
+    def pred(n: Node, pos: bool) -> str:
+        if isinstance(n, Term):
+            return bit((n.prefix, n.text), pos)
+        if isinstance(n, Phrase):
+            rx = f"lower({ident(text_col)}) RLIKE {literal(_phrase_regex(n.terms))}"
+            return "(" + " AND ".join([bit((False, w), pos) for w in n.terms] + [rx]) + ")"
+        if isinstance(n, (And, Or)):
+            op = " AND " if isinstance(n, And) else " OR "
+            return "(" + op.join(pred(c, pos) for c in _operands(n, type(n))) + ")"
+        if isinstance(n, Not):
+            return f"({pred(n.left, pos)} AND NOT {pred(n.right, False)})"
+        raise FtsQueryError(f"bad node: {n!r}")
+
+    predicate = pred(node, True)
+    return list(slots), positive, predicate
 
 
 def fts_search(
@@ -432,8 +398,21 @@ def fts_search(
     payload_cols: list[str] | None = None,
     rank_digits: int | None = None,
 ) -> DataFrame:
-    """Ranked boolean retrieval: parse -> match set -> BM25 score -> join
-    payload -> order by score desc, doc_id asc -> limit.
+    """Ranked boolean retrieval: parse -> compile -> ONE postings scan and
+    ``groupBy(doc_id)`` -> join payload + mask predicate -> order by score
+    desc, doc_id asc -> limit.
+
+    The scan keeps the posting rows of every leaf (positive and
+    negative); the aggregate sums the BM25 contributions of the positive
+    rows and ORs each row's leaf bits into the doc's masks (see
+    :func:`_compile`). Phrases score their member words individually
+    (documented deviation from FTS5, which scores a phrase as one unit;
+    ordering parity is the contract). Prefix terms score every matching
+    vocabulary term; a posting row matching several leaves counts once.
+    The whole request is built from SQL text, so it costs a few dozen
+    Py4J round trips whatever the query size, and on a stored index it
+    runs at most three jobs (the aggregate's shuffle, the payload side,
+    the top-k).
 
     Column filters (language =, path LIKE in the reference,
     exact_sqlite.go:73-80) ride along as `where` and are pushed into the
@@ -446,23 +425,34 @@ def fts_search(
     packs onto the deterministic doc_id tie-break. Rank-consumers
     (hybrid RRF fusion) set 9; plain search keeps the raw score.
     """
-    node = parse_fts_query(query)
-    matches = _match_node(index, node)
-    scores = _score_terms(index, query_terms(node))
+    leaves, positive, predicate = _compile(parse_fts_query(query), index.text_col)
+    scan = _any_leaf(leaves)
+    hits = _with_stats(index, index.postings.filter(scan), scan)
+    # a matching doc always hits a positive leaf, so its sum is not NULL
+    scoring = _any_leaf([leaves[i] for i in sorted(positive)])
+    aggs = [
+        F.expr(
+            f"sum(CASE WHEN {scoring} THEN "
+            f"{_bm25_sql(index.n_docs, index.avg_dl)} END) AS score"
+        )
+    ]
+    for k in range(0, len(leaves), 63):
+        bits = " | ".join(
+            f"CASE WHEN {_any_leaf([leaf])} THEN {1 << j}L ELSE 0L END"
+            for j, leaf in enumerate(leaves[k : k + 63])
+        )
+        aggs.append(F.expr(f"bit_or({bits}) AS _m{k // 63}"))
     docs = index.docs
     if where is not None:
         docs = docs.filter(where)
-    out = (
-        matches.join(scores, "doc_id", "left")
-        .na.fill({"score": 0.0})
-        .join(docs.withColumnRenamed(index.id_col, "doc_id"), "doc_id")
-    )
-    if rank_digits is not None:
-        out = out.withColumn("score", F.round("score", rank_digits))
-    cols = ["doc_id", "score"] + (payload_cols or [])
+    score = "score" if rank_digits is None else f"round(score, {int(rank_digits)}) AS score"
     return (
-        out.select(*cols)
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        hits.groupBy("doc_id")
+        .agg(*aggs)
+        .join(docs.withColumnRenamed(index.id_col, "doc_id"), "doc_id")
+        .filter(predicate)
+        .selectExpr("doc_id", score, *(ident(c) for c in payload_cols or []))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(limit)
     )
 
@@ -620,31 +610,12 @@ def fts_search_batch(
     spark = index.postings.sparkSession
     qt = local_frame(spark, pairs, ["query_id", "term", "n_terms"])
 
-    # the union-of-terms filter is a literal isin, so it PUSHES DOWN to
-    # the posting scan (file pruning on a term-partitioned stored index,
-    # dictionary/row-group skipping either way) — a broadcast join alone
-    # would read every posting row
-    all_terms = sorted({t for _, t, _n in pairs})
-    hits = index.postings.filter(F.col("term").isin(all_terms)).join(
-        F.broadcast(qt), "term"
-    )
-    if "df" in index.postings.columns:
-        # stored index: df rides in the posting row — no dfreq source
-        # and no broadcast-build job at all
-        dfreq = None
-    elif index.term_df is not None:
-        # stored index (pre-df generation): one tiny scan, no aggregate
-        dfreq = index.term_df.filter(F.col("term").isin(all_terms))
-    else:
-        dfreq = (
-            index.postings.filter(F.col("term").isin(all_terms))
-            .groupBy("term")
-            .agg(F.countDistinct("doc_id").alias("df"))
-        )
+    # the union-of-terms filter is a literal IN list, so it PUSHES DOWN
+    # to the posting scan (file pruning on a term-partitioned stored
+    # index, dictionary/row-group skipping either way) — a broadcast
+    # join alone would read every posting row
+    terms = _any_leaf([(False, t) for t in sorted({t for _, t, _n in pairs})])
     n, avg_dl = index.n_docs, index.avg_dl
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
     # one exchange serves both the aggregate and the top-k window:
     # hash-partitioning on query_id alone satisfies the (query_id,
     # doc_id) aggregate's clustering AND the window's partitioning, so
@@ -655,17 +626,11 @@ def fts_search_batch(
     # the BM25 contribution is computed MAP-SIDE so the exchange moves
     # only (query_id, doc_id, contrib, n_terms): the string term and
     # the tf/dl/df ints never cross the wire.
-    if "dl" not in hits.columns:
-        hits = hits.join(index.doc_stats, "doc_id")
-    if dfreq is not None:
-        hits = hits.join(F.broadcast(dfreq), "term")
+    hits = _with_stats(
+        index, index.postings.filter(terms).join(F.broadcast(qt), "term"), terms
+    )
     scored = (
-        hits.withColumn(
-            "contrib",
-            idf
-            * (F.col("tf") * (K1 + 1))
-            / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.lit(avg_dl))),
-        )
+        hits.withColumn("contrib", F.expr(_bm25_sql(n, avg_dl)))
         .select("query_id", "doc_id", "contrib", "n_terms")
         .repartition(_batch_exchange_partitions(spark, len(pairs), n), "query_id")
         .groupBy("query_id", "doc_id")

@@ -760,7 +760,7 @@ def _estimated_wedge_rows(edges: DataFrame) -> int:
     """Exact wedge-join output size from the degree aggregates: the
     a<b-oriented self-join on the shared middle produces
     Σ_b cnt(·,b)·cnt(b,·) rows. One tiny job (node-cardinality-sized)
-    against the cached edge list."""
+    against the checkpointed edge list."""
     c1 = edges.groupBy(F.col("b").alias("n")).agg(F.count(F.lit(1)).alias("c1"))
     c2 = edges.groupBy(F.col("a").alias("n")).agg(F.count(F.lit(1)).alias("c2"))
     row = c1.join(c2, "n").agg(
@@ -801,18 +801,20 @@ def triangles_per_node(edges: DataFrame) -> DataFrame:
     cap bounds. Each triangle explodes to its 3 corners before the final
     count aggregate (map-side partial). The edge list feeds THREE join
     inputs shuffled on three different keys — no exchange reuse is
-    possible — so it is cached here rather than recomputed per input.
+    possible — so it is a lazy local checkpoint rather than recomputed
+    per input: the first job that reads it (the wedge estimate below)
+    stores it, and its blocks go with the frame.
 
     The closure join's sort runs over the WEDGE frame — quadratic in
     degree, not linear in edges — so a fixed ``shuffle.partitions``
     under-partitions it at scale (measured 19x wall for 10x data at
     sf1, SCALE.md). The wedge count is computed exactly from the degree
-    aggregates (one tiny extra job against the cached edge list) and
+    aggregates (one tiny extra job against the checkpointed edge list) and
     the wedge frame explicitly repartitioned on the closure keys to
     ~5M rows/partition when that exceeds the session default — cheap
     insurance rather than relying on cluster AQE split heuristics.
     """
-    edges = edges.cache()
+    edges = edges.localCheckpoint(eager=False)
     e1 = edges.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
     e2 = edges.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
     wedges = e1.join(e2, "tb")
@@ -1095,7 +1097,7 @@ def node_similarity(edges: DataFrame, *, k: int = 50) -> DataFrame:
     adj = (
         edges.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .union(edges.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .cache()
+        .localCheckpoint(eager=False)
     )
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     x = adj.select(F.col("node").alias("pa"), F.col("nbr").alias("via"))

@@ -23,7 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from ..functions.vector import dot_product, similarity_score
+from ..functions.sql import ident, literal
+from ..functions.vector import double_array, hyperplane_signature, similarity_score
 from ..session import local_frame
 
 
@@ -50,18 +51,23 @@ def knn_topk(
     truly-tied vectors (exact duplicates, replicated corpora) rank by
     the id tie-break instead of by ±1-ulp reassociation noise — set by
     rank-consumers like hybrid RRF; plain search keeps the raw score.
+
+    The request is built from SQL text — the query vector is one array
+    literal inside one ``F.expr`` — so it costs a few dozen Py4J round
+    trips whatever the vector's dimension.
     """
-    q = F.lit(query_vec).cast("array<double>")
     df = corpus
     if where is not None:
         df = df.filter(where)
-    df = df.withColumn("score", similarity_score(F.col(vec_col), q))
+    df = df.withColumn(
+        "score", similarity_score(ident(vec_col), double_array(query_vec))
+    )
     if rank_digits is not None:
-        df = df.withColumn("score", F.round("score", rank_digits))
+        df = df.withColumn("score", F.expr(f"round(score, {int(rank_digits)})"))
     if min_score is not None:
-        df = df.filter(F.col("score") >= min_score)
-    cols = [id_col, "score"] + (payload_cols or [])
-    return df.select(*cols).orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+        df = df.filter(f"score >= {literal(min_score)}")
+    cols = [ident(c) for c in [id_col, "score"] + (payload_cols or [])]
+    return df.selectExpr(*cols).orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
 def knn_join(
@@ -227,19 +233,10 @@ def knn_join_lsh(
         dim = int(corpus.select(F.size(F.col(corpus_vec)).alias("d")).first()["d"])
     planes = [_hyperplane(dim, seed + p) for p in range(n_planes)]
 
-    def signature(vec: str) -> Column:
-        bits = [
-            F.when(dot_product(F.col(vec), F.lit(plane)) >= 0, F.lit("1")).otherwise(
-                F.lit("0")
-            )
-            for plane in planes
-        ]
-        return F.concat(*bits)
-
-    c = corpus.withColumn("bucket", signature(corpus_vec))
-    q = queries.withColumn("bucket", signature(query_vec))
+    c = corpus.withColumn("bucket", hyperplane_signature(ident(corpus_vec), planes))
+    q = queries.withColumn("bucket", hyperplane_signature(ident(query_vec), planes))
     cand = c.join(F.broadcast(q), "bucket").withColumn(
-        "score", similarity_score(F.col(corpus_vec), F.col(query_vec))
+        "score", similarity_score(ident(corpus_vec), ident(query_vec))
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("score").desc(), F.col(corpus_id).asc()
@@ -489,7 +486,7 @@ def knn_join_ivf(
 
     q = queries.withColumn("cluster_id", F.explode(probes(F.col(query_vec))))
     cand = c.join(F.broadcast(q), "cluster_id").withColumn(
-        "score", similarity_score(F.col(corpus_vec), F.col(query_vec))
+        "score", similarity_score(ident(corpus_vec), ident(query_vec))
     )
     w = Window.partitionBy(query_id).orderBy(
         F.col("score").desc(), F.col(corpus_id).asc()
@@ -807,7 +804,7 @@ def knn_join_pq_refined(
         corpus.select(corpus_id, corpus_vec), corpus_id
     ).join(
         F.broadcast(queries.select(query_id, query_vec)), query_id
-    ).withColumn("score", similarity_score(F.col(corpus_vec), F.col(query_vec)))
+    ).withColumn("score", similarity_score(ident(corpus_vec), ident(query_vec)))
     w = Window.partitionBy(query_id).orderBy(
         F.col("score").desc(), F.col(corpus_id).asc()
     )
@@ -917,11 +914,13 @@ def knn_topk_int8(
     # r09 before-plan showed two array_max(transform(...)) per element)
     scale, qv = quantize_int8(F.col(vec_col), max_abs=F.col("_amax"))
     deq = F.transform(qv, lambda qi: qi.cast("double") * scale)
-    q = F.lit(query_vec).cast("array<double>")
     return (
         corpus.withColumn("_amax", int8_max_abs(F.col(vec_col)))
         .withColumn("_deq", deq)
-        .select(id_col, similarity_score(F.col("_deq"), q).alias("score"))
+        .select(
+            id_col,
+            similarity_score("_deq", double_array(query_vec)).alias("score"),
+        )
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -1051,10 +1050,10 @@ def knn_topk_binary_rerank(
         .orderBy(F.col("_ham").asc(), F.col(id_col).asc())
         .limit(n_candidates)
     )
-    q = F.lit(query_vec).cast("array<double>")
     return (
         cands.select(
-            id_col, similarity_score(F.col(vec_col), q).alias("score")
+            id_col,
+            similarity_score(ident(vec_col), double_array(query_vec)).alias("score"),
         )
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)

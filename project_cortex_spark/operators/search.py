@@ -7,7 +7,7 @@ chunk_type OR-filter, tag AND-filter -> score = 1 - dist/2 -> min_score
 a language tag becomes ``files.language = tag``; 'code' becomes
 ``chunk_type != 'documentation'``; 'documentation' the equality.
 
-Spark-first differences (SURVEY §3.2): filters are plain Column
+Spark-first differences (SURVEY §3.2): filters are plain SQL
 predicates that Catalyst pushes BELOW the scoring projection, so the
 reference's 2x over-fetch headroom (it must post-filter after vec0
 returns) disappears — we score only surviving rows and take an exact
@@ -22,12 +22,14 @@ per-partition partial top-ks, not a sort.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from project_cortex_spark.functions.sql import ident, literal
 from project_cortex_spark.operators.knn import knn_topk
 from project_cortex_spark.pipeline.chunks import assemble_code_chunks
 from project_cortex_spark.pipeline.embed import DEFAULT_DIM, PROVIDERS, embed_chunks
+from project_cortex_spark.session import local_frame
 
 
 def build_search_index(
@@ -49,13 +51,14 @@ def build_search_index(
     return embedded.join(payload, id_col)
 
 
-def tag_predicate(tag: str) -> Column:
-    """P9 tag -> column rewrite (search_sqlite.go:235-276)."""
+def tag_predicate(tag: str) -> str:
+    """P9 tag -> column predicate rewrite (search_sqlite.go:235-276), as
+    SQL text."""
     if tag == "code":
-        return F.col("chunk_type") != "documentation"
+        return "chunk_type != 'documentation'"
     if tag == "documentation":
-        return F.col("chunk_type") == "documentation"
-    return F.col("language") == tag
+        return "chunk_type = 'documentation'"
+    return f"language = {literal(tag)}"
 
 
 def lexical_retrieval_top1(
@@ -104,7 +107,7 @@ def lexical_retrieval_top1(
     from pyspark.sql import Window
 
     scored = passages.crossJoin(F.broadcast(queries)).withColumn(
-        "score", similarity_score(F.col("p_vec"), F.col("q_vec"))
+        "score", similarity_score("p_vec", "q_vec")
     )
     w = Window.partitionBy("query_doc_id").orderBy(
         F.col("score").desc(), F.col("top_doc_id").asc()
@@ -114,6 +117,14 @@ def lexical_retrieval_top1(
         .filter(F.col("rn") == 1)
         .select("query_doc_id", "top_doc_id")
     )
+
+
+def _query_vector(semantic_query: str, dim: int, provider: str) -> list[float]:
+    embedder = PROVIDERS[provider]
+    return [
+        float(x)
+        for x in embedder(pd.Series([semantic_query]), dim=dim, mode="query")[0]
+    ]
 
 
 def semantic_search(
@@ -131,22 +142,16 @@ def semantic_search(
     top ``limit`` chunks with payload: (chunk_id, doc_id, chunk_type,
     language, score). chunk_types OR together; tags AND together.
     ``provider`` must match the one the index was built with."""
-    embed = PROVIDERS[provider]
-    qv = [float(x) for x in embed(pd.Series([query]), dim=dim, mode="query")[0]]
-    where = None
-    if chunk_types:
-        where = F.col("chunk_type").isin(*chunk_types)
-    for tag in tags or []:
-        p = tag_predicate(tag)
-        where = p if where is None else (where & p)
+    where = [f"chunk_type IN ({', '.join(map(literal, chunk_types))})"] if chunk_types else []
+    where += [f"({tag_predicate(tag)})" for tag in tags or []]
     return knn_topk(
         index,
-        qv,
+        _query_vector(query, dim, provider),
         vec_col="embedding",
         id_col="chunk_id",
         k=limit,
         min_score=min_score,
-        where=where,
+        where=F.expr(" AND ".join(where)) if where else None,
         payload_cols=["doc_id", "chunk_type", "language"],
     )
 
@@ -169,6 +174,39 @@ def build_doc_vectors(
         mode="passage",
         provider=provider,
     ).select(id_col, "embedding")
+
+
+def _fuse(
+    lex: DataFrame,
+    sem: DataFrame,
+    id_col: str,
+    k: int,
+    value,
+    combine,
+    value_type: str,
+    out: list[str],
+) -> DataFrame:
+    """Fuse two ranked top-N lists on the driver — the one fusion step
+    both hybrid operators share.
+
+    Each list is already cut to ≤N rows in (score desc, id asc) order, so
+    it is collected as is. ``value(rows)`` maps one list's rows
+    ``(id, score)`` to ``{id: value}`` (a rank, a normalized score);
+    ``combine(a, b)`` turns a doc's two values — None where the doc is
+    missing from a list — into its fused score ``_f``. The top ``k``
+    docs by (``_f`` desc, id asc) come back through ``local_frame`` as
+    ``(id, _f, _a, _b)`` in that order, projected by the SQL ``out``
+    expressions, which Spark evaluates (its ``round`` is the contract's).
+    """
+    a, b = value(lex.collect()), value(sem.collect())
+    ids = list(dict.fromkeys([*a, *b]))
+    rows = sorted(
+        ((i, combine(a.get(i), b.get(i)), a.get(i), b.get(i)) for i in ids),
+        key=lambda r: (-r[1], r[0]),
+    )[:k]
+    id_type = lex.schema[id_col].dataType.simpleString()
+    schema = f"{ident(id_col)} {id_type}, _f double, _a {value_type}, _b {value_type}"
+    return local_frame(lex.sparkSession, rows, schema).selectExpr(ident(id_col), *out)
 
 
 def hybrid_search_rrf(
@@ -199,22 +237,16 @@ def hybrid_search_rrf(
     matches the SQL replay's ``row_number()``.
 
     Physical shape: each list is an independent distributed top-N
-    (BM25 posting join / TakeOrderedAndProject scoring scan); only the
-    two ≤N-row rank frames meet — the unpartitioned row_number windows
-    and the full-outer join run on N=50 rows, driver-trivial at any
-    corpus scale. Because ranks are integers, the fused score is a
+    (BM25 posting aggregate / TakeOrderedAndProject scoring scan); the
+    call collects the two ≤N-row lists and fuses them on the driver
+    (:func:`_fuse`), returning the ≤k fused rows as a local relation —
+    the lists' jobs run inside the call, and the returned frame runs
+    none. Because ranks are integers, the fused score is a
     deterministic double in BOTH engines — the whole composite is
     hash-gateable (oracle.hybrid_rrf_oracle_sql).
     """
     from project_cortex_spark.operators.fts import fts_search
-    from project_cortex_spark.operators.knn import knn_topk
-    from pyspark.sql import Window
 
-    embedder = PROVIDERS[provider]
-    qv = [
-        float(x)
-        for x in embedder(pd.Series([semantic_query]), dim=dim, mode="query")[0]
-    ]
     # rank_digits quantizes both lists' scores before the cut and the
     # ranks: a replicated corpus holds packs of truly-equal scores that
     # reassociate to ±1-ulp differences — unquantized, those rank in
@@ -226,40 +258,28 @@ def hybrid_search_rrf(
         lexical_query,
         limit=n_per_list,
         rank_digits=rank_digits,
-    ).select(id_col, "score")
+    )
     sem = knn_topk(
         doc_vectors,
-        qv,
+        _query_vector(semantic_query, dim, provider),
         vec_col="embedding",
         id_col=id_col,
         k=n_per_list,
         rank_digits=rank_digits,
     )
 
-    def ranked(df: DataFrame, rank_name: str) -> DataFrame:
-        # unpartitioned window over an already-cut top-N frame (≤ 50
-        # rows): single-task by construction, not a scale concern
-        w = Window.orderBy(F.col("score").desc(), F.col(id_col).asc())
-        return df.select(
-            id_col, F.row_number().over(w).cast("long").alias(rank_name)
-        )
+    def contrib(rank: int | None) -> float:
+        return 0.0 if rank is None else 1.0 / (float(rrf_k) + rank)
 
-    fused = ranked(lex, "lex_rank").join(
-        ranked(sem, "sem_rank"), [id_col], "full"
-    )
-    contrib = lambda r: F.coalesce(  # noqa: E731
-        F.lit(1.0) / (F.lit(float(rrf_k)) + F.col(r)), F.lit(0.0)
-    )
-    return (
-        fused.withColumn("_f", contrib("lex_rank") + contrib("sem_rank"))
-        .orderBy(F.col("_f").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(
-            id_col,
-            F.round("_f", 6).alias("rrf_score"),
-            "lex_rank",
-            "sem_rank",
-        )
+    return _fuse(
+        lex,
+        sem,
+        id_col,
+        k,
+        lambda rows: {r[0]: i for i, r in enumerate(rows, 1)},
+        lambda a, b: contrib(a) + contrib(b),
+        "bigint",
+        ["round(_f, 6) AS rrf_score", "_a AS lex_rank", "_b AS sem_rank"],
     )
 
 
@@ -285,56 +305,50 @@ def hybrid_search_weighted(
     by convention; a doc missing from a list contributes 0.
 
     Same physical shape as :func:`hybrid_search_rrf`: two independent
-    distributed top-N lists, fusion over two ≤N-row frames. The
+    distributed top-N lists, fused on the driver by :func:`_fuse`. The
     normalization inputs are the 9 dp rank-quantized scores, so every
     downstream double is a pure function of identical inputs in both
     engines — hash-gateable end to end.
     """
     from project_cortex_spark.operators.fts import fts_search
-    from project_cortex_spark.operators.knn import knn_topk
-    from pyspark.sql import Window
 
-    embedder = PROVIDERS[provider]
-    qv = [
-        float(x)
-        for x in embedder(pd.Series([semantic_query]), dim=dim, mode="query")[0]
-    ]
     lex = fts_search(
         fts_index, lexical_query, limit=n_per_list, rank_digits=rank_digits
-    ).select(id_col, "score")
+    )
     sem = knn_topk(
         doc_vectors,
-        qv,
+        _query_vector(semantic_query, dim, provider),
         vec_col="embedding",
         id_col=id_col,
         k=n_per_list,
         rank_digits=rank_digits,
     )
 
-    def normed(df: DataFrame, out: str) -> DataFrame:
-        w = Window.partitionBy(F.lit(1))  # whole ≤N-row frame
-        lo, hi = F.min("score").over(w), F.max("score").over(w)
-        return df.select(
-            id_col,
-            F.when(hi == lo, F.lit(1.0))
-            .otherwise((F.col("score") - lo) / (hi - lo))
-            .alias(out),
-        )
+    def normed(rows) -> dict:
+        # SQL min/max skip NULL scores; hi == lo gives 1.0 to every row
+        scores = [r[1] for r in rows if r[1] is not None]
+        lo, hi = (min(scores), max(scores)) if scores else (None, None)
+        return {
+            r[0]: 1.0 if lo is not None and hi == lo
+            else None if r[1] is None or lo is None
+            else (r[1] - lo) / (hi - lo)
+            for r in rows
+        }
 
-    fused = normed(lex, "lex_norm").join(
-        normed(sem, "sem_norm"), [id_col], "full"
-    )
-    f = F.lit(w_lex) * F.coalesce(F.col("lex_norm"), F.lit(0.0)) + F.lit(
-        w_sem
-    ) * F.coalesce(F.col("sem_norm"), F.lit(0.0))
-    return (
-        fused.withColumn("_f", f)
-        .orderBy(F.col("_f").desc(), F.col(id_col).asc())
-        .limit(k)
-        .select(
-            id_col,
-            F.round("_f", 6).alias("wsum_score"),
-            F.round("lex_norm", 6).alias("lex_norm"),
-            F.round("sem_norm", 6).alias("sem_norm"),
-        )
+    def weighted(a: float | None, b: float | None) -> float:
+        return w_lex * (0.0 if a is None else a) + w_sem * (0.0 if b is None else b)
+
+    return _fuse(
+        lex,
+        sem,
+        id_col,
+        k,
+        normed,
+        weighted,
+        "double",
+        [
+            "round(_f, 6) AS wsum_score",
+            "round(_a, 6) AS lex_norm",
+            "round(_b, 6) AS sem_norm",
+        ],
     )

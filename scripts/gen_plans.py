@@ -22,7 +22,7 @@ PICKS = {
     "join_asof": "as-of join: ONE shuffle (union + window), no range probe",
     "events_sessionize": "gap sessions: single shuffle on user_id, window assembly",
     "pipeline_chunk_markdown": "structure-aware chunking: zero Exchange (narrow Arrow map)",
-    "fts_composite": "FTS bool+phrase: term filters pushed below the shuffle, ReuseExchange dedupes postings subplan",
+    "fts_composite": "FTS bool+phrase, one-pass compiler: ONE postings scan filtered to every leaf, ONE groupBy(doc_id) aggregate (BM25 sum over the positive leaves + bit_or of the leaf bits), then the payload join carrying the mask predicate and the phrase regex — no per-leaf subplans, joins, unions or anti-joins between posting sets (this registry query reads a live index, so df is one more aggregate over the same filtered postings, broadcast back, and dl joins from doc_stats; a stored index carries both in the posting row)",
     "corpus_pack_sequences": "sequence packing: EXACTLY ONE hash Exchange (writer shard) — no global sort",
     "text_lm_score": "bigram LM: two count aggregates with map-side partials, natural-key joins, 1-row broadcast vocab",
     "text_c4_clean": "C4 cleaning: zero Exchange — line rules are collection expressions at scan bandwidth",
@@ -35,7 +35,7 @@ PICKS = {
     "corpus_importance_sample": "quality-weighted sampling: zero Exchange — md5-bucket filter at scan bandwidth",
     "events_funnel": "3-step funnel: ONE shuffle (groupBy user) + JVM higher-order fold over sorted per-user arrays — no self-joins",
     "search_lexical_recall": "retrieval contract: broadcast query side vs corpus scan, map-side partial window top-1",
-    "graph_triangles": "wedge closure: cached edge list feeding three join inputs; the wedge frame (quadratic in degree, not linear in edges) is repartitioned to ~5M rows/partition from the EXACT wedge count when that exceeds the session default, and the closure join is SHUFFLE-HASH (edge list builds, wedges STREAM — a sort-merge plan would sort the wedge frame, the dominant cost at sf1)",
+    "graph_triangles": "wedge closure: lazily checkpointed edge list feeding three join inputs; the wedge frame (quadratic in degree, not linear in edges) is repartitioned to ~5M rows/partition from the EXACT wedge count when that exceeds the session default, and the closure join is SHUFFLE-HASH (edge list builds, wedges STREAM — a sort-merge plan would sort the wedge frame, the dominant cost at sf1)",
     "graph_pagerank": "power iteration: plan shows only the final checkpointed RDD (the kernel's lazy localCheckpoint truncates lineage per step BY DESIGN — an un-truncated 5-step plan would be a 5-deep join tower); per step: |V|-row rank frame broadcast onto the stationary edges + one hash aggregate; N is observed by the node frame's eager checkpoint, no count job",
     "dedup_ngram_spans": "duplicated-span fraction: shingle-df join lands back on the SAME shuffle key, 1:1 fan-out (no hot-key blowup)",
     "graph_hotspots": "degree hotspots: ONE scan (edge pair exploded map-side, not a twice-derived Union), ONE aggregate exchange, TakeOrderedAndProject top-N",
@@ -83,7 +83,7 @@ PICKS = {
     "events_heatmap": "day-hour heatmap: ONE map-side-partial aggregate over <=168 integer-arithmetic keys — no calendar functions",
     "knn_join_ivf": "IVF ANN join: tiny exploded query->probe frame BROADCAST against the cluster-assigned corpus — an equi-join on cluster_id scoring |corpus|*nprobe/n_centroids rows instead of |corpus|; at scale the assignment store is partitioned by cluster_id and the same join prunes partitions",
     "knn_binary_rerank": "two-stage binary ANN: sign-code packing + XOR+popcount Hamming are ALL codegen integer ops over the scan; float vectors are read only for the n_candidates-row TakeOrderedAndProject output — at scale the 8 B/vector code column scans where the 256 B floats never do",
-    "search_hybrid_rrf": "hybrid RRF: two independent distributed top-N subplans (BM25 posting join / KNN scoring scan); rank windows and the full-outer fusion join run on two <=50-row frames — nothing corpus-sized crosses the fusion",
+    "search_hybrid_rrf": "hybrid RRF: the two distributed top-N lists (BM25 posting aggregate / KNN scoring scan) run and are collected inside the call and fused on the driver; the returned plan is a LocalTableScan of the <=k fused rows — no windows, no full-outer join, no job at collect",
     "dedup_unicode_nfc": "canonical dedup: one Arrow-batched NFC map then the standard hash-groupBy — one shuffle on the normalized hash, same plan family as exact dedup",
     "dedup_substring_rewrite": "exact-substring rewrite: per-char explode at scan parallelism, dup-gram detection join lands on the gram aggregate's own hash key (min!=max, no countDistinct expand), cummax interval merge + aggregate() fold are window/codegen — full texts never shuffle as join payloads",
     "graph_connected_components": "large-star/small-star CC: each half-round is ONE window over the edge frame's own shuffle key (no agg+join), frame CONTRACTS per round, lineage cut per round; converges in O(log^2 n) rounds on any topology (chain A/B in SCALE.md); the convergence fingerprint is observed by each round's checkpoint job, not a separate aggregate",

@@ -31,8 +31,10 @@ def registry(spark):
     return load_tables(spark, SF_DIR)
 
 
-@pytest.fixture(scope="session")
-def duck():
+def duck_connect():
+    """A new in-memory DuckDB database with a view per test table. Each
+    call is its own database, so a DuckDB internal error (which
+    invalidates the database it happens in) stays with its caller."""
     con = duckdb.connect()
     for t in DEFAULT_TABLES:
         path = os.path.join(SF_DIR, f"{t}.parquet")
@@ -40,6 +42,12 @@ def duck():
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
             )
+    return con
+
+
+@pytest.fixture(scope="session")
+def duck():
+    con = duck_connect()
     yield con
     con.close()
 

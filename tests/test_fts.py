@@ -5,6 +5,7 @@ filters, snippet shape."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from project_cortex_spark.operators.fts import (
@@ -242,3 +243,104 @@ class TestStoredIndexQueryPaths:
         a = fts_search_batch(first, [(1, term)], limit=3).collect()
         b = fts_search_batch(second, [(1, term)], limit=3).collect()
         assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+# ---------------------------------------------------------------------------
+# the one-pass compiler against the set-algebra oracle, on random trees
+# ---------------------------------------------------------------------------
+
+# the sf0.001 documents are drawn from a small vocabulary, so random
+# terms, phrases and prefixes over it hit real postings, repeat, and
+# overlap; "zebra" occurs nowhere
+_WORDS = ["key", "agg", "row", "scan", "merge", "join", "sort", "the", "a",
+          "spark", "batch", "window", "fast", "table", "zebra"]
+_LEAF = st.one_of(
+    st.sampled_from(_WORDS),
+    st.sampled_from(_WORDS).map(lambda w: w[:2] + "*"),
+    st.lists(st.sampled_from(_WORDS), min_size=2, max_size=3).map(
+        lambda ws: '"' + " ".join(ws) + '"'
+    ),
+)
+
+
+def _combine(children):
+    # binary nodes over two subtrees; parenthesized or left to the
+    # parser's NOT > AND > OR precedence
+    return st.tuples(
+        children, st.sampled_from(["", "AND ", "OR ", "NOT "]), children,
+        st.booleans(),
+    ).map(lambda t: f"({t[0]} {t[1]}{t[2]})" if t[3] else f"{t[0]} {t[1]}{t[2]}")
+
+
+_QUERY = st.recursive(_LEAF, _combine, max_leaves=7)
+
+
+@pytest.fixture(scope="module")
+def stored_index(spark, registry, fts_index, tmp_path_factory):
+    from project_cortex_spark.operators.fts import load_fts_index, store_fts_index
+
+    path = str(tmp_path_factory.mktemp("fts") / "idx")
+    store_fts_index(fts_index, path)
+    return load_fts_index(
+        spark, path, registry.table("documents"), id_col="doc_id", text_col="text"
+    )
+
+
+@settings(max_examples=12, deadline=None)
+@given(_QUERY)
+def test_compiled_query_matches_set_algebra_oracle(fts_index, stored_index, duck, query):
+    """Any tree of AND / OR / NOT, parentheses, prefixes, phrases and
+    repeated terms returns the oracle's rows and scores on a live and a
+    stored index. The limit covers the whole 500-doc corpus, so no cut
+    falls inside a pack of tied scores."""
+    sql = fts_oracle_sql(query, limit=500)
+    for index in (fts_index, stored_index):
+        df = fts_search(index, query, limit=500).withColumn(
+            "score", F.round("score", 6)
+        )
+        assert_matches_oracle(df, duck, sql)
+
+
+@pytest.mark.parametrize(
+    "query", ["it's", "o'brien\\", "\\' OR term", "it'*", "a\\*", '"key it\'s"']
+)
+def test_quote_and_backslash_terms_stay_literal(fts_index, duck, query):
+    """A term holding ' or \\ is compiled into SQL text as a literal: it
+    neither raises nor ends its literal early — it matches what the
+    oracle matches for that literal term."""
+    _run(fts_index, duck, query)
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    st.lists(
+        st.text(
+            alphabet=st.characters(blacklist_categories=("Cs",)),
+            max_size=30,
+        )
+        | st.sampled_from(["'", "\\", "\\'", "''", "--", "/*", "\n", "é中"]),
+        min_size=1,
+        max_size=8,
+    ),
+    st.lists(st.floats(allow_nan=True, allow_infinity=True), min_size=1, max_size=8),
+)
+def test_sql_literal_round_trips(spark, strings, doubles):
+    """Spark's parser reads every rendered string and double back to
+    exactly the Python value: quotes, backslashes, comment markers,
+    newlines and non-ASCII stay inside the string literal, and a double
+    keeps every bit (signed zero, subnormals, NaN and ±inf included)."""
+    import math
+    import struct
+
+    from project_cortex_spark.functions.sql import literal
+
+    cols = [F.expr(literal(s)).alias(f"s{i}") for i, s in enumerate(strings)]
+    cols += [F.expr(literal(x)).alias(f"d{i}") for i, x in enumerate(doubles)]
+    row = spark.range(1).select(*cols).first()
+    assert [row[f"s{i}"] for i in range(len(strings))] == strings
+    for i, x in enumerate(doubles):
+        got = row[f"d{i}"]
+        if math.isnan(x):
+            assert math.isnan(got)
+        else:
+            assert struct.pack(">d", got) == struct.pack(">d", x)

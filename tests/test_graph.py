@@ -644,9 +644,10 @@ def _cached_rdd_ids(spark) -> set:
 @pytest.mark.parametrize("shape", ["empty", "null_endpoint"])
 def test_frontier_loop_callers_degenerate_inputs(spark, shape):
     """Every caller of the shared frontier loop and of the fixpoint
-    kernel takes an empty edge frame and an edge frame with NULL
-    endpoints without raising, returns its documented schema, and leaves
-    no cached frame behind. A NULL endpoint carries no edge: where that
+    kernel, and the two wedge operators (triangles, node similarity),
+    takes an empty edge frame and an edge frame with NULL endpoints
+    without raising, returns its documented schema, and leaves no cached
+    frame behind. A NULL endpoint carries no edge: where that
     contract holds, the call equals the same call on the NULL-free rows
     (3 and 4 are reached only through a NULL endpoint, so they are no
     nodes)."""
@@ -660,9 +661,11 @@ def test_frontier_loop_callers_degenerate_inputs(spark, shape):
         connected_components,
         hierarchy_closure,
         kcore,
+        node_similarity,
         pagerank,
         pagerank_personalized,
         strongly_connected_components,
+        triangles_per_node,
     )
 
     clean = [] if shape == "empty" else [(0, 1), (1, 2)]
@@ -699,6 +702,10 @@ def test_frontier_loop_callers_degenerate_inputs(spark, shape):
          ["doc_id", "cluster_id", "keep"], True),
         (lambda r: duplicate_clusters(frame(r, undirected)),
          ["doc_id", "cluster_id", "keep"], True),
+        (lambda r: triangles_per_node(frame(r, undirected)),
+         ["node", "n_triangles"], False),
+        (lambda r: node_similarity(frame(r, undirected)),
+         ["pa", "pb", "n_common", "jaccard"], False),
     ]
     for call, columns, null_free in calls:
         before = _cached_rdd_ids(spark)

@@ -148,6 +148,46 @@ def test_salted_join_broadcast_dispatch(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_salted_join_keeps_salted_path_when_stats_fail(spark, tmp_path, monkeypatch):
+    """The broadcast dispatch reads the right side's size from the JVM
+    plan (``_jdf`` → ``optimizedPlan().stats()``; no public API exposes
+    it). If that call raises, salted_join must not fail: it keeps the
+    salted (key, salt) path and returns the plain join's rows."""
+    from project_cortex_spark.sources.layout import salted_join
+
+    left = spark.createDataFrame(
+        [(i, 1 if i % 10 else i) for i in range(2000)], ["row_id", "k"]
+    ).select("row_id", F.col("k").alias("key"))
+    rpath = str(tmp_path / "right.parquet")
+    spark.createDataFrame(
+        [(k, f"v{k}") for k in range(0, 2000, 7)], ["key", "val"]
+    ).write.parquet(rpath)
+    right = spark.read.parquet(rpath)
+    plan_of = lambda df: df._jdf.queryExecution().toString()  # noqa: E731
+    # with working stats this right side takes the broadcast arm
+    assert "_salt#" not in plan_of(salted_join(left, right, "key", n_salts=4))
+
+    class NoStats:
+        """The right side's JVM frame, except that its plan (and so its
+        size statistic) cannot be read."""
+
+        def __init__(self, jdf):
+            self._jdf = jdf
+
+        def queryExecution(self):
+            raise RuntimeError("plan statistics unavailable")
+
+        def __getattr__(self, name):
+            return getattr(self._jdf, name)
+
+    monkeypatch.setattr(right, "_jdf", NoStats(right._jdf))
+    salted = salted_join(left, right, "key", n_salts=4)
+    assert "_salt#" in plan_of(salted)
+    want = left.join(spark.read.parquet(rpath), "key", "inner")
+    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, want.collect()))
+
+
+
 def test_ivf_partitioned_corpus_prunes_probes(spark, tmp_path, registry):
     """The SCALE.md claim for IVF: persist assign_clusters output
     partitioned by cluster_id and a probe's cluster filter prunes file

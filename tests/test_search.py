@@ -224,3 +224,64 @@ def test_hybrid_weighted_norm_contract(spark, registry):
         expect = 0.4 * (r.lex_norm or 0.0) + 0.6 * (r.sem_norm or 0.0)
         assert abs(r.wsum_score - expect) < 2e-6
     assert any(r.sem_norm == 1.0 for r in rows)  # the sem top-1 made top-k
+
+
+def test_retrieval_requests_build_in_few_round_trips(spark, registry, tmp_path):
+    """The retrieval surfaces build each request from SQL text, so its
+    Py4J cost does not grow with the vector or the query: building
+    knn_topk takes at most 60 round trips and fts_search at most 100,
+    hybrid_search_rrf end to end (both lists' jobs, the fusion and the
+    collect) at most 200, and fts_search on a stored index runs at most
+    3 Spark jobs (the aggregate's shuffle, the payload side, the top-k).
+    Built node by node through the Column API these were ~740, ~500 and
+    ~1,900 round trips and 5 jobs. Round trips are counted on the
+    calling thread: py4j's finalizer thread releases proxies of earlier
+    requests in its own time."""
+    import threading
+
+    from project_cortex_spark.operators.fts import (
+        build_fts_index, fts_search, load_fts_index, store_fts_index,
+    )
+    from project_cortex_spark.operators.knn import knn_topk
+
+    docs = registry.table("documents")
+    path = str(tmp_path / "fts")
+    store_fts_index(build_fts_index(docs, id_col="doc_id", text_col="text"), path)
+    idx = load_fts_index(spark, path, docs, id_col="doc_id", text_col="text")
+    vecs_path = str(tmp_path / "vecs")
+    srch.build_doc_vectors(docs, dim=64).write.parquet(vecs_path)
+    vecs = spark.read.parquet(vecs_path)
+    qv = [((i * 37) % 11 - 5) / 7.0 for i in range(64)]
+    lex, sem = '(key OR agg) "row scan" NOT zebra sor*', "key agg row scan"
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, calls = client.send_command, threading.get_ident(), [0]
+
+    def counting(*args, **kwargs):
+        calls[0] += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    def round_trips(fn) -> int:
+        fn()  # warm: first use of a JVM class costs extra lookups
+        calls[0] = 0
+        client.send_command = counting
+        try:
+            fn()
+        finally:
+            del client.send_command
+        return calls[0]
+
+    assert round_trips(lambda: knn_topk(vecs, qv, id_col="doc_id", k=15)) <= 60
+    assert round_trips(lambda: fts_search(idx, lex, limit=15, rank_digits=9)) <= 100
+    assert round_trips(lambda: srch.hybrid_search_rrf(
+        idx, vecs, lex, sem, k=15, n_per_list=50, dim=64).collect()) <= 200
+
+    sc = spark.sparkContext
+    group = "test_retrieval_requests_build_in_few_round_trips"
+    sc.setJobGroup(group, group)
+    try:
+        rows = fts_search(idx, lex, limit=15).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
