@@ -279,22 +279,24 @@ def minhash_near_duplicates(
     """Full pipeline: signatures -> LSH candidates -> exact-Jaccard verify
     -> (a, b, jaccard) pairs above threshold.
 
-    The distinct shingle frame is computed ONCE and cached — it feeds
-    both the signature aggregation and the verification joins (at 100 TB:
-    persist to MEMORY_AND_DISK; the explode dominates the pipeline cost).
+    The distinct shingle frame is computed ONCE, as a lazy local
+    checkpoint — it feeds both the signature aggregation and the
+    verification joins (the explode dominates the pipeline cost). The
+    first job that reads it stores it, and its blocks go with the
+    returned frame, so the call leaves nothing persisted behind.
     ``max_bucket`` caps band-bucket occupancy before the pair fan-out
     (see :func:`lsh_candidate_pairs`) — the guard that keeps
     boilerplate-heavy corpora from going quadratic on one band key.
     """
     sh = shingle_frame(
         docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-    ).cache()
-    # cache the (tiny: one row per doc) signature frame too — the banded
-    # self-join references it on both sides and would otherwise run the
-    # min-hash aggregation twice
+    ).localCheckpoint(eager=False)
+    # checkpoint the (tiny: one row per doc) signature frame too — the
+    # banded self-join references it on both sides and would otherwise
+    # run the min-hash aggregation twice
     sigs = minhash_signatures(
         docs, num_hashes=num_hashes, shingles_df=sh
-    ).cache()
+    ).localCheckpoint(eager=False)
     cand = lsh_candidate_pairs(
         sigs, num_hashes=num_hashes, bands=bands, max_bucket=max_bucket
     )
@@ -825,14 +827,14 @@ def embedding_near_duplicates_lsh(
         )
 
     base = emb.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"))
-    # cached: the self-join references it on both sides — without this the
-    # signature UDF and scan run twice
+    # lazily checkpointed: the self-join references it on both sides —
+    # without this the signature UDF and scan run twice
     banded = base.select(
         "doc_id", F.posexplode(signatures(F.col("v"))).alias("tbl", "sig")
-    ).cache()
+    ).localCheckpoint(eager=False)
     if max_bucket is not None:
         # hot-bucket guard: occupancy is one map-side-partial aggregate
-        # over the already-cached banded frame; oversize buckets are
+        # over the already-checkpointed banded frame; oversize buckets are
         # excluded from BOTH join sides before any pair is generated
         keep = (
             banded.groupBy("tbl", "sig")
@@ -907,9 +909,10 @@ def embedding_near_duplicates_ivf(
             emb, vec_col=vec_col, n_centroids=n_centroids, seed=seed
         )
     )
+    # lazily checkpointed: referenced on both sides of the self-join
     assigned = assign_clusters(emb, cent, vec_col=vec_col).select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"), "cluster_id"
-    ).cache()  # referenced on both sides of the self-join
+    ).localCheckpoint(eager=False)
     pair_scores = pair_scores_udf()
 
     x, y = assigned.alias("x"), assigned.alias("y")
@@ -1063,8 +1066,10 @@ def semdedup(
     w = Window.partitionBy("cluster_id", "salt").orderBy(
         F.round(F.col("csim"), 12).asc(), F.col("doc_id").asc()
     )
-    # cached: the prune self-join references it on both sides
-    ranked = assigned.withColumn("rank", F.row_number().over(w)).cache()
+    # lazily checkpointed: the prune self-join references it on both sides
+    ranked = assigned.withColumn("rank", F.row_number().over(w)).localCheckpoint(
+        eager=False
+    )
     pair_scores = pair_scores_udf()
     x, y = ranked.alias("x"), ranked.alias("y")
     pruned = (

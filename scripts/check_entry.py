@@ -3,10 +3,21 @@ at sf0.01 and compare against oracle_sql() in DuckDB (row count + sorted-
 by-name columns + order-insensitive values). Usage:
 
     python scripts/check_entry.py [sf_dir] [query_name ...]
+
+Prints one JSON record per query, then the summary line last:
+
+    {"name": ..., "status": "pass"|"fail"|"weak", "rows": N, "wall_s": S,
+     "jobs": J}
+
+``rows`` is the Spark row count (null when Spark raised), ``wall_s`` the
+seconds to build and collect the query, ``jobs`` the Spark jobs in a job
+group named after the query. A failing record adds ``detail``; ``weak``
+means the query has no oracle, so only its rows were produced.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import sys
@@ -55,7 +66,10 @@ def main():
     # SAME sf as the engine side; the driver gate's default is sf0.01
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
 
-    spark = get_spark(app_name="check-entry")
+    # no console progress bar: stdout stays one parseable record per line
+    spark = get_spark(
+        app_name="check-entry", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
     con = duckdb.connect()
     for t in DEFAULT_TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -72,57 +86,62 @@ def main():
         t0 = time.time()
         res = entrymod.entry(spark)
         n = res.count()
-        print(f"entry(): {n} rows in {time.time()-t0:.1f}s  schema={res.columns}")
+        print(json.dumps({"entry": {"rows": n, "wall_s": round(time.time() - t0, 2),
+                                    "columns": res.columns}}))
 
+    sc = spark.sparkContext
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    n_pass = n_fail = n_weak = 0
+    counts = {"pass": 0, "fail": 0, "weak": 0}
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
-        try:
-            df = fn(spark, sf_dir)
-            rows = df.collect()
-            cols = df.columns
-        except Exception as e:
-            print(f"FAIL {name}: spark error {type(e).__name__}: {e}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"weak {name}: {len(rows)} rows (no oracle) {time.time()-t0:.1f}s")
-            n_weak += 1
-            continue
-        try:
-            dres = con.execute(oracles[name])
-            dcols = [d[0] for d in dres.description]
-            drows = dres.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error {e}")
-            n_fail += 1
-            continue
-        if sorted(cols) != sorted(dcols):
-            print(f"FAIL {name}: cols spark={sorted(cols)} duck={sorted(dcols)}")
-            n_fail += 1
-            continue
-        so = sorted(range(len(cols)), key=lambda i: cols[i])
-        do = sorted(range(len(dcols)), key=lambda i: dcols[i])
-        sset = sorted((tuple(norm(r[i]) for i in so) for r in rows), key=repr)
-        dset = sorted((tuple(norm(r[i]) for i in do) for r in drows), key=repr)
-        if len(sset) != len(dset):
-            print(f"FAIL {name}: rows spark={len(sset)} duck={len(dset)}")
-            n_fail += 1
-        elif sset != dset:
-            diff = [i for i, (a, b) in enumerate(zip(sset, dset)) if a != b][:3]
-            print(f"FAIL {name}: value mismatch at {diff}")
-            for i in diff[:2]:
-                print(f"   spark={sset[i]}\n   duck ={dset[i]}")
-            n_fail += 1
-        else:
-            print(f"PASS {name}: {len(sset)} rows {time.time()-t0:.1f}s")
-            n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_weak} weak")
-    sys.exit(1 if n_fail else 0)
+        rec = {"name": name, **check(con, spark, sf_dir, name, fn, oracles.get(name)),
+               "jobs": len(sc.statusTracker().getJobIdsForGroup(name))}
+        print(json.dumps(rec, default=str), flush=True)
+        counts[rec["status"]] += 1
+    print(f"\n{counts['pass']} pass, {counts['fail']} fail, {counts['weak']} weak")
+    sys.exit(1 if counts["fail"] else 0)
+
+
+def check(con, spark, sf_dir, name, fn, oracle_sql) -> dict:
+    """Run one query in a job group named after it and compare it with
+    its oracle: the status, rows and wall_s fields of its record."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    t0 = time.time()
+    try:
+        df = fn(spark, sf_dir)
+        rows = df.collect()
+        cols = df.columns
+    except Exception as e:
+        return {"status": "fail", "rows": None, "wall_s": round(time.time() - t0, 2),
+                "detail": f"spark error {type(e).__name__}: {e}"}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    rec = {"rows": len(rows), "wall_s": round(time.time() - t0, 2)}
+    if oracle_sql is None:
+        return {"status": "weak", **rec}
+    try:
+        dres = con.execute(oracle_sql)
+        dcols = [d[0] for d in dres.description]
+        drows = dres.fetchall()
+    except Exception as e:
+        return {"status": "fail", **rec, "detail": f"duckdb error {e}"}
+    if sorted(cols) != sorted(dcols):
+        return {"status": "fail", **rec,
+                "detail": f"cols spark={sorted(cols)} duck={sorted(dcols)}"}
+    so = sorted(range(len(cols)), key=lambda i: cols[i])
+    do = sorted(range(len(dcols)), key=lambda i: dcols[i])
+    sset = sorted((tuple(norm(r[i]) for i in so) for r in rows), key=repr)
+    dset = sorted((tuple(norm(r[i]) for i in do) for r in drows), key=repr)
+    if len(sset) != len(dset):
+        return {"status": "fail", **rec, "detail": f"rows spark={len(sset)} duck={len(dset)}"}
+    if sset != dset:
+        diff = [i for i, (a, b) in enumerate(zip(sset, dset)) if a != b][:2]
+        return {"status": "fail", **rec, "detail": "value mismatch: " + "; ".join(
+            f"spark={sset[i]} duck={dset[i]}" for i in diff)}
+    return {"status": "pass", **rec}
 
 
 if __name__ == "__main__":

@@ -717,6 +717,41 @@ def test_frontier_loop_callers_degenerate_inputs(spark, shape):
             assert got == Counter(map(tuple, call(clean).collect())), columns
 
 
+def test_dedup_operators_leave_no_cached_frame(spark, registry):
+    """The dedup operators that reuse an intermediate frame (minhash's
+    shingles and signatures, the LSH band frame, SemDeDup's ranked
+    members, the IVF cluster assignment) hold it as a lazy local
+    checkpoint: a call, run to the end, leaves no cached frame behind."""
+    from project_cortex_spark.operators.dedup import (
+        embedding_near_duplicates_ivf,
+        embedding_near_duplicates_lsh,
+        minhash_near_duplicates,
+        semdedup,
+    )
+    from project_cortex_spark.operators.knn import train_centroids_ordered
+
+    docs, emb = registry.table("documents"), registry.table("embeddings")
+    cents = train_centroids_ordered(
+        emb, id_col="vec_id", vec_col="embedding", n_centroids=4, iters=2
+    )
+    calls = [
+        (lambda: minhash_near_duplicates(docs, threshold=0.5, max_bucket=50),
+         ["a", "b", "jaccard"]),
+        (lambda: embedding_near_duplicates_lsh(emb, threshold=0.9, max_bucket=200),
+         ["a", "b", "score"]),
+        (lambda: semdedup(emb, threshold=0.7, centroids=cents, max_cluster=20),
+         ["doc_id", "cluster_id", "centroid_sim", "rank", "keep"]),
+        (lambda: embedding_near_duplicates_ivf(emb, threshold=0.7, centroids=cents),
+         ["a", "b", "score"]),
+    ]
+    for call, columns in calls:
+        before = _cached_rdd_ids(spark)
+        out = call()
+        out.collect()
+        assert out.columns == columns
+        assert _cached_rdd_ids(spark) - before == set(), columns
+
+
 def _run_in_job_group(spark, group, fn):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)

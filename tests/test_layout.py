@@ -307,16 +307,13 @@ def test_shuffle_shards_single_exchange_no_global_sort(registry):
     assert "rangepartitioning" not in plan  # a global sort would show here
 
 
-def test_tpch_q6_filters_reach_the_scan(registry):
+def test_tpch_q6_filters_reach_the_scan(spark):
     """The Q6 contract: every range predicate lands in PushedFilters and
     the scan reads only the four referenced columns — at 100 TB this is
     the difference between a page-skipping scan and a full read."""
     import __spark_entry__ as entrymod
 
-    q, _sql = entrymod._DSL_QUERIES["dsl_tpch_q6"]
-    from project_cortex_spark.dsl.compiler import compile_query
-
-    plan = layout.plan_of(compile_query(registry, q))
+    plan = layout.plan_of(entrymod.queries()["dsl_tpch_q6"](spark, SF_DIR))
     assert "PushedFilters:" in plan
     for frag in (
         "GreaterThanOrEqual(l_shipdate,",

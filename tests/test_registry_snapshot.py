@@ -16,6 +16,7 @@ After a deliberate registry change, rewrite the fixture with
 from __future__ import annotations
 
 import hashlib
+import importlib.util
 import json
 import os
 import sys
@@ -66,6 +67,48 @@ def test_oracle_strings_are_byte_identical():
     assert sorted(got) == sorted(want)
     changed = sorted(k for k in want if got[k] != want[k])
     assert not changed, f"oracle strings changed: {changed}"
+
+
+
+def test_each_query_is_registered_once():
+    names = [q.name for q in entry._QUERIES]
+    assert len(names) == len(set(names))
+
+
+def test_selection_lists_name_registered_queries():
+    """bench.py and scripts/gen_plans.py select queries by name; a typo
+    there would otherwise surface only as a KeyError when they run."""
+    import bench
+
+    path = os.path.join(os.path.dirname(FIXTURE), "..", "..", "scripts", "gen_plans.py")
+    spec = importlib.util.spec_from_file_location("gen_plans", path)
+    gen_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen_plans)
+
+    names = set(entry.queries())
+    for label, picks in (
+        ("bench.HEADLINE", bench.HEADLINE),
+        ("bench.EXTENDED", bench.EXTENDED),
+        ("gen_plans.PICKS", gen_plans.PICKS),
+    ):
+        assert set(picks) <= names, (label, sorted(set(picks) - names))
+
+
+def test_failed_trainer_replay_drops_only_its_own_keys(monkeypatch, capsys):
+    """When the embeddings parquet cannot be read, every oracle that
+    replays a trainer from it is dropped, by name on stderr; the other
+    oracles are still built."""
+
+    def unreadable(sf_dir=None):
+        raise OSError("embeddings parquet unreadable")
+
+    monkeypatch.setattr(oracle, "_load_embeddings_ordered", unreadable)
+    got = entry.oracle_sql()
+    replayed = {q.name for q in entry._QUERIES if isinstance(q.oracle, entry._Replayed)}
+    with_oracle = {q.name for q in entry._QUERIES if q.oracle is not None}
+    assert replayed and set(got) == with_oracle - replayed
+    err = capsys.readouterr().err
+    assert all(f"dropped {name}:" in err for name in replayed)
 
 
 if __name__ == "__main__":
