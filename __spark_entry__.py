@@ -6730,7 +6730,7 @@ _QUERIES: tuple[_Q, ...] = (
     _Q("fts_bool_and", _fts_query("table key", 15),
        partial(oracle.fts_oracle_sql, "table key", limit=15, rank_digits=9)),
     _Q("fts_bool_or_not", _fts_query("merge OR stream NOT error", 20), partial(
-        oracle.fts_oracle_sql, 'merge OR stream NOT error', limit=20, rank_digits=9,
+        oracle.fts_oracle_sql, "merge OR stream NOT error", limit=20, rank_digits=9,
     )),
     _Q("fts_phrase", _fts_query('"key agg"', 15),
        partial(oracle.fts_oracle_sql, '"key agg"', limit=15, rank_digits=9)),

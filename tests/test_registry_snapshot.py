@@ -2,8 +2,8 @@
 sha256 of every ``oracle_sql()`` string.
 
 A refactor of how queries are registered must leave both unchanged: the
-driver gates the first 50 keys in registration order, and an oracle
-string that changes by one byte is a different contract. The oracles
+correctness gate checks the first 50 keys in registration order, and an
+oracle string that changes by one byte is a different contract. The oracles
 that inline centroids or codebooks re-derived from the embeddings
 parquet are hashed over a fixed synthetic matrix instead, so the
 snapshot pins the code, not the test data.
@@ -23,13 +23,13 @@ import sys
 
 import numpy as np
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry  # noqa: E402
 from project_cortex_spark import oracle  # noqa: E402
 
-FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data",
-                       "registry_snapshot.json")
+FIXTURE = os.path.join(ROOT, "tests", "data", "registry_snapshot.json")
 
 
 def _fixed_embeddings(sf_dir=None):
@@ -80,8 +80,9 @@ def test_selection_lists_name_registered_queries():
     there would otherwise surface only as a KeyError when they run."""
     import bench
 
-    path = os.path.join(os.path.dirname(FIXTURE), "..", "..", "scripts", "gen_plans.py")
-    spec = importlib.util.spec_from_file_location("gen_plans", path)
+    spec = importlib.util.spec_from_file_location(
+        "gen_plans", os.path.join(ROOT, "scripts", "gen_plans.py")
+    )
     gen_plans = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(gen_plans)
 
