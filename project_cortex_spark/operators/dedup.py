@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
 from ..functions.vector import similarity_score
-from .graph import _iterate
+from .graph import _bcast, _iterate, _stationary, _undirected
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -108,8 +108,8 @@ def shingle_frame(
     distinct: bool = True,
 ) -> DataFrame:
     """(doc_id, sh) exploded shingle set — the shared input for MinHash
-    signatures AND Jaccard verification. Compute once, persist, reuse:
-    at corpus scale the explode is the dominant cost of the pipeline.
+    signatures AND Jaccard verification. Compute once, hold, reuse: at
+    corpus scale the explode is the dominant cost of the pipeline.
 
     Under-partitioned inputs (one small parquet file = one task) are
     repartitioned up to the session's parallelism first, so the CPU-bound
@@ -279,24 +279,25 @@ def minhash_near_duplicates(
     """Full pipeline: signatures -> LSH candidates -> exact-Jaccard verify
     -> (a, b, jaccard) pairs above threshold.
 
-    The distinct shingle frame is computed ONCE, as a lazy local
-    checkpoint — it feeds both the signature aggregation and the
-    verification joins (the explode dominates the pipeline cost). The
-    first job that reads it stores it, and its blocks go with the
-    returned frame, so the call leaves nothing persisted behind.
+    The distinct shingle frame is computed ONCE and held by
+    :func:`~project_cortex_spark.operators.graph._stationary` — it
+    feeds both the signature aggregation and the verification joins
+    (the explode dominates the pipeline cost). The first job that reads
+    it stores it, and its blocks go with the returned frame, so the
+    call leaves nothing persisted behind.
     ``max_bucket`` caps band-bucket occupancy before the pair fan-out
     (see :func:`lsh_candidate_pairs`) — the guard that keeps
     boilerplate-heavy corpora from going quadratic on one band key.
     """
-    sh = shingle_frame(
-        docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-    ).localCheckpoint(eager=False)
-    # checkpoint the (tiny: one row per doc) signature frame too — the
-    # banded self-join references it on both sides and would otherwise
-    # run the min-hash aggregation twice
-    sigs = minhash_signatures(
-        docs, num_hashes=num_hashes, shingles_df=sh
-    ).localCheckpoint(eager=False)
+    sh, _ = _stationary(
+        shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
+    )
+    # hold the (tiny: one row per doc) signature frame too — the banded
+    # self-join references it on both sides and would otherwise run the
+    # min-hash aggregation twice
+    sigs, _ = _stationary(
+        minhash_signatures(docs, num_hashes=num_hashes, shingles_df=sh)
+    )
     cand = lsh_candidate_pairs(
         sigs, num_hashes=num_hashes, bands=bands, max_bucket=max_bucket
     )
@@ -323,9 +324,10 @@ def _capped_shingles(
     """The shared front half of every exact pair join: resolve the
     fractional df cap (effective cap = max(max_df, floor(frac *
     n_docs)), the convention every oracle replays), apply the keep
-    filter to the (doc_id, sh) frame, and cache the capped universe.
+    filter to the (doc_id, sh) frame, and hold the capped universe
+    (:func:`~project_cortex_spark.operators.graph._stationary`).
     ``shingles_df`` short-circuits the dominant explode when the caller
-    already holds it."""
+    already holds it; uncapped, it is returned as it came."""
     if max_df_frac is not None:
         if n_docs is None:
             n_docs = docs.count()
@@ -341,12 +343,12 @@ def _capped_shingles(
             .select("sh")
         )
         sh = sh.join(keep, "sh")
-    return sh.cache()
+    return sh if sh is shingles_df else _stationary(sh)[0]
 
 
 def _cooccurrence_counts(sh: DataFrame) -> DataFrame:
     """The shared back half: (x, y, common, nx, ny) for every unordered
-    pair x < y sharing >= 1 shingle in the (already capped, cached)
+    pair x < y sharing >= 1 shingle in the (already capped, held)
     universe — one co-occurrence aggregate on the shingle key plus two
     size joins. Jaccard, containment, and the dispatcher all project
     their measure off this one frame, so a fix to the cap convention or
@@ -446,7 +448,7 @@ def duplicated_ngram_stats(
     Docs shorter than ``shingle_n`` tokens emit no n-grams and are
     absent from the output (same contract as the MinHash family).
 
-    Scale notes: the shingle explode (dominant cost, cached) feeds a
+    Scale notes: the shingle explode (dominant cost, held once) feeds a
     document-frequency aggregate and joins straight back on the SAME
     key — the df side arrives pre-partitioned on ``sh``, so the join
     adds no new exchange for it; fan-out is exactly 1:1 (each (doc, sh)
@@ -454,9 +456,9 @@ def duplicated_ngram_stats(
     COUNT, never the join output). The final per-doc aggregate is the
     only other shuffle.
     """
-    sh = shingle_frame(
-        docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-    ).cache()
+    sh, _ = _stationary(
+        shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
+    )
     dfc = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
     return (
         sh.join(dfc, "sh")
@@ -712,9 +714,10 @@ def simhash_near_duplicates_banded(
     pair space is pruned by exact banding instead of an O(n^2) join.
     ``max_bucket`` enables the hot-bucket guard (see
     :func:`simhash_band_pairs`); leave None for the exact contract."""
-    fps = simhash_fingerprints(
-        docs, id_col=id_col, text_col=text_col, bits=bits
-    ).cache()  # one row per doc; referenced max_hamming+1 times
+    # one row per doc; referenced max_hamming+1 times
+    fps, _ = _stationary(
+        simhash_fingerprints(docs, id_col=id_col, text_col=text_col, bits=bits)
+    )
     cand = simhash_band_pairs(
         fps, bits=bits, max_hamming=max_hamming, max_bucket=max_bucket
     )
@@ -827,14 +830,14 @@ def embedding_near_duplicates_lsh(
         )
 
     base = emb.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"))
-    # lazily checkpointed: the self-join references it on both sides —
-    # without this the signature UDF and scan run twice
-    banded = base.select(
-        "doc_id", F.posexplode(signatures(F.col("v"))).alias("tbl", "sig")
-    ).localCheckpoint(eager=False)
+    # held: the self-join references it on both sides — without this
+    # the signature UDF and scan run twice
+    banded, _ = _stationary(
+        base.select("doc_id", F.posexplode(signatures(F.col("v"))).alias("tbl", "sig"))
+    )
     if max_bucket is not None:
         # hot-bucket guard: occupancy is one map-side-partial aggregate
-        # over the already-checkpointed banded frame; oversize buckets are
+        # over the already-held banded frame; oversize buckets are
         # excluded from BOTH join sides before any pair is generated
         keep = (
             banded.groupBy("tbl", "sig")
@@ -909,10 +912,12 @@ def embedding_near_duplicates_ivf(
             emb, vec_col=vec_col, n_centroids=n_centroids, seed=seed
         )
     )
-    # lazily checkpointed: referenced on both sides of the self-join
-    assigned = assign_clusters(emb, cent, vec_col=vec_col).select(
-        F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"), "cluster_id"
-    ).localCheckpoint(eager=False)
+    # held: referenced on both sides of the self-join
+    assigned, _ = _stationary(
+        assign_clusters(emb, cent, vec_col=vec_col).select(
+            F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"), "cluster_id"
+        )
+    )
     pair_scores = pair_scores_udf()
 
     x, y = assigned.alias("x"), assigned.alias("y")
@@ -1066,10 +1071,8 @@ def semdedup(
     w = Window.partitionBy("cluster_id", "salt").orderBy(
         F.round(F.col("csim"), 12).asc(), F.col("doc_id").asc()
     )
-    # lazily checkpointed: the prune self-join references it on both sides
-    ranked = assigned.withColumn("rank", F.row_number().over(w)).localCheckpoint(
-        eager=False
-    )
+    # held: the prune self-join references it on both sides
+    ranked, _ = _stationary(assigned.withColumn("rank", F.row_number().over(w)))
     pair_scores = pair_scores_udf()
     x, y = ranked.alias("x"), ranked.alias("y")
     pruned = (
@@ -1116,8 +1119,10 @@ def duplicate_clusters(pairs: DataFrame, *, a: str = "a", b: str = "b") -> DataF
     :func:`~project_cortex_spark.operators.graph._iterate`: "nothing
     changed" is the label frame's fingerprint repeating, observed by the
     round's own checkpoint job, so no comparison join runs per round.
-    Each round is one shuffle keyed on the node; the edge frame is
-    cached once. This is the step that turns pairwise dedup output into
+    The edge frame and the node set come from the
+    :func:`~project_cortex_spark.operators.graph._undirected` prologue,
+    whose observed node count sets each round's broadcast switch. This
+    is the step that turns pairwise dedup output into
     delete lists at corpus scale (pick one survivor per cluster, drop
     the rest).
 
@@ -1127,32 +1132,19 @@ def duplicate_clusters(pairs: DataFrame, *, a: str = "a", b: str = "b") -> DataF
     chain-shaped clusters, where min-label pays one round per hop,
     belong to that kernel.
     """
-    # materialize the (possibly expensive) pair pipeline once — the
-    # symmetrizing union would otherwise recompute it for each branch.
-    # The degenerate-pair filter runs on the materialized pairs, so it
-    # never reaches into the pair pipeline's plan.
-    p = (
-        pairs.select(F.col(a).alias("a"), F.col(b).alias("b"))
-        .localCheckpoint(eager=True)
-        .filter(F.col("a") != F.col("b"))
-    )
-    # cached, not checkpointed: the cache's size statistics let each
-    # round's joins pick their strategy (a checkpoint carries none)
-    sym = (
-        p.select(F.col("a").alias("x"), F.col("b").alias("y"))
-        .unionByName(p.select(F.col("b").alias("x"), F.col("a").alias("y")))
-        .distinct()
-        .cache()
-    )
+    # the degenerate-pair filter runs before the prologue, so an equal
+    # pair adds no node
+    sym, nodes, obs = _undirected(pairs.filter(F.col(a) != F.col(b)), a, b)
+    bcast = _bcast(obs["n"])
 
     def relax(labels: DataFrame, _) -> DataFrame:
         neighbor_min = (
-            sym.join(labels, sym["y"] == labels["node"])
-            .groupBy("x")
+            sym.join(bcast(labels), sym["dst"] == labels["node"])
+            .groupBy("src")
             .agg(F.min("label").alias("nmin"))
         )
         return labels.join(
-            neighbor_min, labels["node"] == neighbor_min["x"], "left"
+            bcast(neighbor_min), labels["node"] == neighbor_min["src"], "left"
         ).select(
             "node",
             F.least(
@@ -1160,11 +1152,7 @@ def duplicate_clusters(pairs: DataFrame, *, a: str = "a", b: str = "b") -> DataF
             ).alias("label"),
         )
 
-    nodes = sym.select(F.col("x").alias("node")).distinct()
-    try:
-        labels, _ = _iterate(nodes.withColumn("label", F.col("node")), relax)
-    finally:
-        sym.unpersist()
+    labels, _ = _iterate(nodes.select("node", F.col("node").alias("label")), relax)
     return labels.select(
         F.col("node").alias("doc_id"),
         F.col("label").alias("cluster_id"),
@@ -1404,9 +1392,9 @@ def winnowing_near_duplicates(
     """
     if max_df_frac is not None:
         max_df = max(max_df, int(max_df_frac * docs.count()))
-    fp = winnowing_fingerprints(
-        docs, id_col=id_col, text_col=text_col, k=k, w=w
-    ).localCheckpoint(eager=True)
+    fp, _ = _stationary(
+        winnowing_fingerprints(docs, id_col=id_col, text_col=text_col, k=k, w=w)
+    )
     sizes = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
     dfreq = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
     rare = fp.join(
@@ -1531,14 +1519,16 @@ def exact_substring_rewrite(
     # grouping/joining on it is identical — at 16 bytes instead of a
     # 32-char string the g-keyed exchange and aggregate carry half the
     # key bytes (guide §2.3 narrower types; interleaved A/B at sf0.1:
-    # 1.67 -> 1.43 s). The frame is cached because BOTH the dup-gram
-    # aggregate and the cuts join consume it — uncached, the per-char
+    # 1.67 -> 1.43 s). The frame is held because BOTH the dup-gram
+    # aggregate and the cuts join consume it — recomputed, the per-char
     # explode + 10M md5s run twice (guide §5: reused AND expensive;
-    # A/B with cache: -> 1.13 s total).
-    grams = d.select(
-        "doc_id", F.explode(positions).alias("p"),
-        F.unhex(F.md5(F.expr(f"substring(_t, p, {k})"))).alias("g"),
-    ).cache()
+    # A/B with a cache: -> 1.13 s total).
+    grams, _ = _stationary(
+        d.select(
+            "doc_id", F.explode(positions).alias("p"),
+            F.unhex(F.md5(F.expr(f"substring(_t, p, {k})"))).alias("g"),
+        )
+    )
     # cross-document duplicated grams + their canonical (minimum) doc:
     # min != max over doc ids IS the "occurs in >= 2 docs" predicate
     dupg = (
@@ -1633,7 +1623,7 @@ def ppjoin_pairs(
     and the output is provably identical to the unfiltered join — the
     oracle gates it against the algorithm-independent exact form.
 
-    Scale shape: one shingle explode (cached), a df aggregate joined
+    Scale shape: one shingle explode (held once), a df aggregate joined
     back ON ITS OWN KEY (no new exchange), one per-doc window for
     prefix positions, the prefix-only equi-join (plus the size filter
     least(na,nb) >= t*greatest(na,nb), also implied by J >= t), and a
@@ -1651,9 +1641,11 @@ def ppjoin_pairs(
     the candidate set cannot shrink below the answer and ppjoin's
     df-join + prefix window + verify re-join are pure overhead.
     """
-    sh = _shingles(
-        docs, shingles_df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-    ).cache()
+    sh = shingles_df
+    if sh is None:
+        sh, _ = _stationary(
+            shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
+        )
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
     wpos = Window.partitionBy("doc_id").orderBy("_df", "sh")
     wdoc = Window.partitionBy("doc_id")
@@ -1792,13 +1784,15 @@ def similar_pairs_auto(
     the two arms' outputs coincide wherever the cap does not bind.
 
     The dominant shingle explode and the corpus count are computed ONCE
-    (cached) and threaded into both the decision and the chosen arm —
+    (the shingles held by
+    :func:`~project_cortex_spark.operators.graph._stationary`) and
+    threaded into both the decision and the chosen arm —
     the dispatch adds one df aggregate over the shared frame, nothing
     else."""
     n_docs = docs.count()
-    sh = shingle_frame(
-        docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-    ).cache()
+    sh, _ = _stationary(
+        shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
+    )
     choice = similar_pairs_choice(
         docs,
         id_col=id_col,

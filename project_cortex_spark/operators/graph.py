@@ -43,13 +43,20 @@ def _union_all(frames: list) -> DataFrame:
     return reduce(DataFrame.unionByName, frames)
 
 
-def _checkpoint(df: DataFrame, **observe) -> tuple:
-    """Eager local checkpoint of ``df`` plus what the checkpoint's own
-    job observed: ``n`` (row count), ``fp`` (an order-insensitive
-    fingerprint) and every named aggregate in ``observe``. The numbers
-    come from an :class:`Observation` on the checkpointed plan, so no
-    second Spark job (count, isEmpty, first, a fingerprint aggregate)
-    re-reads the frame to produce them.
+def _checkpoint(df: DataFrame, *, lazy: bool = False, **observe) -> tuple:
+    """Local checkpoint of ``df`` plus what the checkpoint's own job
+    observed: ``n`` (row count), ``fp`` (an order-insensitive
+    fingerprint) and every named aggregate in ``observe`` (which may
+    also restate ``n``). The numbers come from an :class:`Observation`
+    on the checkpointed plan, so no second Spark job (count, isEmpty,
+    first, a fingerprint aggregate) re-reads the frame to produce them.
+
+    ``lazy=True`` is the unobserved form: ``localCheckpoint(eager=False)``
+    and None for the observation. It runs the plan's shuffle stages at
+    once (AQE plans them) and leaves the rest to the first job that
+    reads the frame, which stores it. Either form is released with the
+    frame: once no frame refers to it, Spark's context cleaner frees
+    its blocks, so nothing is left to unpersist.
 
     ``fp`` is the sum of a per-row xxhash64. An unchanged (n, fp) pair
     misreads a changed frame only if distinct 64-bit hash deltas cancel
@@ -60,14 +67,41 @@ def _checkpoint(df: DataFrame, **observe) -> tuple:
     compares NULL == NULL after one round — phantom convergence. The
     decimal(38,0) accumulator is because a BIGINT sum of xxhash64
     values overflows under ANSI mode on any non-trivial frame."""
+    if lazy:
+        return df.localCheckpoint(eager=False), None
+    aggs = {
+        "n": F.count(F.lit(1)),
+        "fp": F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
+        **observe,
+    }
     obs = Observation()
     out = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("fp"),
-        *[agg.alias(name) for name, agg in observe.items()],
+        obs, *[agg.alias(name) for name, agg in aggs.items()]
     ).localCheckpoint(eager=True)
     return out, obs.get
+
+
+def _stationary(df: DataFrame, **observe) -> tuple:
+    """The one placement rule for a frame that every round of a loop,
+    or two or more consumers, read: spread it over exactly
+    ``spark.sql.shuffle.partitions`` partitions by a hash of all its
+    columns, then hold it with :func:`_checkpoint` — eagerly, returning
+    the observation, when ``observe`` names aggregates; lazily, with
+    observation None, otherwise.
+
+    The count is explicit because AQE coalesces an implicit one: 3,000
+    rows held as ``repartition("src").localCheckpoint(eager=False)`` read
+    1 partition on local[4], with ``repartition(4, "src")`` 4 — and the
+    tasks that scan a frame are the ones that produce its joins'
+    fan-out. There is no key: with AQE on, a join on ``src`` over
+    ``repartition(4, "src").localCheckpoint()`` re-exchanges that side
+    whether the checkpoint is eager or lazy, so no partitioning survives
+    the checkpoint to be reused. Hash, not round-robin, because a
+    round-robin repartition adds a local sort (sortBeforeRepartition)."""
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return _checkpoint(
+        df.repartition(parts, *df.columns), lazy=not observe, **observe
+    )
 
 
 def _repeated(prev, obs) -> bool:
@@ -107,14 +141,16 @@ def _iterate(
     ``max_rounds`` (None = uncapped) raises ``RuntimeError`` if the
     loop has not stopped by then, or with ``strict=False`` ends it
     quietly (a fixed round budget). ``lazy=True`` is the fixed-round
-    power loop of pagerank, personalized pagerank and LPA: exactly
-    ``max_rounds`` steps with ``localCheckpoint(eager=False)``, no
-    observation and no stop test, so every round folds into the
-    consuming job. Those loops never stop early, so an eager observed
-    round would only add a blocking job per round."""
+    loop of pagerank, personalized pagerank, LPA, betweenness's
+    backward pass and the cycle walks: exactly ``max_rounds`` steps,
+    every state a lazy :func:`_checkpoint`, no observation and no stop
+    test, so every round folds into the consuming job. Those loops
+    never stop early, so an eager observed round would only add a
+    blocking job per round."""
     if lazy:
+        state, _ = _checkpoint(state, lazy=True)
         for _ in range(max_rounds):
-            state = step(state, None).localCheckpoint(eager=False)
+            state, _ = _checkpoint(step(state, None), lazy=True)
         return state, None
     state, obs = _checkpoint(state, **observe)
     prev, rounds = None, 0
@@ -130,9 +166,10 @@ def _iterate(
 
 # Above this node count the per-iteration node frame (ranks / labels /
 # keep set) stops being broadcastable and the iterative ops switch to
-# the shuffle-join fallback: the stationary edge list is hash-partitioned
-# on the join key ONCE (localCheckpoint preserves the partitioning), so
-# each round's join exchanges only the |V|-row frame. The A/B at sf1
+# the shuffle-join fallback: each round's join then exchanges the
+# stationary edge list as well as the |V|-row frame, because with AQE
+# on a checkpoint keeps no partitioning a join could reuse (see
+# :func:`_stationary`). The A/B at sf1
 # (scripts/ab_graph_broadcast.py, recorded in SCALE.md) measures both
 # paths; the default favors broadcast far past any local scale and is
 # sized for ~16-byte (id, double) rows against executor memory.
@@ -159,19 +196,23 @@ def _undirected(edges: DataFrame, a: str, b: str, **observe) -> tuple:
     Returns ``(e, nodes, obs)``:
 
     - ``e``: (src, dst), both directions of every (a, b) row. A row with
-      a NULL endpoint carries no edge and is dropped. ``e`` is a lazy
-      local checkpoint: the first job that reads it stores it, so an
-      expensive upstream edge pipeline runs once;
+      a NULL endpoint carries no edge and is dropped. ``e`` is held by
+      :func:`_stationary`, so an expensive upstream edge pipeline runs
+      once and every round's scan of it runs on every partition;
     - ``nodes``: (node, deg), every endpoint with its degree in ``e``,
-      eagerly checkpointed;
+      eagerly checkpointed but not spread: every consumer broadcasts it
+      or re-exchanges it on the node, so no scan of it produces a
+      join's fan-out, and a spread would only add a job per call;
     - ``obs``: that checkpoint's observation — ``n`` nodes, the least
       and greatest id ``mn`` / ``mx``, and the named ``observe``
       aggregates over ``nodes``.
     """
     one = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).dropna()
-    e = one.unionByName(
-        one.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    e, _ = _stationary(
+        one.unionByName(
+            one.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    )
     nodes, obs = _checkpoint(
         e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg")),
         mn=F.min("node"),
@@ -801,9 +842,9 @@ def triangles_per_node(edges: DataFrame) -> DataFrame:
     cap bounds. Each triangle explodes to its 3 corners before the final
     count aggregate (map-side partial). The edge list feeds THREE join
     inputs shuffled on three different keys — no exchange reuse is
-    possible — so it is a lazy local checkpoint rather than recomputed
-    per input: the first job that reads it (the wedge estimate below)
-    stores it, and its blocks go with the frame.
+    possible — so it is held by :func:`_stationary` rather than
+    recomputed per input: the first job that reads it (the wedge
+    estimate below) stores it, and its blocks go with the frame.
 
     The closure join's sort runs over the WEDGE frame — quadratic in
     degree, not linear in edges — so a fixed ``shuffle.partitions``
@@ -814,7 +855,7 @@ def triangles_per_node(edges: DataFrame) -> DataFrame:
     ~5M rows/partition when that exceeds the session default — cheap
     insurance rather than relying on cluster AQE split heuristics.
     """
-    edges = edges.localCheckpoint(eager=False)
+    edges, _ = _stationary(edges.select("a", "b"))
     e1 = edges.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
     e2 = edges.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
     wedges = e1.join(e2, "tb")
@@ -865,11 +906,12 @@ def pagerank(
     small-ranks/big-edges shape, so the edge list NEVER shuffles and
     each step costs one broadcast + one partial-aggregated exchange of
     |V| rows. When |V| outgrows broadcast range (``broadcast_ranks``
-    forces either side), the fallback hash-partitions the stationary
-    edge list on src ONCE (the partitioning survives the
-    localCheckpoint) so each step's shuffle join exchanges only the
-    |V|-row rank frame — A/B-measured at sf1 in
-    scripts/ab_graph_broadcast.py / SCALE.md. Skew = hub in-degree,
+    forces either side), each step shuffle-joins the rank frame and
+    re-exchanges the stationary edge list, which
+    :func:`_stationary` holds spread but not keyed (with AQE on a
+    checkpoint keeps no partitioning a join could reuse) —
+    A/B-measured at sf1 in scripts/ab_graph_broadcast.py / SCALE.md.
+    Skew = hub in-degree,
     which a degree-capped edge list (cooccurrence_edges max_df) already
     bounds; on a raw power-law graph the aggregate's map-side partials
     absorb the hot key.
@@ -879,7 +921,7 @@ def pagerank(
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("pr"))
     bcast = _bcast(n, broadcast_ranks)
-    out_edges = _out_edges(e, nodes, n, bcast)
+    out_edges = _out_edges(e, nodes, n)
     base = (1.0 - damping) / n
 
     def power_step(ranks: DataFrame, _) -> DataFrame:
@@ -900,18 +942,16 @@ def pagerank(
     return ranks.select("node", F.round("pr", 9).alias("pr"))
 
 
-def _out_edges(e: DataFrame, nodes: DataFrame, n: int, bcast) -> DataFrame:
-    """The stationary (src, dst, deg) edge list of the power loops; for
-    the shuffle fallback of the rank join (``bcast``) hash-partitioned
-    on src once. The degree join itself follows the automatic switch:
-    a checkpoint carries no size statistics, so without the hint a
-    broadcastable degree frame would be sort-merge joined."""
-    out = e.join(
-        _bcast(n)(nodes.withColumnRenamed("node", "src")), "src"
-    ).select("src", "dst", "deg")
-    if bcast is _shuffled:
-        out = out.repartition("src")
-    return out.localCheckpoint(eager=False)
+def _out_edges(e: DataFrame, nodes: DataFrame, n: int) -> DataFrame:
+    """The stationary (src, dst, deg) edge list of the power loops, held
+    by :func:`_stationary`. The degree join follows the automatic
+    switch: a checkpoint carries no size statistics, so without the
+    hint a broadcastable degree frame would be sort-merge joined."""
+    return _stationary(
+        e.join(_bcast(n)(nodes.withColumnRenamed("node", "src")), "src").select(
+            "src", "dst", "deg"
+        )
+    )[0]
 
 
 def _contrib(out_edges: DataFrame, ranks: DataFrame, bcast) -> DataFrame:
@@ -971,7 +1011,7 @@ def pagerank_personalized(
     if ns == 0:
         raise ValueError("pagerank_personalized: no seed is a graph node")
     tele = F.when(F.col("seed"), F.lit(1.0 / ns)).otherwise(F.lit(0.0))
-    out_edges = _out_edges(e, nodes, n, bcast)
+    out_edges = _out_edges(e, nodes, n)
 
     def power_step(ranks: DataFrame, _) -> DataFrame:
         return flags.join(_contrib(out_edges, ranks, bcast), "node", "left").select(
@@ -1034,26 +1074,27 @@ def kcore(
     Scale notes: each round is one map-side-partial degree aggregate +
     two semi joins against the (shrinking) keep set — the keep frame is
     node-sized and broadcastable; the surviving edge list is cut by a
-    lazy `localCheckpoint` per round. Past BROADCAST_NODE_LIMIT nodes
+    lazy :func:`_checkpoint` per round. Past BROADCAST_NODE_LIMIT nodes
     (``broadcast_keep`` forces either side of :func:`_bcast`) the semi
-    joins run as shuffle joins — the edge list cannot be pre-partitioned
-    for BOTH endpoint keys, so the fallback honestly pays two exchanges
-    per round (A/B at sf1: scripts/ab_graph_broadcast.py, SCALE.md).
+    joins run as shuffle joins and pay two exchanges of the edge list
+    per round, one per endpoint key: a checkpoint keeps no partitioning
+    a join could reuse (A/B at sf1: scripts/ab_graph_broadcast.py,
+    SCALE.md).
     """
-    # the input is read by both degree arms and the join base; the lazy
-    # checkpoint keeps the upstream edge pipeline (for
-    # cooccurrence_edges: several shuffles) from re-running per read
-    surv = edges.select("a", "b").localCheckpoint(eager=False)
+    # the input is read by both degree arms and the join base; holding
+    # it keeps the upstream edge pipeline (for cooccurrence_edges:
+    # several shuffles) from re-running per read
+    surv, _ = _stationary(edges.select("a", "b"))
 
     def peel(deg: DataFrame, obs: dict) -> DataFrame:
         nonlocal surv
         bcast = _bcast(obs["n"], broadcast_keep)
         keep = deg.filter(F.col("deg") >= k).select("node")
-        surv = (
+        surv, _ = _checkpoint(
             surv.join(bcast(keep.withColumnRenamed("node", "a")), "a", "left_semi")
             .join(bcast(keep.withColumnRenamed("node", "b")), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=False)
+            .select("a", "b"),
+            lazy=True,
         )
         return _degrees(surv)
 
@@ -1094,10 +1135,10 @@ def node_similarity(edges: DataFrame, *, k: int = 50) -> DataFrame:
     broadcast-degree join, and a TakeOrderedAndProject top-k. Exact
     (the common/union arithmetic is integers until the final division).
     """
-    adj = (
-        edges.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .union(edges.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint(eager=False)
+    adj, _ = _stationary(
+        edges.select(F.col("a").alias("node"), F.col("b").alias("nbr")).union(
+            edges.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
+        )
     )
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     x = adj.select(F.col("node").alias("pa"), F.col("nbr").alias("via"))
@@ -1175,15 +1216,12 @@ def communities_lpa(
     argmax window partitions on high-cardinality node ids, so no skew;
     hub fan-in is bounded upstream by cooccurrence_edges' max_df cap.
     Past BROADCAST_NODE_LIMIT nodes (``broadcast_labels`` forces either
-    side of :func:`_bcast`) the label frame is shuffle-joined and the
-    stationary edges are hash-partitioned on src once, same as
-    :func:`pagerank` (A/B at sf1: scripts/ab_graph_broadcast.py,
-    SCALE.md).
+    side of :func:`_bcast`) the label frame is shuffle-joined and each
+    round re-exchanges the stationary edges, same as :func:`pagerank`
+    (A/B at sf1: scripts/ab_graph_broadcast.py, SCALE.md).
     """
     e, nodes, obs = _undirected(edges, a, b)
     bcast = _bcast(obs["n"], broadcast_labels)
-    if bcast is _shuffled:
-        e = e.repartition("src").localCheckpoint(eager=False)
     # argmax form MEASURED at sf1: the row_number window over the
     # (node, label) count frame reuses that aggregate's hash
     # partitioning (no exchange, one sort: 45 s/round-chain); the
@@ -1250,22 +1288,14 @@ def connected_components(
     distinct() bounds the frame at the surviving edge count. The rounds
     run on :func:`_iterate`, like duplicate_clusters' label propagation:
     convergence = the canonical (child, root) edge set is unchanged,
-    read from the fingerprint each round's checkpoint job observes.
+    read from the fingerprint each round's checkpoint job observes. The
+    node set and the edge list come from the :func:`_undirected`
+    prologue, as they do for duplicate_clusters.
     """
-    p = (
-        pairs.select(F.col(a).alias("x"), F.col(b).alias("y"))
-        .filter(F.col("x") != F.col("y"))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        p.select(F.col("x").alias("node"))
-        .unionByName(p.select(F.col("y").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes, _ = _undirected(pairs.filter(F.col(a) != F.col(b)), a, b)
     # canonical undirected form (max side = star center)
-    edges = p.select(
-        F.greatest("x", "y").alias("x"), F.least("x", "y").alias("y")
+    edges = e.select(
+        F.greatest("src", "dst").alias("x"), F.least("src", "dst").alias("y")
     ).distinct()
 
     def _large_star(e: DataFrame) -> DataFrame:
@@ -1362,80 +1392,75 @@ def _closed_walks(
     level's columns over frontier ⋈ edges, and ``collapse`` reduces a
     level to one row per (origin, node); columns after (origin, node)
     ride into the closed rows. Closed origins and, off the functional
-    path, already-visited pairs are anti-joined out of the frontier."""
+    path, already-visited pairs are anti-joined out of the frontier.
+    The levels run on :func:`_iterate`'s fixed-round lazy loop: its
+    state is the newest level, tagged ``_lvl``, plus, off the functional
+    path, every earlier level — the visited set — so each level is
+    checkpointed once."""
     max_len = _clamp_depth(max_len)
-    # Checkpoint the (possibly expensively derived) edge frame ONCE —
-    # every level joins it, and without the cut a window-derived edge
-    # set re-runs its lineage per level. r9 (guide §2.4): the frame is
-    # pre-partitioned on the join key `_s`, which localCheckpoint
-    # preserves, so none of the max_len per-level joins re-exchanges
-    # the edge list — at 100 TB that removes max_len-1 full edge-list
-    # shuffles. All per-level checkpoints are LAZY (eager=False): the
-    # lineage cut and single materialization are identical, but the
-    # work folds into the consuming job instead of one blocking driver
-    # job per frame — measured 8.2 -> 6.4 s at sf0.1 on the ring
-    # fixture (~3 blocking jobs per level eliminated); results
-    # bit-identical.
-    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .repartition(P, "_s")
-        .localCheckpoint(eager=False)
-    )
+    # Hold the (possibly expensively derived) edge frame ONCE: every
+    # level joins it, and without the cut a window-derived edge set
+    # re-runs its lineage per level. It is spread, not keyed on `_s`:
+    # each level's join re-exchanges it either way (see _stationary).
+    # Every level is one lazy checkpoint, the loop state of
+    # _iterate(lazy=True): the lineage cut and single materialization
+    # of an eager one, with the work folded into the consuming job
+    # instead of one blocking driver job per frame — measured 8.2 ->
+    # 6.4 s at sf0.1 on the ring fixture; results bit-identical.
+    e, _ = _stationary(edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")))
     if functional is None:
         functional = _max_out_degree(e) <= 1
+    # with out-degree 1 the rows are already unique per (origin, node),
+    # so the collapsing exchange is skipped
+    merge = (lambda f: f) if functional else collapse
+    out = []
 
-    def level(frontier: DataFrame) -> DataFrame:
-        # with out-degree 1 the rows are already unique per (origin,
-        # node), so the collapsing exchange is skipped
-        return (frontier if functional else collapse(frontier)).localCheckpoint(
-            eager=False
-        )
+    def level(state: DataFrame, lvl: int) -> DataFrame:
+        # the state holds level `lvl`'s rows, tagged `_lvl`, and, off
+        # the functional path, every earlier level's
+        return state.filter(F.col("_lvl") == lvl).drop("_lvl")
 
     def closed(frontier: DataFrame, lvl: int) -> DataFrame:
         return frontier.filter(F.col("node") == F.col("origin")).select(
             "origin", F.lit(lvl).alias("cycle_len"), *frontier.columns[2:]
         )
 
-    # level 1: every edge is a 1-walk; a self-loop closes immediately
-    # (checkpointed like every later level: `found` feeds the final
-    # union and must not replay the collapse at consumption)
-    frontier = level(e.select(*walk))
-    found = closed(frontier, 1)
-    # same close-out discipline as every later level: a self-loop
-    # origin's min is recorded — its other out-edges must not keep it
-    # expanding for max_len more rounds
-    frontier = frontier.filter(F.col("node") != F.col("origin")).join(
-        found.select("origin"), "origin", "left_anti"
-    )
-    visited = frontier.select("origin", "node")
-    out = [found]
-    for lvl in range(2, max_len + 1):
-        # checkpoint the collapsed frontier BEFORE splitting it into
-        # closed/continue: `closed` feeds the final union, and without
-        # the cut its lineage re-runs this level's join + collapse a
-        # second time when the result is consumed (the r9 plan showed
-        # one join+aggregate pair per level under the final Union —
-        # guide §2.4, duplicated subtrees are hidden re-shuffles)
-        frontier = level(frontier.join(e, frontier["node"] == e["_s"]).select(*extend))
+    def advance(state: DataFrame, _) -> DataFrame:
+        lvl = len(out) + 1
+        frontier = level(state, lvl)
         out.append(closed(frontier, lvl))
-        if lvl == max_len:
-            break
-        # drop origins that just closed (their min is recorded) and
-        # pairs already expanded at an earlier (shorter) level; on the
-        # functional path there is exactly one walk per origin, so the
-        # visited anti-join cannot shrink the frontier bound and is
-        # skipped along with the visited accumulation
-        frontier = frontier.filter(F.col("node") != F.col("origin")).join(
+        # drop origins that just closed (their min is recorded; a
+        # self-loop origin's other out-edges must not keep it
+        # expanding) and pairs already reached at an earlier (shorter)
+        # level; on the functional path there is exactly one walk per
+        # origin, so the visited anti-join cannot shrink the frontier
+        # bound and is skipped along with keeping the earlier levels
+        live = frontier.filter(F.col("node") != F.col("origin")).join(
             out[-1].select("origin"), "origin", "left_anti"
         )
         if not functional:
-            frontier = frontier.join(visited, ["origin", "node"], "left_anti")
-        frontier = frontier.localCheckpoint(eager=False)
-        if not functional:
-            visited = visited.unionByName(
-                frontier.select("origin", "node")
-            ).localCheckpoint(eager=False)
+            live = live.join(
+                state.filter(F.col("_lvl") < lvl).select("origin", "node"),
+                ["origin", "node"],
+                "left_anti",
+            )
+        nxt = merge(live.join(e, live["node"] == e["_s"]).select(*extend))
+        nxt = nxt.withColumn("_lvl", F.lit(lvl + 1))
+        return nxt if functional else state.unionByName(nxt)
+
+    # level 1: every edge is a 1-walk; a self-loop closes immediately.
+    # Each level is checkpointed BEFORE it is split into closed /
+    # continue: `closed` feeds the final union, and without the cut its
+    # lineage re-runs the level's join + collapse a second time when
+    # the result is consumed (guide §2.4, duplicated subtrees are
+    # hidden re-shuffles)
+    last, _ = _iterate(
+        merge(e.select(*walk)).withColumn("_lvl", F.lit(1)),
+        advance,
+        max_rounds=max_len - 1,
+        lazy=True,
+    )
+    out.append(closed(level(last, max_len), max_len))
     return _union_all(out)
 
 
@@ -1477,8 +1502,8 @@ def cycle_members(
     per live origin at every level BY CONSTRUCTION. The per-level
     ``distinct()`` then collapses nothing and the visited anti-join
     prunes nothing the frontier bound needs — both are pure overhead
-    (one exchange + one anti-join + one union-checkpoint per level) and
-    are skipped. Results are identical: distinct over already-unique
+    (one exchange + one anti-join per level, and the earlier levels the
+    loop state keeps for it) and are skipped. Results are identical: distinct over already-unique
     rows is the identity, and visited pruning only ever removes
     redundant re-expansions (min-closure levels are unaffected — see
     the pruning-losslessness argument above, which covers removing the
@@ -1541,8 +1566,8 @@ def cycle_paths(
     max-out-degree==1 switch as :func:`cycle_members`. With one walk
     per origin the per-level ``min(path)`` aggregates over singleton
     groups (identity) and visited pruning cannot shrink the frontier,
-    so both are skipped — one exchange + one anti-join + one
-    union-checkpoint saved per level, rows identical.
+    so both are skipped — one exchange + one anti-join saved per level,
+    and the loop state keeps only the newest level; rows identical.
     """
     res = _closed_walks(
         edges,
@@ -1813,10 +1838,13 @@ def strongly_connected_components(
     # (self-loops included), with |V| observed for the broadcast switch
     _, nodes, obs = _undirected(edges, src, dst)
     bcast = _bcast(obs["n"])
-    live_edges = _checkpoint(
+    # every edge frame a label fixpoint reads is held by _stationary;
+    # asking for n makes it eager, for the squaring's growth cap
+    live_edges = _stationary(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .filter(F.col("s") != F.col("d"))
-        .distinct()
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
 
     def _densify(e: DataFrame, base: int) -> DataFrame:
@@ -1834,8 +1862,9 @@ def strongly_connected_components(
                 .join(e.alias("r"), F.col("l.d") == F.col("r.s"))
                 .select(F.col("l.s").alias("s"), F.col("r.d").alias("d"))
             )
-            e2, obs2 = _checkpoint(
-                e.unionByName(two_hop).filter(F.col("s") != F.col("d")).distinct()
+            e2, obs2 = _stationary(
+                e.unionByName(two_hop).filter(F.col("s") != F.col("d")).distinct(),
+                n=F.count(F.lit(1)),
             )
             if obs2["n"] > edge_growth_cap * base:
                 return e
@@ -1892,10 +1921,11 @@ def strongly_connected_components(
         # always settles (F = B = itself), so progress is guaranteed.
         nonlocal live_edges
         if out_parts:  # a later round: drop the settled nodes' edges
-            live_edges = _checkpoint(
+            live_edges = _stationary(
                 live_edges[0]
                 .join(live.withColumnRenamed("node", "s"), "s", "left_semi")
-                .join(live.withColumnRenamed("node", "d"), "d", "left_semi")
+                .join(live.withColumnRenamed("node", "d"), "d", "left_semi"),
+                n=F.count(F.lit(1)),
             )
         e, eobs = live_edges
         both = _fixpoint(live, _densify(e, eobs["n"]))
@@ -1919,7 +1949,9 @@ def _seeded_bfs(
     betweenness share, over an undirected a<b edge list. Returns
     ``(e, levels, bcast, key)``:
 
-    - ``e``: the :func:`_undirected` (src, dst) edge frame;
+    - ``e``: the :func:`_undirected` (src, dst) edge frame, spread over
+      every shuffle partition: each level's |frontier|·degree fan-out
+      is produced in the tasks that scan it;
     - ``levels[d]``: the (slot, node, sigma) frontier at distance d,
       sigma = the number of shortest seed->node paths (exact BIGINT);
       level 0 holds the seeds, slot = the seed's rank in the bounded
@@ -1938,12 +1970,6 @@ def _seeded_bfs(
     e, nodes, obs = _undirected(
         edges, "a", "b", in_slice=F.count_if(F.col("node") % seed_mod == 0)
     )
-    # every level's |frontier|·degree fan-out is produced in the tasks
-    # that scan e, and a checkpointed small edge frame can sit in one or
-    # two AQE-coalesced partitions: spread it over every core once
-    e = e.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism, "src"
-    ).localCheckpoint(eager=False)
     n_seeds = min(obs["in_slice"], max_seeds)
     bcast = _bcast(n_seeds * obs["n"])
     S = max(n_seeds, 1)
@@ -2128,8 +2154,9 @@ def betweenness_centrality(
     (slot, node, sigma) with slot = the seed's rank in the bounded
     sample — state hard-bounded at max_seeds·|V| (the closeness
     discipline), one equi-join + one anti-join per forward level, one
-    join per backward level, ``localCheckpoint`` lineage cuts
-    throughout; the same broadcast-vs-shuffle size switch as pagerank.
+    join per backward level, checkpoint lineage cuts throughout (the
+    backward levels are :func:`_iterate`'s fixed-round lazy loop); the
+    same broadcast-vs-shuffle size switch as pagerank.
     Scores are raw partial sums over the seed sample (each unordered
     pair contributes from both endpoints when both are seeds); n_seeds
     records how many seed BFS trees saw the node.
@@ -2150,14 +2177,6 @@ def betweenness_centrality(
         edges, seed_mod=seed_mod, max_depth=max_depth, max_seeds=max_seeds
     )
     reached = len(levels) - 1  # deepest populated level
-    # backward accumulation: delta6[d] over levels reached..1, each
-    # an exact BIGINT e6 partial-dependency sum; the checkpointed edge
-    # frame is reused (the backward pass reads it once per level)
-    deltas: dict[int, DataFrame] = {
-        reached: levels[reached].withColumn(
-            "delta6", F.lit(0).cast("long")
-        )
-    }
     # packed: (seed, node) keyed steps run on k, the successor's key
     # derived on the fly; composite: the (slot, node) pair
     keys = ["k"] if key is not None else ["slot", "node"]
@@ -2171,9 +2190,15 @@ def betweenness_centrality(
         / F.col("vsigma").cast("double")
         * (F.lit(1.0) + F.col("vdelta6").cast("double") / 1000000.0)
     )
-    for d in range(reached - 1, 0, -1):
-        u = levels[d]
-        v = deltas[d + 1].select(
+    deltas = []
+
+    def accumulate(dv: DataFrame, _) -> DataFrame:
+        # backward accumulation: level d's exact BIGINT e6
+        # partial-dependency sums from level d+1's (``dv``), for d =
+        # reached-1..1; the held edge frame is read once per level
+        deltas.append(dv)
+        u = levels[reached - len(deltas)]
+        v = dv.select(
             *keys,
             F.col("sigma").alias("vsigma"),
             F.col("delta6").alias("vdelta6"),
@@ -2196,15 +2221,18 @@ def betweenness_centrality(
             .groupBy(*keys)
             .agg(F.sum("term6").alias("delta6"))
         )
-        deltas[d] = (
-            u.join(bcast(contrib), keys, "left")
-            .select(
-                *u.columns,
-                F.coalesce("delta6", F.lit(0)).cast("long").alias("delta6"),
-            )
-            .localCheckpoint(eager=True)
+        return u.join(bcast(contrib), keys, "left").select(
+            *u.columns,
+            F.coalesce("delta6", F.lit(0)).cast("long").alias("delta6"),
         )
-    out = _union_all([dl.select("node", "delta6") for dl in deltas.values()])
+
+    first, _ = _iterate(
+        levels[reached].withColumn("delta6", F.lit(0).cast("long")),
+        accumulate,
+        max_rounds=reached - 1,
+        lazy=True,
+    )
+    out = _union_all([dl.select("node", "delta6") for dl in [*deltas, first]])
     return (
         out.groupBy("node")
         .agg(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import char_ngrams, estimate_llm_tokens, tokens
 from .dedup import ensure_parallelism
+from .graph import _stationary
 
 # Marker stopwords per language: deliberately small, pinned lists (the
 # language-ID heuristic is n-gram/marker based, not a trained model).
@@ -445,10 +446,11 @@ def bigram_lm_score(
     avg_logprob) where avg_logprob = round(avg ln P, 6), 0.0 for docs
     with fewer than two tokens.
 
-    Scale: bigram explode (cached — it feeds the count aggregate AND
-    the scoring join; at 100 TB persist MEMORY_AND_DISK, the shingle-
-    frame convention) → one hash aggregate for c(w1,w2) (map-side
-    partials), a second over w1 for c(w1,·), V as a 1-row broadcast.
+    Scale: bigram explode (held once by
+    :func:`~project_cortex_spark.operators.graph._stationary` — it
+    feeds the count aggregate AND the scoring join) → one hash
+    aggregate for c(w1,w2) (map-side partials), a second over w1 for
+    c(w1,·), V as a 1-row broadcast.
     The model is then FULLY assembled on the distinct-bigram table —
     ln P per (w1, w2) — before touching the doc bigrams again, so the
     occurrence-scale frame is shuffled ONCE for the scoring join and
@@ -460,7 +462,7 @@ def bigram_lm_score(
     bigrams) to shrink the join's build side by ~half with no visible
     score shift.
     """
-    bg = _bigram_frame(docs, id_col=id_col, text_col=text_col).cache()
+    bg, _ = _stationary(_bigram_frame(docs, id_col=id_col, text_col=text_col))
     pair_counts = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     prefix_counts = pair_counts.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = (

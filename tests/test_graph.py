@@ -718,17 +718,30 @@ def test_frontier_loop_callers_degenerate_inputs(spark, shape):
 
 
 def test_dedup_operators_leave_no_cached_frame(spark, registry):
-    """The dedup operators that reuse an intermediate frame (minhash's
-    shingles and signatures, the LSH band frame, SemDeDup's ranked
-    members, the IVF cluster assignment) hold it as a lazy local
-    checkpoint: a call, run to the end, leaves no cached frame behind."""
+    """The dedup and text operators that reuse an intermediate frame
+    (minhash's shingles and signatures, the LSH band frame, SemDeDup's
+    ranked members, the IVF cluster assignment, the capped and uncapped
+    shingle universes of the exact pair joins, the simhash
+    fingerprints, the exact-substring grams, the bigram frame) hold it
+    as a local checkpoint: a call, run to the end, leaves no cached
+    frame behind. The cache is cleared before each call, so a frame an
+    earlier call left cached cannot stand in for a new one with the
+    same plan."""
     from project_cortex_spark.operators.dedup import (
+        containment_pairs,
+        duplicated_ngram_stats,
         embedding_near_duplicates_ivf,
         embedding_near_duplicates_lsh,
+        exact_substring_rewrite,
         minhash_near_duplicates,
+        ngram_jaccard_pairs,
+        ppjoin_pairs,
         semdedup,
+        similar_pairs_auto,
+        simhash_near_duplicates_banded,
     )
     from project_cortex_spark.operators.knn import train_centroids_ordered
+    from project_cortex_spark.operators.textstats import bigram_lm_score
 
     docs, emb = registry.table("documents"), registry.table("embeddings")
     cents = train_centroids_ordered(
@@ -743,13 +756,106 @@ def test_dedup_operators_leave_no_cached_frame(spark, registry):
          ["doc_id", "cluster_id", "centroid_sim", "rank", "keep"]),
         (lambda: embedding_near_duplicates_ivf(emb, threshold=0.7, centroids=cents),
          ["a", "b", "score"]),
+        (lambda: ngram_jaccard_pairs(docs, max_df=50), ["a", "b", "jaccard"]),
+        (lambda: containment_pairs(docs, max_df_frac=0.2),
+         ["a", "b", "containment"]),
+        (lambda: similar_pairs_auto(docs), ["a", "b", "jaccard"]),
+        (lambda: duplicated_ngram_stats(docs),
+         ["doc_id", "n_ngrams", "n_dup_ngrams", "dup_fraction"]),
+        (lambda: simhash_near_duplicates_banded(docs), ["a", "b", "hamming"]),
+        (lambda: exact_substring_rewrite(docs),
+         ["doc_id", "n_chars", "removed_chars", "n_cut_spans", "cleaned_text"]),
+        (lambda: ppjoin_pairs(docs), ["a", "b", "jaccard"]),
+        (lambda: bigram_lm_score(docs), ["doc_id", "n_bigrams", "avg_logprob"]),
     ]
     for call, columns in calls:
+        spark.catalog.clearCache()
         before = _cached_rdd_ids(spark)
         out = call()
         out.collect()
         assert out.columns == columns
         assert _cached_rdd_ids(spark) - before == set(), columns
+
+
+def test_held_frames_read_every_shuffle_partition(spark, registry, monkeypatch):
+    """Every frame an operator spreads and holds for re-reading reads
+    exactly ``spark.sql.shuffle.partitions`` partitions after the call:
+    AQE coalesces a repartition without an explicit count (a small
+    ``repartition("src")`` checkpoint reads 1), and the tasks that scan
+    a held frame are the ones that produce its joins' fan-out. The test
+    records every frame checkpointed straight from a repartition (under
+    an observation, for the eager form)."""
+    from project_cortex_spark.operators.dedup import minhash_near_duplicates
+    from project_cortex_spark.operators.graph import (
+        betweenness_centrality,
+        communities_lpa,
+        pagerank,
+    )
+
+    c1 = [(a, b) for a in range(1, 9) for b in range(1, 9) if a < b]
+    c2 = [(a, b) for a in range(11, 19) for b in range(11, 19) if a < b]
+    edges = spark.createDataFrame(c1 + c2 + [(8, 11)], "a bigint, b bigint")
+    frame_cls = type(edges)
+    checkpoint = frame_cls.localCheckpoint
+    held = []
+
+    def recording(self, eager=True, *args, **kwargs):
+        out = checkpoint(self, eager, *args, **kwargs)
+        plan = self._jdf.queryExecution().logical()
+        while plan.nodeName() == "CollectMetrics":
+            plan = plan.child()
+        if plan.nodeName() == "RepartitionByExpression":
+            held.append(out)
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    calls = {
+        "pagerank": lambda: pagerank(edges, iters=3, broadcast_ranks=False),
+        "lpa": lambda: communities_lpa(edges, rounds=3, broadcast_labels=False),
+        "betweenness": lambda: betweenness_centrality(edges, seed_mod=1),
+        "minhash": lambda: minhash_near_duplicates(
+            registry.table("documents"), threshold=0.5
+        ),
+    }
+    for name, call in calls.items():
+        held.clear()
+        call().collect()
+        assert held, name
+        assert [f.rdd.getNumPartitions() for f in held] == [parts] * len(held), name
+
+
+def test_only_the_two_holders_checkpoint_or_cache():
+    """In graph.py, dedup.py and textstats.py only ``_checkpoint`` and
+    ``_stationary`` call ``localCheckpoint``, ``cache``, ``persist`` or
+    ``unpersist``: every other frame is held through them, so each
+    held frame gets the one placement and lifetime rule."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(graph.__file__).parent
+    holders = {"_checkpoint", "_stationary"}
+    stray = []
+
+    def walk(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, child.name)
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr
+                in {"localCheckpoint", "cache", "persist", "unpersist"}
+                and owner not in holders
+            ):
+                stray.append(f"{path.name}:{child.lineno} in {owner}")
+            walk(child, owner)
+
+    for name in ("graph.py", "dedup.py", "textstats.py"):
+        path = ops / name
+        walk(ast.parse(path.read_text()), None)
+    assert stray == []
 
 
 def _run_in_job_group(spark, group, fn):
