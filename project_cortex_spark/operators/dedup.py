@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokens
 from ..functions.vector import similarity_score
-from .graph import _bcast, _iterate, _stationary, _undirected
+from .graph import _bcast, _checkpoint, _iterate, _undirected
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -279,8 +279,8 @@ def minhash_near_duplicates(
     """Full pipeline: signatures -> LSH candidates -> exact-Jaccard verify
     -> (a, b, jaccard) pairs above threshold.
 
-    The distinct shingle frame is computed ONCE and held by
-    :func:`~project_cortex_spark.operators.graph._stationary` — it
+    The distinct shingle frame is computed ONCE and held as a lazy
+    :func:`~project_cortex_spark.operators.graph._checkpoint` — it
     feeds both the signature aggregation and the verification joins
     (the explode dominates the pipeline cost). The first job that reads
     it stores it, and its blocks go with the returned frame, so the
@@ -289,15 +289,13 @@ def minhash_near_duplicates(
     (see :func:`lsh_candidate_pairs`) — the guard that keeps
     boilerplate-heavy corpora from going quadratic on one band key.
     """
-    sh, _ = _stationary(
-        shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
-    )
+    sh = shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
+    sh, _ = _checkpoint(sh, lazy=True)
     # hold the (tiny: one row per doc) signature frame too — the banded
     # self-join references it on both sides and would otherwise run the
     # min-hash aggregation twice
-    sigs, _ = _stationary(
-        minhash_signatures(docs, num_hashes=num_hashes, shingles_df=sh)
-    )
+    sigs = minhash_signatures(docs, num_hashes=num_hashes, shingles_df=sh)
+    sigs, _ = _checkpoint(sigs, lazy=True)
     cand = lsh_candidate_pairs(
         sigs, num_hashes=num_hashes, bands=bands, max_bucket=max_bucket
     )
@@ -324,8 +322,8 @@ def _capped_shingles(
     """The shared front half of every exact pair join: resolve the
     fractional df cap (effective cap = max(max_df, floor(frac *
     n_docs)), the convention every oracle replays), apply the keep
-    filter to the (doc_id, sh) frame, and hold the capped universe
-    (:func:`~project_cortex_spark.operators.graph._stationary`).
+    filter to the (doc_id, sh) frame, and hold the capped universe (a
+    lazy :func:`~project_cortex_spark.operators.graph._checkpoint`).
     ``shingles_df`` short-circuits the dominant explode when the caller
     already holds it; uncapped, it is returned as it came."""
     if max_df_frac is not None:
@@ -343,7 +341,7 @@ def _capped_shingles(
             .select("sh")
         )
         sh = sh.join(keep, "sh")
-    return sh if sh is shingles_df else _stationary(sh)[0]
+    return sh if sh is shingles_df else _checkpoint(sh, lazy=True)[0]
 
 
 def _cooccurrence_counts(sh: DataFrame) -> DataFrame:
@@ -456,9 +454,8 @@ def duplicated_ngram_stats(
     COUNT, never the join output). The final per-doc aggregate is the
     only other shuffle.
     """
-    sh, _ = _stationary(
-        shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
-    )
+    sh = shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
+    sh, _ = _checkpoint(sh, lazy=True)
     dfc = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
     return (
         sh.join(dfc, "sh")
@@ -715,9 +712,8 @@ def simhash_near_duplicates_banded(
     ``max_bucket`` enables the hot-bucket guard (see
     :func:`simhash_band_pairs`); leave None for the exact contract."""
     # one row per doc; referenced max_hamming+1 times
-    fps, _ = _stationary(
-        simhash_fingerprints(docs, id_col=id_col, text_col=text_col, bits=bits)
-    )
+    fps = simhash_fingerprints(docs, id_col=id_col, text_col=text_col, bits=bits)
+    fps, _ = _checkpoint(fps, lazy=True)
     cand = simhash_band_pairs(
         fps, bits=bits, max_hamming=max_hamming, max_bucket=max_bucket
     )
@@ -832,9 +828,10 @@ def embedding_near_duplicates_lsh(
     base = emb.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"))
     # held: the self-join references it on both sides — without this
     # the signature UDF and scan run twice
-    banded, _ = _stationary(
-        base.select("doc_id", F.posexplode(signatures(F.col("v"))).alias("tbl", "sig"))
+    banded = base.select(
+        "doc_id", F.posexplode(signatures(F.col("v"))).alias("tbl", "sig")
     )
+    banded, _ = _checkpoint(banded, lazy=True)
     if max_bucket is not None:
         # hot-bucket guard: occupancy is one map-side-partial aggregate
         # over the already-held banded frame; oversize buckets are
@@ -913,11 +910,10 @@ def embedding_near_duplicates_ivf(
         )
     )
     # held: referenced on both sides of the self-join
-    assigned, _ = _stationary(
-        assign_clusters(emb, cent, vec_col=vec_col).select(
-            F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"), "cluster_id"
-        )
+    assigned = assign_clusters(emb, cent, vec_col=vec_col).select(
+        F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"), "cluster_id"
     )
+    assigned, _ = _checkpoint(assigned, lazy=True)
     pair_scores = pair_scores_udf()
 
     x, y = assigned.alias("x"), assigned.alias("y")
@@ -1072,7 +1068,8 @@ def semdedup(
         F.round(F.col("csim"), 12).asc(), F.col("doc_id").asc()
     )
     # held: the prune self-join references it on both sides
-    ranked, _ = _stationary(assigned.withColumn("rank", F.row_number().over(w)))
+    ranked = assigned.withColumn("rank", F.row_number().over(w))
+    ranked, _ = _checkpoint(ranked, lazy=True)
     pair_scores = pair_scores_udf()
     x, y = ranked.alias("x"), ranked.alias("y")
     pruned = (
@@ -1392,9 +1389,8 @@ def winnowing_near_duplicates(
     """
     if max_df_frac is not None:
         max_df = max(max_df, int(max_df_frac * docs.count()))
-    fp, _ = _stationary(
-        winnowing_fingerprints(docs, id_col=id_col, text_col=text_col, k=k, w=w)
-    )
+    fp = winnowing_fingerprints(docs, id_col=id_col, text_col=text_col, k=k, w=w)
+    fp, _ = _checkpoint(fp, lazy=True)
     sizes = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
     dfreq = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
     rare = fp.join(
@@ -1523,12 +1519,11 @@ def exact_substring_rewrite(
     # aggregate and the cuts join consume it — recomputed, the per-char
     # explode + 10M md5s run twice (guide §5: reused AND expensive;
     # A/B with a cache: -> 1.13 s total).
-    grams, _ = _stationary(
-        d.select(
-            "doc_id", F.explode(positions).alias("p"),
-            F.unhex(F.md5(F.expr(f"substring(_t, p, {k})"))).alias("g"),
-        )
+    grams = d.select(
+        "doc_id", F.explode(positions).alias("p"),
+        F.unhex(F.md5(F.expr(f"substring(_t, p, {k})"))).alias("g"),
     )
+    grams, _ = _checkpoint(grams, lazy=True)
     # cross-document duplicated grams + their canonical (minimum) doc:
     # min != max over doc ids IS the "occurs in >= 2 docs" predicate
     dupg = (
@@ -1641,11 +1636,10 @@ def ppjoin_pairs(
     the candidate set cannot shrink below the answer and ppjoin's
     df-join + prefix window + verify re-join are pure overhead.
     """
-    sh = shingles_df
-    if sh is None:
-        sh, _ = _stationary(
-            shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
-        )
+    sh = _shingles(
+        docs, shingles_df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
+    )
+    sh = sh if sh is shingles_df else _checkpoint(sh, lazy=True)[0]
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
     wpos = Window.partitionBy("doc_id").orderBy("_df", "sh")
     wdoc = Window.partitionBy("doc_id")
@@ -1784,15 +1778,14 @@ def similar_pairs_auto(
     the two arms' outputs coincide wherever the cap does not bind.
 
     The dominant shingle explode and the corpus count are computed ONCE
-    (the shingles held by
-    :func:`~project_cortex_spark.operators.graph._stationary`) and
+    (the shingles held as a lazy
+    :func:`~project_cortex_spark.operators.graph._checkpoint`) and
     threaded into both the decision and the chosen arm —
     the dispatch adds one df aggregate over the shared frame, nothing
     else."""
     n_docs = docs.count()
-    sh, _ = _stationary(
-        shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
-    )
+    sh = shingle_frame(docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n)
+    sh, _ = _checkpoint(sh, lazy=True)
     choice = similar_pairs_choice(
         docs,
         id_col=id_col,

@@ -83,11 +83,16 @@ def _checkpoint(df: DataFrame, *, lazy: bool = False, **observe) -> tuple:
 
 def _stationary(df: DataFrame, **observe) -> tuple:
     """The one placement rule for a frame that every round of a loop,
-    or two or more consumers, read: spread it over exactly
-    ``spark.sql.shuffle.partitions`` partitions by a hash of all its
-    columns, then hold it with :func:`_checkpoint` — eagerly, returning
-    the observation, when ``observe`` names aggregates; lazily, with
-    observation None, otherwise.
+    or two or more consumers, read, and whose scan feeds a broadcast
+    join (the graph edge frames the node-sized frames are broadcast
+    against): spread it over exactly ``spark.sql.shuffle.partitions``
+    partitions by a hash of all its columns, then hold it with
+    :func:`_checkpoint` — eagerly, returning the observation, when
+    ``observe`` names aggregates; lazily, with observation None,
+    otherwise. A re-read frame whose every consumer is a shuffle join
+    or an aggregate is held by ``_checkpoint(df, lazy=True)`` instead:
+    its consumers re-exchange it, so a spread would only add a shuffle
+    (measured on minhash and the embedding LSH: one more job per call).
 
     The count is explicit because AQE coalesces an implicit one: 3,000
     rows held as ``repartition("src").localCheckpoint(eager=False)`` read
@@ -842,7 +847,7 @@ def triangles_per_node(edges: DataFrame) -> DataFrame:
     cap bounds. Each triangle explodes to its 3 corners before the final
     count aggregate (map-side partial). The edge list feeds THREE join
     inputs shuffled on three different keys — no exchange reuse is
-    possible — so it is held by :func:`_stationary` rather than
+    possible — so it is held by a lazy :func:`_checkpoint` rather than
     recomputed per input: the first job that reads it (the wedge
     estimate below) stores it, and its blocks go with the frame.
 
@@ -855,7 +860,7 @@ def triangles_per_node(edges: DataFrame) -> DataFrame:
     ~5M rows/partition when that exceeds the session default — cheap
     insurance rather than relying on cluster AQE split heuristics.
     """
-    edges, _ = _stationary(edges.select("a", "b"))
+    edges, _ = _checkpoint(edges.select("a", "b"), lazy=True)
     e1 = edges.select(F.col("a").alias("ta"), F.col("b").alias("tb"))
     e2 = edges.select(F.col("a").alias("tb"), F.col("b").alias("tc"))
     wedges = e1.join(e2, "tb")
@@ -1135,11 +1140,11 @@ def node_similarity(edges: DataFrame, *, k: int = 50) -> DataFrame:
     broadcast-degree join, and a TakeOrderedAndProject top-k. Exact
     (the common/union arithmetic is integers until the final division).
     """
-    adj, _ = _stationary(
-        edges.select(F.col("a").alias("node"), F.col("b").alias("nbr")).union(
-            edges.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-        )
+    adj = edges.select(F.col("a").alias("node"), F.col("b").alias("nbr")).union(
+        edges.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
+    # read by the degree aggregate and both wedge sides, all shuffles
+    adj, _ = _checkpoint(adj, lazy=True)
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     x = adj.select(F.col("node").alias("pa"), F.col("nbr").alias("via"))
     y = adj.select(F.col("node").alias("pb"), F.col("nbr").alias("via"))
@@ -1288,15 +1293,17 @@ def connected_components(
     distinct() bounds the frame at the surviving edge count. The rounds
     run on :func:`_iterate`, like duplicate_clusters' label propagation:
     convergence = the canonical (child, root) edge set is unchanged,
-    read from the fingerprint each round's checkpoint job observes. The
-    node set and the edge list come from the :func:`_undirected`
-    prologue, as they do for duplicate_clusters.
+    read from the fingerprint each round's checkpoint job observes.
     """
-    e, nodes, _ = _undirected(pairs.filter(F.col(a) != F.col(b)), a, b)
-    # canonical undirected form (max side = star center)
-    edges = e.select(
-        F.greatest("src", "dst").alias("x"), F.least("src", "dst").alias("y")
-    ).distinct()
+    # canonical undirected form (max side = star center), held once:
+    # the rounds start from it and the node set is read off it. The
+    # degenerate-pair filter runs first, so an equal or NULL pair adds
+    # no node.
+    edges = pairs.filter(F.col(a) != F.col(b)).select(
+        F.greatest(a, b).alias("x"), F.least(a, b).alias("y")
+    )
+    edges, _ = _checkpoint(edges.distinct(), lazy=True)
+    nodes = edges.select(F.explode(F.array("x", "y")).alias("node")).distinct()
 
     def _large_star(e: DataFrame) -> DataFrame:
         # symmetric view; for each center u: m = min(N(u) + {u}),
@@ -1393,10 +1400,12 @@ def _closed_walks(
     level to one row per (origin, node); columns after (origin, node)
     ride into the closed rows. Closed origins and, off the functional
     path, already-visited pairs are anti-joined out of the frontier.
-    The levels run on :func:`_iterate`'s fixed-round lazy loop: its
-    state is the newest level, tagged ``_lvl``, plus, off the functional
-    path, every earlier level — the visited set — so each level is
-    checkpointed once."""
+    The levels run on :func:`_iterate`'s fixed-round lazy loop, whose
+    state is the newest level, so each level is checkpointed once. Off
+    the functional path the visited set is one running union of the
+    held levels' (origin, node) pairs, as in :func:`_frontier_levels`:
+    it holds nothing of its own, and no level's scan reads an earlier
+    level's rows."""
     max_len = _clamp_depth(max_len)
     # Hold the (possibly expensively derived) edge frame ONCE: every
     # level joins it, and without the cut a window-derived edge set
@@ -1413,40 +1422,34 @@ def _closed_walks(
     # with out-degree 1 the rows are already unique per (origin, node),
     # so the collapsing exchange is skipped
     merge = (lambda f: f) if functional else collapse
-    out = []
-
-    def level(state: DataFrame, lvl: int) -> DataFrame:
-        # the state holds level `lvl`'s rows, tagged `_lvl`, and, off
-        # the functional path, every earlier level's
-        return state.filter(F.col("_lvl") == lvl).drop("_lvl")
+    out, visited = [], None
 
     def closed(frontier: DataFrame, lvl: int) -> DataFrame:
         return frontier.filter(F.col("node") == F.col("origin")).select(
             "origin", F.lit(lvl).alias("cycle_len"), *frontier.columns[2:]
         )
 
-    def advance(state: DataFrame, _) -> DataFrame:
+    def advance(frontier: DataFrame, _) -> DataFrame:
+        nonlocal visited
         lvl = len(out) + 1
-        frontier = level(state, lvl)
         out.append(closed(frontier, lvl))
         # drop origins that just closed (their min is recorded; a
         # self-loop origin's other out-edges must not keep it
-        # expanding) and pairs already reached at an earlier (shorter)
-        # level; on the functional path there is exactly one walk per
-        # origin, so the visited anti-join cannot shrink the frontier
-        # bound and is skipped along with keeping the earlier levels
+        # expanding)
         live = frontier.filter(F.col("node") != F.col("origin")).join(
             out[-1].select("origin"), "origin", "left_anti"
         )
-        if not functional:
-            live = live.join(
-                state.filter(F.col("_lvl") < lvl).select("origin", "node"),
-                ["origin", "node"],
-                "left_anti",
-            )
         nxt = merge(live.join(e, live["node"] == e["_s"]).select(*extend))
-        nxt = nxt.withColumn("_lvl", F.lit(lvl + 1))
-        return nxt if functional else state.unionByName(nxt)
+        if functional:
+            # exactly one walk per origin: the visited anti-join cannot
+            # shrink the frontier bound, so there is no visited set
+            return nxt
+        # the next level drops the pairs already reached at this or an
+        # earlier (shorter) level; the pairs of closed origins the set
+        # keeps are never reached again
+        keyed = frontier.select("origin", "node")
+        visited = keyed if visited is None else visited.unionByName(keyed)
+        return nxt.join(visited, ["origin", "node"], "left_anti")
 
     # level 1: every edge is a 1-walk; a self-loop closes immediately.
     # Each level is checkpointed BEFORE it is split into closed /
@@ -1455,12 +1458,9 @@ def _closed_walks(
     # the result is consumed (guide §2.4, duplicated subtrees are
     # hidden re-shuffles)
     last, _ = _iterate(
-        merge(e.select(*walk)).withColumn("_lvl", F.lit(1)),
-        advance,
-        max_rounds=max_len - 1,
-        lazy=True,
+        merge(e.select(*walk)), advance, max_rounds=max_len - 1, lazy=True
     )
-    out.append(closed(level(last, max_len), max_len))
+    out.append(closed(last, max_len))
     return _union_all(out)
 
 
@@ -1836,15 +1836,15 @@ def strongly_connected_components(
     """
     # the node set is every endpoint of an edge without a NULL endpoint
     # (self-loops included), with |V| observed for the broadcast switch
-    _, nodes, obs = _undirected(edges, src, dst)
+    one = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).dropna()
+    nodes, obs = _checkpoint(
+        one.select(F.explode(F.array("s", "d")).alias("node")).distinct()
+    )
     bcast = _bcast(obs["n"])
     # every edge frame a label fixpoint reads is held by _stationary;
     # asking for n makes it eager, for the squaring's growth cap
     live_edges = _stationary(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col("s") != F.col("d"))
-        .distinct(),
-        n=F.count(F.lit(1)),
+        one.filter(F.col("s") != F.col("d")).distinct(), n=F.count(F.lit(1))
     )
 
     def _densify(e: DataFrame, base: int) -> DataFrame:

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import char_ngrams, estimate_llm_tokens, tokens
 from .dedup import ensure_parallelism
-from .graph import _stationary
+from .graph import _checkpoint
 
 # Marker stopwords per language: deliberately small, pinned lists (the
 # language-ID heuristic is n-gram/marker based, not a trained model).
@@ -446,8 +446,8 @@ def bigram_lm_score(
     avg_logprob) where avg_logprob = round(avg ln P, 6), 0.0 for docs
     with fewer than two tokens.
 
-    Scale: bigram explode (held once by
-    :func:`~project_cortex_spark.operators.graph._stationary` — it
+    Scale: bigram explode (held once, a lazy
+    :func:`~project_cortex_spark.operators.graph._checkpoint` — it
     feeds the count aggregate AND the scoring join) → one hash
     aggregate for c(w1,w2) (map-side partials), a second over w1 for
     c(w1,·), V as a 1-row broadcast.
@@ -462,7 +462,8 @@ def bigram_lm_score(
     bigrams) to shrink the join's build side by ~half with no visible
     score shift.
     """
-    bg, _ = _stationary(_bigram_frame(docs, id_col=id_col, text_col=text_col))
+    bg = _bigram_frame(docs, id_col=id_col, text_col=text_col)
+    bg, _ = _checkpoint(bg, lazy=True)
     pair_counts = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     prefix_counts = pair_counts.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = (

@@ -35,7 +35,7 @@ PICKS = {
     "corpus_importance_sample": "quality-weighted sampling: zero Exchange — md5-bucket filter at scan bandwidth",
     "events_funnel": "3-step funnel: ONE shuffle (groupBy user) + JVM higher-order fold over sorted per-user arrays — no self-joins",
     "search_lexical_recall": "retrieval contract: broadcast query side vs corpus scan, map-side partial window top-1",
-    "graph_triangles": "wedge closure: the edge list, spread over the shuffle partitions and lazily checkpointed once (graph._stationary), feeds three join inputs; the wedge frame (quadratic in degree, not linear in edges) is repartitioned to ~5M rows/partition from the EXACT wedge count when that exceeds the session default, and the closure join is SHUFFLE-HASH (edge list builds, wedges STREAM — a sort-merge plan would sort the wedge frame, the dominant cost at sf1)",
+    "graph_triangles": "wedge closure: the edge list, lazily checkpointed once (graph._checkpoint), feeds three join inputs; the wedge frame (quadratic in degree, not linear in edges) is repartitioned to ~5M rows/partition from the EXACT wedge count when that exceeds the session default, and the closure join is SHUFFLE-HASH (edge list builds, wedges STREAM — a sort-merge plan would sort the wedge frame, the dominant cost at sf1)",
     "graph_pagerank": "power iteration: plan shows only the final checkpointed RDD (the kernel's lazy localCheckpoint truncates lineage per step BY DESIGN — an un-truncated 5-step plan would be a 5-deep join tower); per step: |V|-row rank frame broadcast onto the stationary edges + one hash aggregate; N is observed by the node frame's eager checkpoint, no count job; the stationary edges are spread over the shuffle partitions once (graph._stationary)",
     "dedup_ngram_spans": "duplicated-span fraction: shingle-df join lands back on the SAME shuffle key, 1:1 fan-out (no hot-key blowup)",
     "graph_hotspots": "degree hotspots: ONE scan (edge pair exploded map-side, not a twice-derived Union), ONE aggregate exchange, TakeOrderedAndProject top-N",
@@ -89,13 +89,13 @@ PICKS = {
     "graph_connected_components": "large-star/small-star CC: each half-round is ONE window over the edge frame's own shuffle key (no agg+join), frame CONTRACTS per round, lineage cut per round; converges in O(log^2 n) rounds on any topology (chain A/B in SCALE.md); the convergence fingerprint is observed by each round's checkpoint job, not a separate aggregate",
     "corpus_cluster_balance": "topic balancing: bounded-sample trainer, Arrow-batched argmax assignment (tiny centroid matrix in the UDF closure), ONE window shuffle on cluster_id for the quota",
     "graph_cycle_paths": "cycle paths: same level-synchronous BFS shape as cycle_members with distinct() replaced by a min(path) aggregate on the frontier's own (origin, node) key — per level one join + one aggregate, rows widened only by a <= max_len-id string; plan shows the final checkpointed level (lineage cut per level by design)",
-    "dedup_pairs_auto": "cost-based pair-join dispatch: the df-histogram decision (one scan-shaped aggregate) runs at plan-build time; the physical plan IS the chosen arm's — on this corpus the fractional-cap co-occurrence join (kept-shingle semi-join, co-occurrence agg on the shingle key, size join) over ONE held shingle explode (graph._stationary) shared with the decision",
+    "dedup_pairs_auto": "cost-based pair-join dispatch: the df-histogram decision (one scan-shaped aggregate) runs at plan-build time; the physical plan IS the chosen arm's — on this corpus the fractional-cap co-occurrence join (kept-shingle semi-join, co-occurrence agg on the shingle key, size join) over ONE held shingle explode (a lazy graph._checkpoint) shared with the decision",
     "dedup_containment": "directed containment: the SAME capped co-occurrence core as the jaccard join (shared _cooccurrence_counts), both directions projected from one unordered pair row — the directed answer adds a 2x projection, never a second shuffle",
     "graph_ppr": "personalized pagerank: pagerank's stationary-edge/broadcast-rank shape with a static |V|-row teleport frame left-joined per step; plan shows the final checkpointed step (lineage cut per step by design)",
     "events_ks_drift": "exact two-sample KS: one bounds aggregate broadcast back, the (group, value) cells monoid (r9 — the streaming state form; the only data-sized exchange, map-side partial), then the RANGE-frame ECDF window over CELLS not rows",
     "events_psi_drift": "PSI drift: bucket index is pure per-row arithmetic off a broadcast bounds row — one count aggregate on (group, bucket, side) (the r9 streaming monoid), then a k-rows-per-group fold; nothing after the scan is data-sized",
     "corpus_cluster_split": "leakage-safe split: near-dup cluster frame (small) broadcast-left-joined onto the corpus ids, split = per-row hash CASE on the representative — no extra shuffle vs the per-doc split",
-    "dedup_semantic": "SemDeDup decision frame: Arrow assign UDF, salt from a count-over-cluster window, rank window on (cluster, salt), prune self-join keyed on (cluster, salt) over the HELD ranked frame (spread and lazily checkpointed by graph._stationary) — bounded pairs by the salt cap, never a cross product",
+    "dedup_semantic": "SemDeDup decision frame: Arrow assign UDF, salt from a count-over-cluster window, rank window on (cluster, salt), prune self-join keyed on (cluster, salt) over the HELD ranked frame (lazily checkpointed by graph._checkpoint) — bounded pairs by the salt cap, never a cross product",
     "dsl_window_topn": "DSL windows clause: two rank functions sharing the o_custkey partition fuse into consecutive Window nodes over ONE Exchange; qualify (rn <= 3) filters before the projection — top-N per group at one shuffle, no self-join",
     "dsl_window_running": "DSL running/offset functions: RUNNING_SUM + LAG + LEAD over the same (p_brand, p_partkey) spec share one Exchange+Sort; default cumulative frame (RANGE..CURRENT ROW) — the oracle-replayable tie behavior",
     "events_cusum": "CUSUM change-point: one bucket count aggregate, group-window power sums (exact ints), collect_list + seed-0 aggregate fold per row — the 'stateful' detector as pure expressions, no Python in the loop",

@@ -777,19 +777,19 @@ def test_dedup_operators_leave_no_cached_frame(spark, registry):
         assert _cached_rdd_ids(spark) - before == set(), columns
 
 
-def test_held_frames_read_every_shuffle_partition(spark, registry, monkeypatch):
+def test_held_frames_read_every_shuffle_partition(spark, monkeypatch):
     """Every frame an operator spreads and holds for re-reading reads
     exactly ``spark.sql.shuffle.partitions`` partitions after the call:
     AQE coalesces a repartition without an explicit count (a small
     ``repartition("src")`` checkpoint reads 1), and the tasks that scan
     a held frame are the ones that produce its joins' fan-out. The test
     records every frame checkpointed straight from a repartition (under
-    an observation, for the eager form)."""
-    from project_cortex_spark.operators.dedup import minhash_near_duplicates
+    an observation, for the eager form of SCC's live edges)."""
     from project_cortex_spark.operators.graph import (
         betweenness_centrality,
         communities_lpa,
         pagerank,
+        strongly_connected_components,
     )
 
     c1 = [(a, b) for a in range(1, 9) for b in range(1, 9) if a < b]
@@ -814,9 +814,7 @@ def test_held_frames_read_every_shuffle_partition(spark, registry, monkeypatch):
         "pagerank": lambda: pagerank(edges, iters=3, broadcast_ranks=False),
         "lpa": lambda: communities_lpa(edges, rounds=3, broadcast_labels=False),
         "betweenness": lambda: betweenness_centrality(edges, seed_mod=1),
-        "minhash": lambda: minhash_near_duplicates(
-            registry.table("documents"), threshold=0.5
-        ),
+        "scc": lambda: strongly_connected_components(edges, src="a", dst="b"),
     }
     for name, call in calls.items():
         held.clear()
